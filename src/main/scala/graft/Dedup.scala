@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.Fns
-import graft.operators.{ConnectedComponents, ExactSubstr, Lsh}
+import graft.operators.{ConnectedComponents, ExactSubstr, Lsh, PairPlan}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -14,124 +14,45 @@ import org.apache.spark.storage.StorageLevel
  */
 object Dedup {
 
-  /** The lazy verified-pair plan plus the intermediate localCheckpoints
-    * backing it (for block lifecycle). EAGER up to the candidate counts
-    * (one union action materializes all three families — their stages
-    * overlap across the executor pool; the counts gate the broadcast
-    * semi-restriction of the verify joins); the final verify+union plan is
-    * returned lazy so callers (and PlanSpec) can see/extend it. */
-  private[graft] def dupPairsPlan(docs: DataFrame, cfg: DedupConfig)
-      : (DataFrame, Seq[DataFrame]) = {
-    // Job-phase labels (free: a thread-local property) — ScalingBench's
-    // phase listener attributes wall and Σ-task-time per labeled job, the
-    // instrument that pins WHICH term stops scaling 8→32 (VERDICT_r5 #3).
-    val sc = docs.sparkSession.sparkContext
-    // restore the CALLER's description afterwards instead of clobbering
-    // it with null (ADVICE_r6: a caller-set label leaked away here)
-    val prevDesc = sc.getLocalProperty("spark.job.description")
+  /** The facade's pair plan: ONE projection over the cached docs computes
+    * BOTH per-doc fingerprints — shingles and simhash — into a single
+    * cached table that feeds banding AND both verify joins (splitting the
+    * families into independent `minhashDupPairs`/`simhashDupPairs` calls,
+    * the pre-r3 shape, ran the text-processing pass once per family); the
+    * rest is `PairPlan.allVsAll` with the substring leg. EAGER up to the
+    * candidate counts; the verify+union plan stays lazy so callers (and
+    * PlanSpec) can see/extend it. The d/fp/band-key checkpoints are LAZY:
+    * the listing barrier and the substring thread materialize them. */
+  private[graft] def dupPairsPlan(docs: DataFrame, cfg: DedupConfig): PairPlan.Plan = {
+    def ckpt(df: DataFrame) = df.localCheckpoint(false, StorageLevel.MEMORY_AND_DISK_SER)
     // spread a single-file scan across the pool before checkpointing —
     // the fp fingerprint pass, gram index and byte census below otherwise
     // all run single-task (Lsh.spreadInput: partition-count-gated, output-
     // invariant)
-    val d = Lsh.spreadInput(docs).localCheckpoint(false, StorageLevel.MEMORY_AND_DISK_SER)
-    // ONE projection over the cached docs computes BOTH per-doc
-    // fingerprints — shingles and simhash — into a single cached table
-    // that feeds banding AND both verify joins. Splitting the families
-    // into independent `minhashDupPairs`/`simhashDupPairs` calls (the
-    // pre-r3 shape) ran the text-processing pass once per family.
-    // NOTE: d/fp checkpoints are LAZY — jobs under this label are the
-    // listing builders' eager sub-actions (substr byte/shard census, hot
-    // censuses, checkpoint materializations they trigger)
-    sc.setJobDescription("graft:listing-prep")
-    val fp = d.select(col("doc_id"),
-        Fns.shingleHashes(col("text"), cfg).as("shingles"),
-        Fns.simhash64(col("text"), cfg).as("simhash"))
-      .localCheckpoint(false, StorageLevel.MEMORY_AND_DISK_SER)
+    val d = ckpt(Lsh.spreadInput(docs))
+    val fp = ckpt(d.select(col("doc_id"),
+      Fns.shingleHashes(col("text"), cfg).as("shingles"),
+      Fns.simhash64(col("text"), cfg).as("simhash")))
     val shingled = fp.select("doc_id", "shingles")
     val simhashes = fp.select("doc_id", "simhash")
-    // The substring family runs on its OWN action thread (guide §2.6,
-    // VERDICT_r6 #3's overlap discipline extended upstream): its eager
-    // byte census (shard sizing) + SA shard scan + gram census have no
-    // dependency on the banding chains, and as serial driver actions they
-    // idled the pool between the banding stages (measured: the facade's
-    // pre-barrier leg ran totalTextBytes -> famCounts back-to-back; the
-    // split overlaps the whole substr chain with the mh/sh listing
-    // materialization — same outputs, the jobs just share the scheduler).
-    // Job descriptions are thread-local, so the phase listener still
-    // attributes each leg correctly. Concurrent first-materialization of
-    // the shared lazy `d` checkpoint is block-manager-safe (one task
-    // computes a partition, the other waits on the block lock).
-    val subFut = scala.concurrent.Future {
-      sc.setJobDescription("graft:listing-substr")
-      val subC = ExactSubstr.substrDupPairs(d, cfg)
-        .localCheckpoint(false, StorageLevel.MEMORY_AND_DISK_SER)
-      val n = subC.count()
-      sc.setJobDescription(null)
-      (subC, n)
-    }(scala.concurrent.ExecutionContext.global)
-    // MinHash listing splits: cold candidates (downstream-verified) + hot
-    // lanes resolved IN-TASK by the exact-Jaccard verified forest
-    // (Lsh.jaccardLaneVerifiedPairs — clusters identical to the uncapped
-    // enumeration, unlike the unverified hub stars this replaced)
-    val (mhCands, mhHot) = Lsh.minhashListing(
-      Lsh.saltBandKeys(
-        Lsh.minhashBandKeys(Lsh.signatures(shingled, cfg), cfg), cfg),
-      shingled, cfg)
-    val mhc = mhCands.localCheckpoint(false, StorageLevel.MEMORY_AND_DISK_SER)
-    val mhHotC = mhHot.localCheckpoint(false, StorageLevel.MEMORY_AND_DISK_SER)
-    // SimHash pair listing runs the in-task verified-forest cap (see
-    // Lsh.hammingCappedPairs — clusters identical to uncapped); with
-    // salting disabled the join listing runs instead (task-memory bound)
-    val shc = Lsh.simhashCandidatePairs(
-        Lsh.saltBandKeys(
-          Lsh.simhashBandKeys(simhashes, cfg, carryHash = true), cfg), cfg)
-      .localCheckpoint(false, StorageLevel.MEMORY_AND_DISK_SER)
-    // ONE union action materializes the banding-side candidate checkpoints
-    // while the substr thread runs (serial counts measurably serialized
-    // the families). The counts gate the broadcast semi-restriction: in
-    // the normal web regime (candidates ≪ corpus) the heavy shingle
-    // arrays shuffle only for candidate docs — same discipline as
-    // DedupMain's staged path, output-preserving.
-    sc.setJobDescription("graft:listings-famcounts-barrier")
-    val famCounts = mhc.select(lit("mh").as("fam"))
-      .unionByName(mhHotC.select(lit("mhv").as("fam")))
-      .unionByName(shc.select(lit("sh").as("fam")))
-      .groupBy("fam").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    sc.setJobDescription(prevDesc)
-    val (sub, _) = scala.concurrent.Await.result(
-      subFut, scala.concurrent.duration.Duration.Inf)
-    val (nMh, nSh) = (famCounts.getOrElse("mh", 0L), famCounts.getOrElse("sh", 0L))
-    // hot-lane edges are already exact-verified in-task — only the cold
-    // candidates go through the verify join
-    val mh = Lsh.verifyJaccard(
-        mhc, Lsh.restrictToCandidateDocs(shingled, mhc, 2 * nMh), cfg)
-      .unionByName(mhHotC)
-    val sh = Lsh.verifyHamming(
-      shc, Lsh.restrictToCandidateDocs(simhashes, shc, 2 * nSh), cfg)
-    (Lsh.dupPairs(mh, sh, sub), Seq(d, fp, mhc, mhHotC, shc, sub))
+    val mhKeys = ckpt(Lsh.minhashBandKeys(Lsh.signatures(shingled, cfg), cfg))
+    val shKeys = ckpt(Lsh.simhashBandKeys(simhashes, cfg, carryHash = true))
+    val plan = PairPlan.allVsAll(mhKeys, shKeys, shingled, simhashes, cfg,
+      Some(ExactSubstr.substrDupPairs(d, cfg, None, _)))
+    plan.copy(checkpoints = Seq(d, fp, mhKeys, shKeys) ++ plan.checkpoints)
   }
 
   /** Family-tagged verified duplicate pairs (a, b, family).
     *
-    * EAGER: materializes the (small) pair table, then releases the five
+    * EAGER: materializes the (small) pair table, then releases the
     * intermediate block sets — repeated facade calls in one session (bench
     * loops, notebooks) otherwise pile up executor storage until eviction,
     * the block-pressure class the CC round lifecycle already fixed. The
     * returned checkpoint depends on nothing unpersisted here. */
   def dupPairs(docs: DataFrame, cfg: DedupConfig = DedupConfig.test): DataFrame = {
-    val (pairs, intermediates) = dupPairsPlan(docs, cfg)
-    val sc = docs.sparkSession.sparkContext
-    val prevDesc = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription("graft:verify-union-ckpt")
-    val out =
-      try pairs.localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
-      finally sc.setJobDescription(prevDesc)
-    intermediates.foreach { df =>
-      df.queryExecution.analyzed.collectFirst {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }.foreach(_.unpersist(blocking = false))
-    }
+    val plan = dupPairsPlan(docs, cfg)
+    val out = plan.materialize(_.localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER))
+    plan.release()
     out
   }
 

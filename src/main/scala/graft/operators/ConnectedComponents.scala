@@ -65,23 +65,6 @@ object ConnectedComponents {
     * lineage can't recompute). SURVEY §4.3 discipline. */
   private val ReliableCheckpointEvery = 5
 
-  /**
-   * G1–G4: dup pairs (a, b) → component assignment (doc_id, cluster_id),
-   * cluster_id = min doc_id of the component. Only nodes that appear in at
-   * least one pair are emitted (singletons are not duplicates).
-   */
-  /** The RDD a checkpointed Dataset wraps (its analyzed plan is a
-    * LogicalRDD) — the handle whose blocks the round lifecycle below
-    * unpersists. Tracking the handle directly keeps the lifecycle scoped to
-    * THIS iteration's own checkpoints: diffing the session-global
-    * persistent-RDD registry (the pre-r3 approach) captured — and
-    * unpersisted mid-flight — RDDs persisted by any concurrent job in the
-    * same session (e.g. the streaming foreachBatch bridge). */
-  private def checkpointedRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-    df.queryExecution.analyzed.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }
-
   /** Edge-count gate for the single-task fast path: 4M edges ≈ 200 MB of
     * transient primitive arrays in ONE task — the same per-task working-set
     * budget the suffix-array shards run at (`ExactSubstr.TargetShardBytes`
@@ -113,6 +96,11 @@ object ConnectedComponents {
     budget / BytesPerEdge
   }
 
+  /**
+   * G1–G4: dup pairs (a, b) → component assignment (doc_id, cluster_id),
+   * cluster_id = min doc_id of the component. Only nodes that appear in at
+   * least one pair are emitted (singletons are not duplicates).
+   */
   def assign(pairs: DataFrame, maxRoundsHint: Option[Int] = None,
              smallGraphMaxEdges: Long = SmallGraphMaxEdges): DataFrame = {
     val sc = pairs.sparkSession.sparkContext
@@ -126,7 +114,6 @@ object ConnectedComponents {
       .where(col("src") =!= col("dst"))
       .distinct()
       .localCheckpoint()
-    var prevRdd = checkpointedRdd(edges)
 
     var (prevN, prevH) = fingerprint(edges)
     // Strategy switch, AQE-style (the `restrictToCandidateDocs` pattern):
@@ -162,8 +149,8 @@ object ConnectedComponents {
         else stepped.localCheckpoint(false)
       val (n, h) = fingerprint(next)
       // the successor is materialized — the previous round's blocks are dead
-      prevRdd.foreach(_.unpersist(blocking = false))
-      prevRdd = checkpointedRdd(next)
+      // (released by handle, scoped to THIS iteration's own checkpoints)
+      LocalCheckpoints.release(edges)
       converged = n == prevN && h == prevH
       prevN = n; prevH = h
       edges = next

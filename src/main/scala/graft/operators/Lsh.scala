@@ -420,10 +420,10 @@ object Lsh {
       .groupBy("a", "b").agg(count(lit(1)).as("band_hits"))
   }
 
-  /** Incremental new×all listing — the shared machinery of the streaming
-    * foreachBatch bridge AND DedupMain's day-append path. Inputs are
-    * (doc_id, key) band-key tables; the union is new ∪ old at every call
-    * site (derived here with a side tag). Returns:
+  /** Incremental new×all listing — the front-end of `PairPlan.newVsAll`
+    * (the streaming foreachBatch bridge AND DedupMain's day append). Inputs
+    * are (doc_id, key) band-key tables; the union is new ∪ old at every
+    * call site (derived here with a side tag). Returns:
     *
     *  - **cold candidates** (buckets ≤ cap members): the exact
     *    new×(old∪new) candidate listing, PRE-distinct (multi-band
@@ -682,9 +682,9 @@ object Lsh {
     * several families union into one job their stages overlap across the
     * executor pool (an eager count here measurably serialized the families
     * at 240k docs). The count-gated broadcast semi-restriction of the
-    * verify join lives in `DedupMain` (stage row counts are free there);
-    * at 10^12 docs the reuse comes from its durable stage materialization
-    * rather than executor block cache. */
+    * verify join lives in `PairPlan` (its union-count barrier yields the
+    * counts); at 10^12 docs the reuse comes from DedupMain's durable stage
+    * materialization rather than executor block cache. */
   def minhashDupPairs(docs: DataFrame, cfg: DedupConfig): DataFrame = {
     val ser = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
     val sh = shingled(spreadInput(docs), cfg).localCheckpoint(false, ser)

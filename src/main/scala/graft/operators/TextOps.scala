@@ -614,18 +614,6 @@ object TextOps {
           .as("passes"))
   }
 
-  /** Distinct word n-grams of a text column (empty array below n tokens)
-    * — the contamination unit ([Lee22]-style decontamination uses n-gram
-    * overlap against evaluation sets). */
-  def wordNgrams(text: Column, n: Int): Column = {
-    val toks = tokens(text)
-    array_distinct(
-      when(size(toks) >= n,
-        transform(sequence(lit(0), size(toks) - n),
-          i => array_join(slice(toks, i + 1, lit(n)), " ")))
-      .otherwise(array().cast("array<string>")))
-  }
-
   /** Benchmark decontamination: every (corpus doc, benchmark item) pair
     * sharing ≥ `minShared` distinct word `n`-grams — the table a training
     * pipeline drops or flags before training so eval data never leaks in.

@@ -2,7 +2,7 @@ package graft.run
 
 import graft.DedupConfig
 import graft.functions.Fns
-import graft.operators.{ConnectedComponents, ExactSubstr, Lsh}
+import graft.operators.{ConnectedComponents, ExactSubstr, LocalCheckpoints, Lsh, PairPlan}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -205,15 +205,18 @@ object DedupMain {
     val dupKey = Checkpoint.stageKey(cfg, substrKey)
     val dupDir = s"$root/dup_pairs"
     val prevDup = Checkpoint.readManifest(spark, root, "dup_pairs")
-    val substrDropped = spark.sparkContext.longAccumulator("substr_starcap_dropped_pairs")
-    val simhashSuppressed = spark.sparkContext.longAccumulator("simhash_starcap_suppressed_pairs")
-    val minhashLaneSuppressed = spark.sparkContext.longAccumulator("minhash_lane_suppressed_pairs")
+    // the loud-cap counter sink of the full build (one slot per family)
+    val counters = PairPlan.Counters(
+      spark.sparkContext.longAccumulator("minhash_lane_suppressed_pairs"),
+      spark.sparkContext.longAccumulator("simhash_starcap_suppressed_pairs"),
+      spark.sparkContext.longAccumulator("substr_starcap_dropped_pairs"))
 
-    /** Full-corpus three-family build → LAZY (a, b, family) plan. Consumes
-      * the persisted raw band_keys stage (building it when absent), salts
-      * at listing time, and records the loud-cap drop estimates
-      * (Lsh.saltedDropEstimate contract). */
-    def buildAllPairs(): DataFrame = {
+    /** Full-corpus three-family build → `PairPlan.allVsAll` over the
+      * persisted raw band_keys stage (building it when absent; salted at
+      * listing time) and the doc_id-bucketed fingerprint stages, after
+      * recording the loud-cap drop estimates (Lsh.saltedDropEstimate
+      * contract). */
+    def buildAllPairs(): PairPlan.Plan = PairPlan.labelled(spark, PairPlan.ListingPrep) {
       // the band index is folded into `key` (Lsh.minhashBandKeys /
       // simhashBandKeys), so the bucket identity downstream is (key, salt).
       // fmt=2: the day-less stage now stores RAW keys (salt applied on
@@ -222,79 +225,27 @@ object DedupMain {
       val rawKeys = bandKeysDay.getOrElse(
         Checkpoint.stage(spark, root, "band_keys", cfg, runId,
           s"$inputKey;fmt=2")(rawBandKeys(signatures)))
+      def keys(fam: String) = rawKeys.where(col("family") === fam)
       Seq("minhash", "simhash").foreach { fam =>
         Metrics.append(spark, root, runId, s"salted_drop_est_$fam",
-          Lsh.saltedDropEstimate(rawKeys.where(col("family") === fam), cfg),
-          0L, resumed = false)
+          Lsh.saltedDropEstimate(keys(fam), cfg), 0L, resumed = false)
       }
-      val mhSalted = Lsh.saltBandKeys(
-        rawKeys.where(col("family") === "minhash").select("doc_id", "key"),
-        cfg, materialized = true)
-      // is_hot MUST survive into the listing: it keys the star-vs-clique
-      // discipline — dropping it would run the full self-join over hot salt
-      // lanes (quadratic boilerplate blowup) and diverge from the Dedup
-      // facade at the same configHash. (Absent only when salting is off.)
-      // Hot lanes come back ALREADY exact-verified (in-task Jaccard forest,
-      // joined against the doc_id-bucketed shingled stage).
-      val mhCols = Seq("doc_id", "key", "salt") ++
-        (if (mhSalted.columns.contains("is_hot")) Seq("is_hot") else Nil)
-      val (mhCands, mhHot) = Lsh.minhashListing(
-        mhSalted.select(mhCols.map(col): _*),
-        shingled.select("doc_id", "shingles"), cfg, Some(minhashLaneSuppressed))
-      val mhc = mhCands
-        .localCheckpoint(false, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-      val mhHotC = mhHot
-        .localCheckpoint(false, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-      // simhash pair listing runs the in-task verified-forest cap
-      // (Lsh.hammingCappedPairs — clusters identical to uncapped; join
-      // listing when salting is off); the suppressed-pair count is EXACT,
-      // recorded after the stage action
-      val shc = Lsh.simhashCandidatePairs(
-          Lsh.saltBandKeys(
-            rawKeys.where(col("family") === "simhash")
-              .select("doc_id", "key", "simhash"),
-            cfg, materialized = true)
-            .select("doc_id", "key", "salt", "simhash"),
-          cfg, Some(simhashSuppressed))
-        .localCheckpoint(false, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-      val sub = ExactSubstr.substrDupPairs(docs, cfg, Some(substrShards), Some(substrDropped))
-        .localCheckpoint(false, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-      // ONE action materializes both lazy candidate checkpoints AND the
-      // independent substring family: the union job runs all three
-      // families' stages over the shared executor pool concurrently
-      // (separate count() actions serialized them — observed stage-gap at
-      // 960k docs; the suffix-array scan has no dependency on the banding
-      // chains), and the per-family counts gate the broadcast
-      // semi-restriction below.
-      val famCounts = mhc.select(lit("mh").as("fam"))
-        .unionByName(mhHotC.select(lit("mhv").as("fam")))
-        .unionByName(shc.select(lit("sh").as("fam")))
-        .unionByName(sub.select(lit("sub").as("fam")))
-        .groupBy("fam").count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      val (nMh, nSh) = (famCounts.getOrElse("mh", 0L), famCounts.getOrElse("sh", 0L))
-      // hot-lane edges are already exact-verified in-task — only the cold
-      // candidates go through the verify join
-      val mh = Lsh.verifyJaccard(
-          mhc, Lsh.restrictToCandidateDocs(shingled, mhc, 2 * nMh), cfg)
-        .unionByName(mhHotC)
-      val sh = Lsh.verifyHamming(
-        shc, Lsh.restrictToCandidateDocs(
-          signatures.select("doc_id", "simhash"), shc, 2 * nSh), cfg)
-      Lsh.dupPairs(mh, sh, sub)
+      PairPlan.allVsAll(keys("minhash"), keys("simhash"), shingled,
+        signatures.select("doc_id", "simhash"), cfg,
+        Some(ExactSubstr.substrDupPairs(docs, cfg, Some(substrShards), _)), Some(counters))
     }
     def pairMetricsAfterBuild(): Unit = {
       Metrics.append(spark, root, runId, "substr_shards", substrShards.toLong, 0L, resumed = false)
       Metrics.append(spark, root, runId, "substr_starcap_dropped_pairs",
-        substrDropped.value, 0L, resumed = false)
+        counters.substr.value, 0L, resumed = false)
       // exact (task-counted) redundant-for-connectivity verified pairs the
       // simhash forest suppressed — loud cap, never silent
       Metrics.append(spark, root, runId, "simhash_starcap_suppressed_pairs",
-        simhashSuppressed.value, 0L, resumed = false)
+        counters.simhash.value, 0L, resumed = false)
       // minhash hot lanes: pairs skipped as already-connected through
       // verified edges (upper bound on redundant verified pairs) — loud
       Metrics.append(spark, root, runId, "minhash_lane_suppressed_pairs",
-        minhashLaneSuppressed.value, 0L, resumed = false)
+        counters.minhash.value, 0L, resumed = false)
     }
 
     val inDays: Seq[java.sql.Timestamp] =
@@ -307,9 +258,16 @@ object DedupMain {
       if (!dayGranular) {
         // day-less inputs keep the whole-stage gate: any input change
         // (docs_rows / shard count in the key) recomputes from scratch
-        val resumed = prevDup.exists(_.configHash == dupKey)
-        val out = Checkpoint.stage(spark, root, "dup_pairs", cfg, runId, substrKey)(buildAllPairs())
-        if (!resumed) pairMetricsAfterBuild()
+        var built: Option[PairPlan.Plan] = None
+        val out = PairPlan.labelled(spark, PairPlan.VerifyUnion) {
+          Checkpoint.stage(spark, root, "dup_pairs", cfg, runId, substrKey) {
+            val plan = buildAllPairs()
+            built = Some(plan)
+            plan.pairs
+          }
+        }
+        // the stage wrote and re-read its parquet: the plan's blocks are dead
+        built.foreach { plan => plan.release(); pairMetricsAfterBuild() }
         out
       } else {
         // Day-granular pair store: partitioned by the pair's GENERATION day
@@ -391,11 +349,7 @@ object DedupMain {
                 prevEdges.fold(dayPairs)(_.unionByName(dayPairs)))
               .localCheckpoint(true,
                 org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-            seedCkpt.foreach { old =>
-              old.queryExecution.analyzed.collectFirst {
-                case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-              }.foreach(_.unpersist(blocking = false))
-            }
+            seedCkpt.foreach(LocalCheckpoints.release)
             seedCkpt = Some(next)
             seed = Some(next)
           }
@@ -421,11 +375,7 @@ object DedupMain {
             // not after the last day — the clusters stage rebuild covers it
             if (i < pending.size - 1) refreshSeed(Seq(d))
           }
-          seedCkpt.foreach { old =>
-            old.queryExecution.analyzed.collectFirst {
-              case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-            }.foreach(_.unpersist(blocking = false))
-          }
+          seedCkpt.foreach(LocalCheckpoints.release)
           val out = spark.read.parquet(dupDir)
           val wallMs = (System.nanoTime() - t0) / 1000000L
           Checkpoint.writeManifest(spark, root, Checkpoint.Manifest("dup_pairs",
@@ -437,13 +387,16 @@ object DedupMain {
         } else {
           val t0 = System.nanoTime()
           val dd = docs.select(col("doc_id"), col("warc_day"))
-          val stamped = buildAllPairs()
-            .join(dd.select(col("doc_id").as("a"), col("warc_day").as("da")), "a")
-            .join(dd.select(col("doc_id").as("b"), col("warc_day").as("db")), "b")
-            .withColumn("warc_day", greatest(col("da"), col("db")))
-            .select("a", "b", "family", "warc_day")
-          stamped.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .partitionBy("warc_day").parquet(dupDir)
+          val plan = buildAllPairs()
+          plan.materialize {
+            _.join(dd.select(col("doc_id").as("a"), col("warc_day").as("da")), "a")
+              .join(dd.select(col("doc_id").as("b"), col("warc_day").as("db")), "b")
+              .withColumn("warc_day", greatest(col("da"), col("db")))
+              .select("a", "b", "family", "warc_day")
+              .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+              .partitionBy("warc_day").parquet(dupDir)
+          }
+          plan.release()
           val out = spark.read.parquet(dupDir)
           val rows = out.count()
           val wallMs = (System.nanoTime() - t0) / 1000000L
@@ -532,9 +485,9 @@ object DedupMain {
   }
 
   /** One pending crawl day of the incremental pair build: new×all
-    * candidates per family (minhash/simhash band keys read from the
-    * PERSISTED band_keys stage — partition-pruned scans, zero key
-    * re-derivation for the old corpus; substring via the gram new×all
+    * candidates per family (`PairPlan.newVsAll`; minhash/simhash band keys
+    * read from the PERSISTED band_keys stage — partition-pruned scans, zero
+    * key re-derivation for the old corpus; substring via the gram new×all
     * route + new-docs suffix-array shards), verify joins
     * candidate-restricted, and the day's pairs written into their own
     * partition with dynamic overwrite — a torn day is recomputed and
@@ -546,21 +499,23 @@ object DedupMain {
                              clustersSeed: Option[DataFrame],
                              ctxDays: Seq[java.sql.Timestamp],
                              d: java.sql.Timestamp, substrShards: Int): Unit = {
-    val ser = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
     val t0 = System.nanoTime()
     // loud-cap accounting for the appended day (estimates, counted by the
-    // hot censuses of all three routes — never silent)
+    // hot censuses of all three routes — never silent): one accumulator in
+    // every slot of the sink
     val daySuppressed = spark.sparkContext.longAccumulator("append_suppressed_pairs")
     val isNew = col("warc_day") === lit(d)
     val isOld = col("warc_day").isin(ctxDays.map(x => x: Any): _*)
-    val sigsAll = signatures.where(isNew || isOld)
-    val shAll = shingled.where(isNew || isOld)
     // band keys come from storage on BOTH sides (r4 re-derived and block-
     // cached corpus×52 keys from signatures per appended day — measured
     // ~80% of the append wall); each leg of the new×all operator re-scans
     // the day-pruned, key-bucketed table instead of caching it
     def keys(side: org.apache.spark.sql.Column, fam: String) =
       bandKeys.where(side && col("family") === fam).select("doc_id", "key")
+    // payload: the day-filtered doc_id-bucketed stage rows of the requested ids
+    def rows(stage: DataFrame, payload: String)(ids: DataFrame): DataFrame =
+      stage.where(isNew || isOld).select("doc_id", payload)
+        .join(ids, Seq("doc_id"), "left_semi")
     // cap = saltMaxBucket for BOTH families: below it the new×all listing
     // is exact (same pair set as the batch path's cold cliques restricted
     // to new-involving pairs); above it, the census-salted lanes use the
@@ -574,65 +529,28 @@ object DedupMain {
     // the seed between pending days, so a link emitted in day k can never
     // re-merge — and so never re-emit — in day k+1 (Lsh.seedUnion
     // documents the soundness argument).
-    val (mhCold, mhLanes) = Lsh.newVsAllListing(
-      keys(isNew, "minhash"), keys(isOld, "minhash"), cfg.saltMaxBucket,
-      Some(daySuppressed))
-    val (shCold, shLanes) = Lsh.newVsAllListing(
-      keys(isNew, "simhash"), keys(isOld, "simhash"), cfg.saltMaxBucket,
-      Some(daySuppressed))
-    val mhc = mhCold.distinct().localCheckpoint(false, ser)
-    val shc = shCold.distinct().localCheckpoint(false, ser)
-    // lane payloads join from the doc_id-bucketed stage tables, seeded
-    // with the previous cluster assignment; emitted lane edges are
-    // ALREADY exact-verified (bypass the verify joins)
-    val mhLaneV = Lsh.jaccardIncrementalLanePairs(
-        Lsh.withLaneSeeds(mhLanes, clustersSeed)
-          .join(shAll.select("doc_id", "shingles"), "doc_id"),
-        cfg.jaccardThreshold, Some(daySuppressed))
-      .localCheckpoint(false, ser)
-    val shLaneV = Lsh.hammingIncrementalLanePairs(
-        Lsh.withLaneSeeds(shLanes, clustersSeed)
-          .join(sigsAll.select("doc_id", "simhash"), "doc_id"),
-        cfg.hammingThreshold, Some(daySuppressed))
-      .localCheckpoint(false, ser)
-    val sub = ExactSubstr.substrDupPairsIncremental(
-        docs.where(isNew), docs.where(isOld), cfg, substrShards,
-        Some(daySuppressed))
-      .localCheckpoint(false, ser)
-    // one union action: the families overlap, counts gate the verify
-    // restriction — the full-build discipline at day scale
-    val famCounts = mhc.select(lit("mh").as("fam"))
-      .unionByName(shc.select(lit("sh").as("fam")))
-      .unionByName(mhLaneV.select(lit("mhv").as("fam")))
-      .unionByName(shLaneV.select(lit("shv").as("fam")))
-      .unionByName(sub.select(lit("sub").as("fam")))
-      .groupBy("fam").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val (nMh, nSh) = (famCounts.getOrElse("mh", 0L), famCounts.getOrElse("sh", 0L))
-    val mh = Lsh.verifyJaccard(
-        mhc, Lsh.restrictToCandidateDocs(
-          shAll.select("doc_id", "shingles"), mhc, 2 * nMh), cfg)
-      .select("a", "b").unionByName(mhLaneV)
-    val sh = Lsh.verifyHamming(
-        shc, Lsh.restrictToCandidateDocs(
-          sigsAll.select("doc_id", "simhash"), shc, 2 * nSh), cfg)
-      .select("a", "b").unionByName(shLaneV)
-    Lsh.dupPairs(mh, sh, sub)
-      .withColumn("warc_day", lit(d))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("warc_day").parquet(s"$root/dup_pairs")
+    val plan = PairPlan.newVsAll(
+      PairPlan.Increment(keys(isNew, "minhash"), keys(isOld, "minhash"),
+        rows(shingled, "shingles")),
+      PairPlan.Increment(keys(isNew, "simhash"), keys(isOld, "simhash"),
+        rows(signatures, "simhash")),
+      clustersSeed, cfg,
+      Some(ExactSubstr.substrDupPairsIncremental(
+        docs.where(isNew), docs.where(isOld), cfg, substrShards, _)),
+      Some(PairPlan.Counters(daySuppressed, daySuppressed, daySuppressed)))
+    plan.materialize {
+      _.withColumn("warc_day", lit(d))
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("warc_day").parquet(s"$root/dup_pairs")
+    }
+    plan.release()
     val n = spark.read.parquet(s"$root/dup_pairs").where(isNew).count()
     val wallMs = (System.nanoTime() - t0) / 1000000L
     Metrics.append(spark, root, runId, "dup_pairs_day", n, wallMs, resumed = false)
     Metrics.append(spark, root, runId, "append_suppressed_pairs_day",
       daySuppressed.value, 0L, resumed = false)
     Lineage.appendDays(spark, root, runId, "dup_pairs", cfg.configHash, Seq(d -> n))
-    Seq(mhc, shc, mhLaneV, shLaneV, sub).foreach { df =>
-      df.queryExecution.analyzed.collectFirst {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }.foreach(_.unpersist(blocking = false))
-    }
   }
 
   def main(args: Array[String]): Unit = {

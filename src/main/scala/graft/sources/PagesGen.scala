@@ -3,7 +3,7 @@ package graft.sources
 import graft.DedupConfig
 import graft.extract.HtmlExtract
 import graft.functions.Xxh
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 
 /**
  * SRC3 — deterministic synthetic `pages` corpus with planted duplicates and
@@ -211,10 +211,5 @@ object PagesGen {
     import spark.implicits._
     val seed = cfg.seed
     spark.range(n.toLong).map(id => Doc(id, textFor(n, seed, id), langFor(seed, id)))
-  }
-
-  def truthPairs(spark: SparkSession, n: Int, cfg: DedupConfig = DedupConfig.test): DataFrame = {
-    import spark.implicits._
-    truthPairsLocal(n, cfg).toDF()
   }
 }

@@ -52,17 +52,6 @@ object TableIO {
 
 /** Canonical `pages` shape (BASELINE.json:15) and adapters onto it. */
 object Pages {
-  /** SRC2 — adapt driver testdata `documents.parquet`
-    * (doc_id, text, lang, source, n_chars) into the canonical pages shape.
-    * Deterministic: url from (source, doc_id), warc_ts from doc_id. */
-  def fromDocuments(docs: DataFrame): DataFrame =
-    docs.select(
-      concat(lit("synth://"), col("source"), lit("/"), col("doc_id")).as("url"),
-      timestamp_seconds(lit(1704067200L) + col("doc_id")).as("warc_ts"),
-      col("text").cast("binary").as("html"),
-      col("text"),
-      col("lang"))
-
   /** SRC1 — read + prune the canonical table. `html` is only materialized
     * when `text` is null (extractor path); Catalyst column pruning keeps the
     * binary column out of the scan otherwise. */

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.DedupConfig
 import graft.functions.Fns
-import graft.operators.{ConnectedComponents, Lsh}
+import graft.operators.{ConnectedComponents, LocalCheckpoints, Lsh, PairPlan}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -274,7 +274,7 @@ object StreamingDedup {
     // Try: an evicted root may belong to an already-stopped session
     // (suite teardown) — releasing dead blocks must not fail the live one
     cb.indexes.values.foreach(_.release())
-    cb.tables.values.foreach(df => scala.util.Try(unpersistCheckpoint(df)))
+    cb.tables.values.foreach(df => scala.util.Try(LocalCheckpoints.release(df)))
   }
 
   /** Drop a root's resident state (blocks released). The next batch on
@@ -562,7 +562,6 @@ object StreamingDedup {
   private def processBatchAttempt(batch: DataFrame, batchId: Long, cfg: DedupConfig,
                                   root: String, compactEvery: Int): Unit = {
     val spark = batch.sparkSession
-    val ser = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
     // refuse incompatible state, recover any torn compaction, and fold the
     // batch-dir backlog before reading state
     ensureStateFormat(spark, root)
@@ -650,71 +649,25 @@ object StreamingDedup {
                      probed, matched, probeSets)
           .map { case (d, v) => (d, v(0)) })
         .toDF("doc_id", "simhash")
-    // new × all bucket listings — the shared incremental operator
-    // (Lsh.newVsAllListing, which derives all = new ∪ old internally):
-    // every emitted pair involves ≥1 new doc → no pair repeats across
-    // batches. Hot buckets come back as census-salted lanes (the batch
-    // salt formula) resolved in-task by the family's exact-verified
-    // forest — no unverified edges, matching the batch discipline.
-    val (mhCold, mhLanes) = Lsh.newVsAllListing(
-      newKeys, oldKeysLookup("keys", newKeys), cfg.saltMaxBucket)
-    val (shColdL, shLanes) = Lsh.newVsAllListing(
-      newKeysSh, oldKeysLookup("keys_sh", newKeysSh), cfg.saltMaxBucket)
-    val cands = mhCold.distinct().localCheckpoint(false, ser)
-    val candsSh = shColdL.distinct().localCheckpoint(false, ser)
     // previous committed snapshot: the lane seed (sound merge-emit —
     // Lsh.seedUnion) AND the incremental-CC base below. Fresh per batch,
     // so the no-pair-twice property holds exactly on this path.
     val prevAssign = committedSnapshots(spark, s"$root/clusters")
       .filter(_ < batchId).sorted.lastOption
       .map(id => spark.read.parquet(s"$root/clusters/batch_id=$id"))
-    // lanes are consumed twice now (payload probe ids + the join) — a lazy
-    // checkpoint materializes the lane subtree once; released at batch end
-    val mhLanesS = Lsh.withLaneSeeds(mhLanes, prevAssign)
-      .localCheckpoint(false, ser)
-    val shLanesS = Lsh.withLaneSeeds(shLanes, prevAssign)
-      .localCheckpoint(false, ser)
-    // ONE payload lookup per family covers the lane join AND the verify
-    // join (probe ids = lane members ∪ candidate-pair endpoints): both
-    // consumers are inner joins on ids ⊆ the probe set, so a shared
-    // superset table preserves results while halving the lookup count
-    def pairIds(p: DataFrame): DataFrame =
-      p.select(col("a").as("id")).unionByName(p.select(col("b").as("id")))
-    val shingleTbl = shinglesLookup(
-        mhLanesS.select(col("doc_id").as("id")).unionByName(pairIds(cands)))
-      .localCheckpoint(false, ser)
-    val simhashTbl = simhashLookup(
-        shLanesS.select(col("doc_id").as("id")).unionByName(pairIds(candsSh)))
-      .localCheckpoint(false, ser)
-    val mhLaneV = Lsh.jaccardIncrementalLanePairs(
-        mhLanesS.join(shingleTbl, "doc_id"), cfg.jaccardThreshold)
-      .localCheckpoint(false, ser)
-    val shLaneV = Lsh.hammingIncrementalLanePairs(
-        shLanesS.join(simhashTbl, "doc_id"), cfg.hammingThreshold)
-      .localCheckpoint(false, ser)
-    // one union action materializes all four checkpoints (the families
-    // overlap across the pool — the batch paths' discipline) and yields
-    // the counts gating the verify restrictions
-    val famCounts = cands.select(lit("mh").as("fam"))
-      .unionByName(candsSh.select(lit("sh").as("fam")))
-      .unionByName(mhLaneV.select(lit("mhv").as("fam")))
-      .unionByName(shLaneV.select(lit("shv").as("fam")))
-      .groupBy("fam").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    verifiedNewPairs(shingleTbl,
-        cands, famCounts.getOrElse("mh", 0L), cfg)
-      .select("a", "b").unionByName(mhLaneV)
-      .withColumn("family", lit("minhash"))
-      .unionByName(
-        verifiedNewPairsHamming(simhashTbl,
-          candsSh, famCounts.getOrElse("sh", 0L), cfg)
-          .select("a", "b").unionByName(shLaneV)
-          .withColumn("family", lit("simhash")))
-      // a pair colliding on a cold key AND a hot lane key would otherwise
-      // land twice in this batch's partition (the day path dedupes the
-      // same case inside Lsh.dupPairs)
-      .dropDuplicates("a", "b", "family")
-      .write.mode("overwrite").parquet(s"$root/pairs/batch_id=$batchId")
+    // new × all pair plan (PairPlan.newVsAll): every emitted pair involves
+    // ≥1 new doc → no pair repeats across batches. Hot buckets come back as
+    // census-salted lanes (the batch salt formula) resolved in-task by the
+    // family's exact-verified forest — no unverified edges, matching the
+    // batch discipline. One payload lookup per family serves the lanes and
+    // the verify join.
+    val plan = PairPlan.newVsAll(
+      PairPlan.Increment(
+        newKeys, oldKeysLookup("keys", newKeys), shinglesLookup),
+      PairPlan.Increment(
+        newKeysSh, oldKeysLookup("keys_sh", newKeysSh), simhashLookup),
+      prevAssign, cfg)
+    plan.materialize(_.write.mode("overwrite").parquet(s"$root/pairs/batch_id=$batchId"))
     // Incremental CC over the CONTRACTED history: the previous committed
     // snapshot's (doc_id, cluster_id) rows are a spanning star of every
     // prior component (cluster_id is itself a member doc_id — the min), so
@@ -735,14 +688,13 @@ object StreamingDedup {
     // (the second-newest is what a replay of THIS batch rebuilds from)
     gcClusterSnapshots(spark, root)
     // Per-batch checkpoint-block lifecycle: the TRANSIENT checkpoints
-    // (candidate listings) are released here — without explicit unpersist
-    // a long-running stream piles one set per micro-batch until the
-    // ContextCleaner happens to notice (the CC round-lifecycle lesson).
-    // sh/sims/newKeys/newKeysSh are NOT released: they are this batch's
-    // resident-state entry, owned by the cache (released at fold/evict).
-    Seq(cands, candsSh, mhLanesS, shLanesS, shingleTbl, simhashTbl,
-        mhLaneV, shLaneV)
-      .foreach(unpersistCheckpoint)
+    // (the pair plan's listings and payloads) are released here — without
+    // explicit unpersist a long-running stream piles one set per
+    // micro-batch until the ContextCleaner happens to notice (the CC
+    // round-lifecycle lesson). sh/sims/newKeys/newKeysSh are NOT released:
+    // they are this batch's resident-state entry, owned by the cache
+    // (released at fold/evict).
+    plan.release()
     probeSets.foreach(r => scala.util.Try(r.unpersist(blocking = false)))
     lastResidentRowsProbed = probed.value
     lastResidentRowsMatched = matched.value
@@ -756,34 +708,6 @@ object StreamingDedup {
     * VERDICT_r6 #1 observability metric. */
   @volatile private[graft] var lastResidentRowsProbed: Long = 0L
   @volatile private[graft] var lastResidentRowsMatched: Long = 0L
-  private[graft] def lastResidentRowsTouched: Long =
-    lastResidentRowsProbed + lastResidentRowsMatched
-
-  /** RDD blocks behind a localCheckpoint'd DataFrame, released. */
-  private def unpersistCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.foreach(_.unpersist(blocking = false))
-
-  /** This batch's verified pairs: the shingle state (the caller passes the
-    * RESIDENT view — cache blocks, not a parquet re-scan) is additionally
-    * candidate-restricted BEFORE the verify join (count-gated broadcast
-    * LeftSemi — `Lsh.restrictToCandidateDocs`, the batch path's own
-    * discipline), so the join probes only candidate docs' rows.
-    * Plan-asserted in StreamingDedupSpec. */
-  private[streaming] def verifiedNewPairs(allShingled: DataFrame, cands: DataFrame,
-                                          nCands: Long, cfg: DedupConfig): DataFrame = {
-    val allSh = Lsh.restrictToCandidateDocs(allShingled, cands, 2 * nCands)
-    Lsh.verifyJaccard(cands, allSh, cfg).select("a", "b")
-  }
-
-  /** SimHash analog of `verifiedNewPairs`: exact Hamming against the
-    * candidate-restricted resident fingerprint state. */
-  private[streaming] def verifiedNewPairsHamming(allSimhashes: DataFrame, cands: DataFrame,
-                                                 nCands: Long, cfg: DedupConfig): DataFrame = {
-    val allSims = Lsh.restrictToCandidateDocs(allSimhashes, cands, 2 * nCands)
-    Lsh.verifyHamming(cands, allSims, cfg).select("a", "b")
-  }
 
   /** Ids whose state dirs are compaction-consolidation targets (they hold
     * the folded rows of earlier batches under one id's name) — recorded by
@@ -841,12 +765,5 @@ object StreamingDedup {
     pages
       .withWatermark("warc_ts", watermark)
       .groupBy(window(col("warc_ts"), window_), col("lang"))
-      .agg(count(lit(1)).as("n_docs"))
-
-  /** Session-window crawl-burst analytics (session gap per lang). */
-  def sessionBursts(pages: DataFrame, gap: String = "5 minutes"): DataFrame =
-    pages
-      .withWatermark("warc_ts", "10 minutes")
-      .groupBy(session_window(col("warc_ts"), gap), col("lang"))
       .agg(count(lit(1)).as("n_docs"))
 }

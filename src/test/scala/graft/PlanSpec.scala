@@ -159,7 +159,10 @@ class PlanSpec extends SparkSuite {
       .select("doc_id", "text")
     // the public dupPairs eagerly checkpoints (block lifecycle), which
     // hides the plan behind a LogicalRDD — judge the lazy plan it runs
-    val plan = physicalPlan(Dedup.dupPairsPlan(docs, cfg)._1)
+    // (the shared PairPlan tail behind the all×all front-end)
+    val pairPlan = Dedup.dupPairsPlan(docs, cfg)
+    val plan = physicalPlan(pairPlan.pairs)
+    pairPlan.release()
     // the count-gated restrictToCandidateDocs must survive into the plan:
     // the per-doc tables reach the verify joins through a LeftSemi against
     // the broadcast candidate-id list, so shingle arrays only shuffle for

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.{DedupConfig, SparkSuite}
-import graft.operators.Lsh
+import graft.operators.{Lsh, PairPlan}
 import graft.sources.PagesGen
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -103,20 +103,52 @@ class StreamingDedupSpec extends SparkSuite {
   }
 
   test("bridge verify join is candidate-restricted against accumulated shingle state") {
-    // the verify join's shingle side must NOT be the whole history: it goes
+    // the verify join's payload side must NOT be the whole history: the
+    // shared PairPlan tail behind the bridge's new×all front-end passes it
     // through restrictToCandidateDocs (broadcast LeftSemi), so per-batch
     // verify cost tracks the batch's candidates, not the stream's lifetime
     val docs = PagesGen.docs(spark, 120, cfg).toDF().localCheckpoint()
     val root = java.nio.file.Files.createTempDirectory("graft-restrict").toString
     StreamingDedup.processBatch(docs.where(col("doc_id") % 2 === 0), 0L, cfg, root)
     StreamingDedup.processBatch(docs.where(col("doc_id") % 2 === 1), 1L, cfg, root)
-    val someIds = docs.select("doc_id").as[Long].take(2)
-    val cands = Seq((someIds(0), someIds(1))).toDF("a", "b")
-    val allSh = spark.read.parquet(s"$root/shingled").select("doc_id", "shingles")
-    val plan = StreamingDedup.verifiedNewPairs(allSh, cands, 1L, cfg)
-      .queryExecution.executedPlan.toString
+    def keys(t: String, batch: Long) =
+      spark.read.parquet(s"$root/$t").where(col("batch_id") === batch).select("doc_id", "key")
+    def rows(t: String, payload: String)(ids: org.apache.spark.sql.DataFrame) =
+      spark.read.parquet(s"$root/$t").select("doc_id", payload)
+        .join(ids, Seq("doc_id"), "left_semi")
+    val pairPlan = PairPlan.newVsAll(
+      PairPlan.Increment(keys("keys", 1L), keys("keys", 0L), rows("shingled", "shingles")),
+      PairPlan.Increment(keys("keys_sh", 1L), keys("keys_sh", 0L), rows("simhashes", "simhash")),
+      None, cfg)
+    val plan = pairPlan.pairs.queryExecution.executedPlan.toString
+    pairPlan.release()
     assert(plan.contains("LeftSemi") && plan.contains("Broadcast"),
       s"expected broadcast left-semi candidate restriction:\n$plan")
+  }
+
+  test("HOT-regime bridge: streamed clusters == batch clusters, no pair row repeats") {
+    // saltMaxBucket = 8 makes hot buckets common at 400 docs, so every
+    // batch after the first resolves MinHash hot lanes of the new×all
+    // listing (seeded in-task forests) beside the cold candidates; an
+    // unseeded lane would re-emit earlier batches' links as repeated rows
+    val hot = cfg.copy(saltMaxBucket = 8)
+    val docs = PagesGen.docs(spark, 400, hot).toDF().localCheckpoint()
+    val root = java.nio.file.Files.createTempDirectory("graft-hot").toString
+    (0 until 4).foreach { b =>
+      StreamingDedup.processBatch(
+        docs.where(pmod(xxhash64(col("doc_id")), lit(4)) === b), b.toLong, hot, root)
+    }
+    val streamed = StreamingDedup.latestClusters(spark, root)
+      .as[(Long, Long)].collect().toSet
+    val batchPairs = Lsh.minhashDupPairs(docs, hot).select("a", "b")
+      .unionByName(Lsh.simhashDupPairs(docs, hot).select("a", "b"))
+    val batch = graft.operators.ConnectedComponents.assign(batchPairs)
+      .as[(Long, Long)].collect().toSet
+    assert(batch.nonEmpty)
+    assert(streamed === batch, s"extra=${streamed -- batch} missing=${batch -- streamed}")
+    val repeats = spark.read.parquet(s"$root/pairs")
+      .groupBy("a", "b", "family").count().where(col("count") > 1).count()
+    assert(repeats === 0L, "a pair row repeats under pairs/")
   }
 
   test("steady-state batches run on resident state; a restart rebuilds once and matches") {
