@@ -45,10 +45,8 @@ object TextOps {
     * 100 TB shape: the old corpus is scanned, never shuffled. Scan 1
     * builds a Bloom filter over xxhash64(text) (Spark's distributed
     * sketch merge; size it with `expectedOldItems` — at 10^10 docs / 1%
-    * fpp the filter is ~12 GB, so production increments persist and
-    * APPEND to yesterday's filter instead of rebuilding; that persistence
-    * is a caller seam, the probe/vet shape here is unchanged). The
-    * broadcast probe then splits the increment MAP-SIDE: misses are
+    * fpp the filter is ~12 GB, rebuilt per call). The broadcast probe
+    * then splits the increment MAP-SIDE: misses are
     * definitely-new (no join at all — the common case for a mostly-novel
     * increment); hits (true dups + fpp false alarms) vet against the old
     * corpus on the 128-bit md5 identity (the q35 discipline — 64-bit
@@ -64,7 +62,10 @@ object TextOps {
                             expectedOldItems: Long = 0L, fpp: Double = 0.01,
                             broadcastMaxHits: Long = 10L * 1000 * 1000)
       : DataFrame = {
-    val (k64c, _, _) = graftCols
+    val spark = newDocs.sparkSession
+    val outCols = newDocs.columns.toSeq.map(col)
+    // graft-prefixed working columns so a caller's own k64/k128 survives
+    val (k64c, k128c, mightC) = ("__graft_k64", "__graft_k128", "__graft_might_dup")
     val oldK64 = oldDocs.select(xxhash64(col("text")).as(k64c))
     // Sizing discipline (r7, ADVICE): the old corpus is the 100 TB side —
     // touch it as few times as possible. Sized callers (expectedOldItems
@@ -82,23 +83,7 @@ object TextOps {
         if (c == 0L) return newDocs
         c
       }
-    val bloom = oldK64.stat.bloomFilter(k64c, n, fpp)
-    probeAndVet(newDocs, oldDocs, bloom, broadcastMaxHits)
-  }
-
-  private val graftCols = ("__graft_k64", "__graft_k128", "__graft_might_dup")
-
-  /** The probe/vet core shared by the per-call and persisted-filter
-    * variants: broadcast Bloom probe splits the increment map-side; hits
-    * vet against the old corpus on the 128-bit md5 identity. */
-  private def probeAndVet(newDocs: DataFrame, oldDocs: DataFrame,
-                          bloom: org.apache.spark.util.sketch.BloomFilter,
-                          broadcastMaxHits: Long): DataFrame = {
-    val spark = newDocs.sparkSession
-    val outCols = newDocs.columns.toSeq.map(col)
-    // graft-prefixed working columns so a caller's own k64/k128 survives
-    val (k64c, k128c, mightC) = graftCols
-    val bc = spark.sparkContext.broadcast(bloom)
+    val bc = spark.sparkContext.broadcast(oldK64.stat.bloomFilter(k64c, n, fpp))
     val keyed = newDocs
       .withColumn(k64c, xxhash64(col("text")))
       .withColumn(k128c, md5(col("text")))
@@ -134,134 +119,6 @@ object TextOps {
                   Seq(k128c), "left_anti")
       }
     definiteNew.select(outCols: _*).unionByName(vetted.select(outCols: _*))
-  }
-
-  /**
-   * Persisted-filter incremental exact dedup (VERDICT_r6 #2: the sketch no
-   * longer rebuilds per increment). Same contract and output as
-   * `incrementalExactDedup`, but the old-corpus Bloom sketch is durable
-   * under `filterDir`:
-   *
-   *  - store HIT (a prior increment saved a filter): the increment probes
-   *    the STORED sketch — the old corpus is not scanned for the sketch at
-   *    all; it is only touched by the md5 vet when hits exist (a fully
-   *    novel increment touches it ZERO times — spec-asserted against a
-   *    poisoned old-corpus frame);
-   *  - store MISS (first run): builds the sketch exactly as the per-call
-   *    operator — sized at max(expectedOldItems, |old|) — and SAVES it.
-   *
-   * After deciding which increment docs JOIN the corpus, the caller folds
-   * their keys in with `bloomAppend` (Spark sketches of identical
-   * expectedItems/fpp are bit-compatible and merge in place). The append
-   * returns false once the filter grows past its sized capacity — the
-   * documented rebuild gate (capacity overflow only degrades fpp, never
-   * correctness: Bloom filters have no false negatives, and every hit is
-   * md5-vetted — so the gate is about keeping the miss path selective,
-   * and the caller rebuilds by deleting `filterDir` before the next run).
-   */
-  def incrementalExactDedupPersisted(newDocs: DataFrame, oldDocs: DataFrame,
-                                     filterDir: String,
-                                     expectedOldItems: Long = 0L, fpp: Double = 0.01,
-                                     broadcastMaxHits: Long = 10L * 1000 * 1000)
-      : DataFrame = {
-    val spark = newDocs.sparkSession
-    val (k64c, _, _) = graftCols
-    BloomStore.load(spark, filterDir) match {
-      case Some((bf, meta)) =>
-        require(meta.fpp == fpp,
-          s"stored filter at $filterDir was sized at fpp=${meta.fpp}, caller " +
-            s"asked $fpp — delete the store to rebuild at the new setting")
-        if (meta.nItems == 0L) newDocs
-        else probeAndVet(newDocs, oldDocs, bf, broadcastMaxHits)
-      case None =>
-        val oldK64 = oldDocs.select(xxhash64(col("text")).as(k64c))
-        val c = oldK64.count()
-        // an explicit expectedOldItems pins the capacity (the caller's
-        // growth-curve sizing — and the gate's testable knob); unsized
-        // stores get growth headroom (2× the current corpus, floor 1024)
-        // so the first few appends don't trip the rebuild gate
-        val capacity =
-          if (expectedOldItems > 0L) math.max(expectedOldItems, math.max(c, 1L))
-          else math.max(2 * c, 1024L)
-        val bloom = // zero-row sketch aggregate yields a null bit buffer
-          if (c == 0L) org.apache.spark.util.sketch.BloomFilter.create(capacity, fpp)
-          else oldK64.stat.bloomFilter(k64c, capacity, fpp)
-        BloomStore.save(spark, filterDir, bloom,
-          BloomStore.Meta(c, capacity, fpp))
-        if (c == 0L) newDocs
-        else probeAndVet(newDocs, oldDocs, bloom, broadcastMaxHits)
-    }
-  }
-
-  /** Fold an increment's keys into the stored filter (call after the
-    * increment's kept docs JOIN the corpus): builds a sketch of the added
-    * docs at the STORE's expectedItems/fpp (bit-compatible ⇒ mergeInPlace)
-    * — one scan of the increment, never of the corpus. Returns false when
-    * the filter is past its sized capacity: the rebuild gate (delete the
-    * store and re-run to rebuild at a larger size). */
-  def bloomAppend(addedDocs: DataFrame, filterDir: String): Boolean = {
-    val spark = addedDocs.sparkSession
-    val (k64c, _, _) = graftCols
-    val (bf, meta) = BloomStore.load(spark, filterDir).getOrElse(
-      throw new IllegalStateException(s"no persisted filter at $filterDir"))
-    val addK = addedDocs.select(xxhash64(col("text")).as(k64c))
-    val added = addK.count()
-    if (added > 0L) {
-      val inc = addK.stat.bloomFilter(k64c, meta.expectedItems, meta.fpp)
-      bf.mergeInPlace(inc)
-      BloomStore.save(spark, filterDir, bf, meta.copy(nItems = meta.nItems + added))
-    }
-    meta.nItems + added <= meta.expectedItems
-  }
-
-  /** Durable (filter, meta) store for `incrementalExactDedupPersisted`:
-    * filter bytes via Spark's own BloomFilter serialization + one
-    * meta line, written to a temp dir and renamed in (atomic on
-    * rename-capable filesystems; a torn write is an absent COMMIT file =
-    * store miss = safe rebuild). */
-  private[graft] object BloomStore {
-    final case class Meta(nItems: Long, expectedItems: Long, fpp: Double)
-
-    private def fs(spark: org.apache.spark.sql.SparkSession, dir: String) =
-      org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
-
-    def load(spark: org.apache.spark.sql.SparkSession, dir: String)
-        : Option[(org.apache.spark.util.sketch.BloomFilter, Meta)] = {
-      val f = fs(spark, dir)
-      val commit = new org.apache.hadoop.fs.Path(s"$dir/COMMIT")
-      if (!f.exists(commit)) return None
-      val metaIn = f.open(new org.apache.hadoop.fs.Path(s"$dir/meta"))
-      val meta = try {
-        val Array(n, e, p) = scala.io.Source.fromInputStream(metaIn, "UTF-8")
-          .mkString.trim.split(",")
-        Meta(n.toLong, e.toLong, p.toDouble)
-      } finally metaIn.close()
-      val in = f.open(new org.apache.hadoop.fs.Path(s"$dir/filter.bin"))
-      val bf = try org.apache.spark.util.sketch.BloomFilter.readFrom(in)
-               finally in.close()
-      Some((bf, meta))
-    }
-
-    def save(spark: org.apache.spark.sql.SparkSession, dir: String,
-             bf: org.apache.spark.util.sketch.BloomFilter, meta: Meta): Unit = {
-      val f = fs(spark, dir)
-      val tmp = new org.apache.hadoop.fs.Path(dir + "_tmp")
-      if (f.exists(tmp)) f.delete(tmp, true)
-      f.mkdirs(tmp)
-      val out = f.create(new org.apache.hadoop.fs.Path(tmp, "filter.bin"), true)
-      try bf.writeTo(out) finally out.close()
-      val mOut = f.create(new org.apache.hadoop.fs.Path(tmp, "meta"), true)
-      try mOut.write(
-        s"${meta.nItems},${meta.expectedItems},${meta.fpp}".getBytes("UTF-8"))
-      finally mOut.close()
-      val cOut = f.create(new org.apache.hadoop.fs.Path(tmp, "COMMIT"), true)
-      cOut.close()
-      val dst = new org.apache.hadoop.fs.Path(dir)
-      if (f.exists(dst)) f.delete(dst, true)
-      if (!f.rename(tmp, dst))
-        throw new java.io.IOException(s"BloomStore: rename $tmp -> $dst failed")
-    }
   }
 
   /** Corpus-level exact-dup census: one row. */

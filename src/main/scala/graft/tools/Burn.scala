@@ -64,12 +64,16 @@ object Burn {
     }
   }
 
-  /** Measure the low→high thread-scaling ceiling (default 8→32, ~10 s —
-    * long enough that pool startup and scheduler jitter are noise).
-    * Chunks ≫ high so the tail is balanced; one warm round first (JIT). */
-  def measure(low: Int = 8, high: Int = 32, chunks: Int = 128,
-              itersPerChunk: Long =
+  /** Measure the thread-scaling ceiling from a quarter of this host's cores
+    * to all of them (~10 s — long enough that pool startup and scheduler
+    * jitter are noise). Four chunks per high thread keep the tail balanced
+    * and the work proportional to the core count, so the wall is about the
+    * same on any host; one warm round first (JIT). */
+  def measure(itersPerChunk: Long =
                 sys.env.getOrElse("SPARK_GRAFT_BURN_ITERS", "120000000").toLong): Ceiling = {
+    val high = Runtime.getRuntime.availableProcessors
+    val low = math.max(1, high / 4)
+    val chunks = 4 * high
     wall(high, chunks, itersPerChunk / 8) // JIT warmup, excluded
     val tl = wall(low, chunks, itersPerChunk)
     val th = wall(high, chunks, itersPerChunk)

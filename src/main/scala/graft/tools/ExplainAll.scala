@@ -5,7 +5,8 @@ import java.nio.file.{Files, Paths}
 
 /** Dev utility: dump `.explain("formatted")` of every SparkEntry query (or a
   * comma-separated subset in args(1)) to <outDir>/<query>_<tag>.txt in ONE
-  * session — the plans/r07 before/after evidence generator.
+  * session — the plans/r07 before/after evidence generator; a one-query
+  * subset writes that query's plan alone.
   * Usage: runMain graft.tools.ExplainAll <outDir> [q03_...,q04_...] [tag] [sfDir]
   */
 object ExplainAll {
@@ -16,7 +17,8 @@ object ExplainAll {
       else None
     val tag = if (args.length > 2) args(2) else "before"
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -1,15 +1,13 @@
 package graft.tools
 
 import graft.DedupConfig
-import graft.operators.{ConnectedComponents, ExactSubstr, Lsh}
+import graft.operators.ConnectedComponents
 import graft.run.DedupMain
 import graft.sources.PagesGen
-import org.apache.spark.sql.SparkSession
 
 /**
  * Scaling-efficiency evidence (north rule: ≥0.8 throughput efficiency from
- * N to 4N executors; sandbox protocol per the task brief: same job, same
- * input, local[8] vs local[32]).
+ * N to 4N executors: same job, same input, local[N] vs local[4N]).
  *
  * The corpus is a deterministic PagesGen table written ONCE to a shared
  * path (64 parquet files so both parallelism levels see ≥64 input splits),
@@ -18,14 +16,20 @@ import org.apache.spark.sql.SparkSession
  * null → MinHash + SimHash + substring families → verification →
  * connected components → cluster count.
  *
- *   SPARK_GRAFT_CPUS=8  sbt "runMain graft.tools.ScalingBench"
- *   SPARK_GRAFT_CPUS=32 sbt "runMain graft.tools.ScalingBench"
- *   efficiency = (T_8 / T_32) / 4
+ *   SPARK_GRAFT_CPUS=$(( $(nproc) / 4 )) sbt "runMain graft.tools.ScalingBench"
+ *   SPARK_GRAFT_CPUS=$(nproc)          sbt "runMain graft.tools.ScalingBench"
+ *   efficiency = (T_N / T_4N) / 4
+ *
+ * Per-layer walls, task inflation and per-query isolation are perfbench's
+ * (`python3 perfbench/run.py --trace 1`); this main keeps what perfbench
+ * does not run: the at-scale pipeline pair and the SPARK_GRAFT_MAIN,
+ * _APPEND, _STREAM and _XOPS modes below.
  */
 object ScalingBench {
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("SPARK_GRAFT_SCALE_DOCS", "60000").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
     val cfg = DedupConfig.test
     val corpus = s"/tmp/graft_scale_corpus_$n"
     // self-bracketing ambient calibration (VERDICT_r5 #7): measured lazily
@@ -41,15 +45,11 @@ object ScalingBench {
         val d = new java.io.File("/dev/shm/graft-shuffle")
         d.mkdirs(); d.getAbsolutePath
       } else System.getProperty("java.io.tmpdir")
-    val spark = SparkSession.builder()
+    val spark = graft.Sessions.builder(cpus)
       .master(s"local[$cpus]")
       .appName("graft-scaling-bench")
       .config("spark.local.dir", localDir)
       .config("spark.sql.warehouse.dir", s"$localDir/warehouse")
-      .config("spark.sql.shuffle.partitions", (2 * cpus).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -81,7 +81,7 @@ object ScalingBench {
     /** Stage-granular phase attribution (VERDICT_r5 #3): for every stage
       * inside a graft-labeled job, record (job phase, stage callsite, wall,
       * Σ task time, tasks). Σtask/wall is the stage's achieved parallelism
-      * — the direct instrument for WHICH term stops scaling 8→32: a stage
+      * — the direct instrument for WHICH term stops scaling N→4N: a stage
       * whose Σtask/wall ≪ cpus is serialized (driver barrier, single-task
       * tail, skew), one whose Σtask grows with cpus is contended. Enabled
       * with SPARK_GRAFT_PHASES=1 in the default scaling mode. */
@@ -164,46 +164,6 @@ object ScalingBench {
         Some(l)
       } else None
 
-    // pure-CPU kernel mode: shingle+minhash+simhash only (no shuffle) —
-    // isolates thread scaling of the compute from shared-memory-bandwidth
-    // effects in the shuffle stages
-    if (sys.env.contains("SPARK_GRAFT_KERNEL")) {
-      import org.apache.spark.sql.functions.{bit_xor, col, count, lit, size, xxhash64}
-      val docs = DedupMain.toDocs(spark.read.parquet(corpus))
-      // aggregate over the signature values so column pruning can't elide
-      // the computation under a bare count
-      val build: () => Long = sys.env("SPARK_GRAFT_KERNEL") match {
-        case "minhash" => () =>
-          Lsh.signatures(Lsh.shingled(docs, cfg), cfg)
-            .agg(bit_xor(xxhash64(col("minhash"))), count(lit(1))).head().getLong(1)
-        case "simhash" => () =>
-          Lsh.simhashes(docs, cfg)
-            .agg(bit_xor(col("simhash")), count(lit(1))).head().getLong(1)
-        case "shingle" => () =>
-          Lsh.shingled(docs, cfg)
-            .agg(bit_xor(size(col("shingles"))), count(lit(1))).head().getLong(1)
-        case "extract" => () =>
-          docs.agg(bit_xor(xxhash64(col("text"))), count(lit(1))).head().getLong(1)
-        case _ => () =>
-          Lsh.signatures(Lsh.shingled(docs, cfg), cfg)
-            .join(Lsh.simhashes(docs, cfg), "doc_id")
-            .agg(bit_xor(xxhash64(col("minhash"))), bit_xor(col("simhash")), count(lit(1)))
-            .head().getLong(2)
-      }
-      build() // warm
-      var rows = 0L
-      val walls = (1 to sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt).map { _ =>
-        val t0 = System.nanoTime()
-        rows = build()
-        (System.nanoTime() - t0) / 1e9
-      }
-      val wall = walls.min
-      println(s"""{"bench":"kernel-${sys.env("SPARK_GRAFT_KERNEL")}","docs":$rows,""" +
-        s""""cpus":$cpus,"wall_sec":$wall,"walls":[${walls.mkString(",")}],""" +
-        s""""docs_per_sec":${rows / wall},${burn.json}}""")
-      spark.stop(); return
-    }
-
     // cross-corpus ops at scale (SPARK_GRAFT_XOPS=1): the q43 exact-
     // substring decontamination operator against a 0.1% "benchmark" split
     // (planted dups + the boilerplate clique cross the split, so the
@@ -251,45 +211,6 @@ object ScalingBench {
       spark.stop(); return
     }
 
-    // stage-by-stage timing mode for bottleneck hunting: each stage is a
-    // FRESH chain per rep (no shared localCheckpoint blocks), min-of-k
-    // against the 2-20x host noise
-    if (sys.env.contains("SPARK_GRAFT_STAGES")) {
-      val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-      val only = sys.env.get("SPARK_GRAFT_STAGE_FILTER")
-      def t(name: String)(f: => Long): Unit = if (only.forall(name.contains)) {
-        var rows = 0L
-        val walls = (1 to reps).map { _ =>
-          val t0 = System.nanoTime()
-          rows = f
-          (System.nanoTime() - t0) / 1e9
-        }
-        println(f"STAGE $name%-12s min=${walls.min}%8.2fs rows=$rows walls=${walls.map(w => f"$w%.1f").mkString(",")}")
-      }
-      def docs = DedupMain.toDocs(spark.read.parquet(corpus))
-      t("shingle+sig") { Lsh.signatures(Lsh.shingled(docs, cfg), cfg).count() }
-      t("band+salt") {
-        Lsh.saltBandKeys(Lsh.minhashBandKeys(Lsh.signatures(Lsh.shingled(docs, cfg), cfg), cfg), cfg).count()
-      }
-      t("candidates") {
-        Lsh.candidatePairs(Lsh.saltBandKeys(
-          Lsh.minhashBandKeys(Lsh.signatures(Lsh.shingled(docs, cfg), cfg), cfg), cfg)).count()
-      }
-      t("minhashfam") { Lsh.minhashDupPairs(docs, cfg).count() }
-      t("simhashfam") { Lsh.simhashDupPairs(docs, cfg).count() }
-      t("substr-gram") {
-        ExactSubstr.verifyExtend(
-          ExactSubstr.candidates(ExactSubstr.gramIndex(docs, cfg), cfg), docs, cfg).count()
-      }
-      t("substr-shard") { ExactSubstr.shardRepeats(docs, cfg).count() }
-      t("substr") { ExactSubstr.substrDupPairs(docs, cfg).count() }
-      t("cc") {
-        val mh = Lsh.minhashDupPairs(docs, cfg)
-        ConnectedComponents.assign(mh.select("a", "b")).count()
-      }
-      spark.stop(); return
-    }
-
     // warm run (JIT + codegen), then 3 measured runs; report all and take
     // the MIN — this box shows 2-20x noisy-neighbor variance between
     // identical runs, and min-of-k is the standard noise-robust throughput
@@ -302,7 +223,7 @@ object ScalingBench {
 
     // production-path mode: time DedupMain.run (durable stage
     // materialization under a fresh root per rep — each stage's blocks are
-    // released as soon as it is written, so the 32-thread side doesn't pay
+    // released as soon as it is written, so the 4N-thread side doesn't pay
     // the whole pipeline's heap debris the facade path accumulates)
     // SPARK_GRAFT_KEEPBEST=<sql-expr>: run the production path with the
     // quality-dedup stage (the VERDICT_r5 #5 measurement — deduped stage

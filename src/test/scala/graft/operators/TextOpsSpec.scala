@@ -323,56 +323,6 @@ class TextOpsSpec extends SparkSuite {
       .select("doc_id").as[Long].collect().sorted === Array(2L))
   }
 
-  test("persisted-filter incremental dedup: no old-corpus touch on the second increment") {
-    // VERDICT_r6 #2: the sketch persists across increments — the second
-    // call must not scan the old corpus to rebuild it. Proven with a
-    // POISONED old-corpus frame whose evaluation throws: a fully-novel
-    // increment against the stored filter completes without ever
-    // materializing it (no sketch scan, no vet — all misses).
-    val dir = java.nio.file.Files.createTempDirectory("graft-bloom").toString + "/f"
-    val old = (0L until 40L).map(i => (i, s"corpus doc text number $i"))
-      .toDF("doc_id", "text")
-    val inc1 = Seq((100L, "corpus doc text number 3"), // dup of old 3
-                   (101L, "first increment novel a"),
-                   (102L, "first increment novel b")).toDF("doc_id", "text")
-    // first run: store miss — builds + saves (sized for ~10 appends);
-    // output == the per-call op
-    val got1 = TextOps.incrementalExactDedupPersisted(inc1, old, dir,
-        expectedOldItems = 50L)
-      .select("doc_id").as[Long].collect().sorted
-    assert(got1 === TextOps.incrementalExactDedup(inc1, old)
-      .select("doc_id").as[Long].collect().sorted)
-    assert(got1 === Array(101L, 102L))
-    // survivors join the corpus: fold their keys into the stored filter
-    val kept1 = inc1.where(col("doc_id").isin(101L, 102L))
-    assert(TextOps.bloomAppend(kept1, dir),
-      "append within capacity must not demand a rebuild")
-    // second increment, fully novel, against a POISONED old frame
-    val poisoned = spark.range(1)
-      .map(_ => sys.error("old corpus must not be touched"): (Long, String))
-      .toDF("doc_id", "text")
-    val inc2 = Seq((200L, "second increment novel x"),
-                   (201L, "second increment novel y")).toDF("doc_id", "text")
-    val got2 = TextOps.incrementalExactDedupPersisted(inc2, poisoned, dir)
-      .select("doc_id").as[Long].collect().sorted
-    assert(got2 === Array(200L, 201L))
-    // a dup of an APPENDED inc1 doc is caught via the merged filter + vet
-    // against the true accumulated corpus — parity with a fresh filter
-    val corpusNow = old.unionByName(kept1)
-    val inc3 = Seq((300L, "first increment novel a"), // dup of appended 101
-                   (301L, "third increment novel z")).toDF("doc_id", "text")
-    val got3 = TextOps.incrementalExactDedupPersisted(inc3, corpusNow, dir)
-      .select("doc_id").as[Long].collect().sorted
-    assert(got3 === TextOps.incrementalExactDedup(inc3, corpusNow)
-      .select("doc_id").as[Long].collect().sorted)
-    assert(got3 === Array(301L))
-    // capacity gate: pushing past the sized expectedItems returns false
-    val flood = (0L until 60L).map(i => (1000L + i, s"flood doc $i"))
-      .toDF("doc_id", "text")
-    assert(!TextOps.bloomAppend(flood, dir),
-      "append past capacity must demand a rebuild")
-  }
-
   test("lengthQuantiles: exact nearest-rank members uncompressed; rank error <= n/accuracy compressed") {
     val n = 5000
     val rnd = new java.util.SplittableRandom(7)
