@@ -48,42 +48,70 @@ object Checkpoint {
     try out.write(json.getBytes("UTF-8")) finally out.close()
   }
 
+  private[run] def md5(s: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+
   /** Stable managed-table name for a bucketed stage (the metastore is
     * session-global, so the root path is folded in to keep concurrent runs
     * apart). */
-  def bucketedTableName(root: String, stage: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val h = md.digest(root.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    s"graft_${stage}_$h"
+  def bucketedTableName(root: String, stage: String): String = s"graft_${stage}_${md5(root).take(8)}"
+
+  /** Where a stage's rows live. Each layout keeps its own torn-write rule:
+    * what proves its last write committed, and whether a day written but
+    * not recorded in lineage can be repaired in place. */
+  sealed trait Layout {
+    def read(spark: SparkSession, root: String, name: String): DataFrame
+    def committed(spark: SparkSession, root: String, name: String): Boolean
+    /** Full build (`partitionCols` empty for a whole stage), or with
+      * `addDays` the pending days' rows of a `warc_day`-partitioned stage. */
+    def write(df: DataFrame, root: String, name: String, partitionCols: Seq[String],
+              addDays: Boolean): Unit
+    /** Days in storage that `done` does not record force a full rebuild. */
+    def rebuildOnTorn: Boolean
   }
 
-  /**
-   * Bucketed variant of `stage`: materializes into a managed table
-   * bucketed+sorted by `byCol` (locally parquet bucketing; Iceberg
-   * `bucket(n, col)` in prod via the TableIO seam), so every later join on
-   * `byCol` — the verify joins each incremental re-run repeats — reads the
-   * table WITHOUT an Exchange on this side. Resume gate identical to
-   * `stage`.
-   */
-  def stageBucketed(spark: SparkSession, root: String, name: String, cfg: DedupConfig,
-                    runId: String, buckets: Int, byCol: String)
-                   (build: => DataFrame): DataFrame = {
-    val tbl = bucketedTableName(root, name)
-    readManifest(spark, root, name) match {
-      case Some(m) if m.configHash == cfg.configHash && spark.catalog.tableExists(tbl) =>
-        Metrics.append(spark, root, runId, name, m.rowCount, 0L, resumed = true)
-        spark.table(tbl)
-      case _ =>
-        val t0 = System.nanoTime()
-        graft.sources.TableIO.writeBucketed(build, tbl, buckets, byCol, Some(byCol))
-        val out = spark.table(tbl)
-        val rows = out.count()
-        val wallMs = (System.nanoTime() - t0) / 1000000L
-        writeManifest(spark, root, Manifest(name, cfg.configHash, rows, wallMs))
-        Metrics.append(spark, root, runId, name, rows, wallMs, resumed = false)
-        Lineage.append(spark, root, runId, name, cfg.configHash, out)
-        out
+  /** Plain parquet under `<root>/<stage>`. `_SUCCESS` exists only after a
+    * completed job commit, so an Overwrite killed mid-write is never read
+    * back as the stage. A day append uses dynamic partition overwrite: a run
+    * killed between the data write and the lineage append leaves the day
+    * written but unrecorded, and the restart's rewrite replaces that
+    * partition instead of double-appending rows. */
+  case object Parquet extends Layout {
+    def read(spark: SparkSession, root: String, name: String): DataFrame =
+      spark.read.parquet(s"$root/$name")
+    def committed(spark: SparkSession, root: String, name: String): Boolean = {
+      val p = new Path(s"$root/$name/_SUCCESS")
+      fs(spark, p).exists(p)
     }
+    def write(df: DataFrame, root: String, name: String, partitionCols: Seq[String],
+              addDays: Boolean): Unit = {
+      val w = df.write.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*)
+      (if (addDays) w.option("partitionOverwriteMode", "dynamic") else w).parquet(s"$root/$name")
+    }
+    val rebuildOnTorn = false
+  }
+
+  /** A managed table bucketed+sorted by `byCol` (locally parquet bucketing;
+    * Iceberg `bucket(n, col)` in prod via the TableIO seam), so every later
+    * join on `byCol` — the verify joins each incremental re-run repeats —
+    * reads the table WITHOUT an Exchange on this side. Day stages partition
+    * it by `warc_day` on top (the local mirror of Iceberg `bucket(n, doc_id)
+    * × days(warc_ts)`). saveAsTable(Append) cannot do dynamic partition
+    * overwrite, so a day in the table but not in lineage (a run killed
+    * between the data and lineage appends) triggers a full rebuild — a rare
+    * crash costs one recompute, never silent row duplication. Prod Iceberg
+    * replaces the append with an atomic REPLACE PARTITIONS commit. */
+  final case class Bucketed(buckets: Int, byCol: String) extends Layout {
+    def read(spark: SparkSession, root: String, name: String): DataFrame =
+      spark.table(bucketedTableName(root, name))
+    def committed(spark: SparkSession, root: String, name: String): Boolean =
+      spark.catalog.tableExists(bucketedTableName(root, name))
+    def write(df: DataFrame, root: String, name: String, partitionCols: Seq[String],
+              addDays: Boolean): Unit =
+      graft.sources.TableIO.writeBucketed(df, bucketedTableName(root, name), buckets, byCol,
+        Some(byCol), partitionCols, if (addDays) SaveMode.Append else SaveMode.Overwrite)
+    val rebuildOnTorn = true
   }
 
   /** Manifest key for a stage: the configHash, optionally extended with an
@@ -100,15 +128,21 @@ object Checkpoint {
     if (extraKey.isEmpty) cfg.configHash else s"${cfg.configHash}:$extraKey"
   }
 
+  /** The manifest of a stage whose last write committed; None when the
+    * stage was never built or its storage is torn or gone. */
+  def current(spark: SparkSession, root: String, name: String,
+              layout: Layout = Parquet): Option[Manifest] =
+    readManifest(spark, root, name).filter(_ => layout.committed(spark, root, name))
+
   /** Days already recorded done by `stage` at this configHash — driver-side
     * (day cardinality is tiny: one per crawl day). Empty when no lineage
     * exists yet. */
   private[run] def doneDaySet(spark: SparkSession, root: String, stage: String,
-                              cfg: DedupConfig): Set[java.sql.Timestamp] = {
+                              configHash: String): Set[java.sql.Timestamp] = {
     val linPath = new Path(s"$root/_lineage")
     if (!fs(spark, linPath).exists(linPath)) Set.empty
     else Resume.doneDays(
-        Lineage.read(spark, root).where(col("stage") === stage), cfg.configHash)
+        Lineage.read(spark, root).where(col("stage") === stage), configHash)
       .collect().map(_.getTimestamp(0)).toSet
   }
 
@@ -131,156 +165,97 @@ object Checkpoint {
   }
 
   /**
+   * Run (or resume) one whole stage: if its manifest carries the current
+   * configHash (+ extraKey) and `layout` holds a committed write, read it
+   * back; otherwise compute `build`, write it + manifest + metrics/lineage
+   * rows, and read back (so downstream always consumes the materialized,
+   * lineage-truncated form).
+   */
+  def stage(spark: SparkSession, root: String, name: String, cfg: DedupConfig,
+            runId: String, layout: Layout = Parquet, extraKey: String = "")
+           (build: => DataFrame): DataFrame =
+    gate(spark, root, name, stageKey(cfg, extraKey), runId, layout, None)(_ => build)
+
+  /**
    * Day-incremental stage (K2 at crawl-day granularity — the unit prod
    * Iceberg partitions on, BASELINE.json:15 `days(warc_ts)`): output is
    * partitioned by `warc_day`, and a re-run at the SAME configHash builds
-   * only the input days this stage's lineage has not recorded, appending
+   * only the input days this stage's lineage has not recorded, adding
    * them while prior days' files stay untouched — a new crawl day costs one
    * day's compute, not a corpus recompute. A configHash change still
    * recomputes everything (the resume contract). `input` must carry a
    * non-null `warc_day` column; `build` must preserve it.
    */
   def stageDays(spark: SparkSession, root: String, name: String, cfg: DedupConfig,
-                runId: String)(input: DataFrame)(build: DataFrame => DataFrame): DataFrame = {
-    val dir = s"$root/$name"
+                runId: String, layout: Layout = Parquet)
+               (input: DataFrame)(build: DataFrame => DataFrame): DataFrame = {
     val inDays = dayValues(input) // also validates: nulls are refused loudly
-    val sameCfg = readManifest(spark, root, name).exists(_.configHash == cfg.configHash)
-    if (!sameCfg) {
-      val t0 = System.nanoTime()
-      build(input).write.mode(SaveMode.Overwrite).partitionBy("warc_day").parquet(dir)
-      val out = spark.read.parquet(dir)
-      val rows = out.count()
-      val wallMs = (System.nanoTime() - t0) / 1000000L
-      writeManifest(spark, root, Manifest(name, cfg.configHash, rows, wallMs))
-      Metrics.append(spark, root, runId, name, rows, wallMs, resumed = false)
-      Lineage.append(spark, root, runId, name, cfg.configHash, out)
-      out
-    } else {
-      val pending = (inDays -- doneDaySet(spark, root, name, cfg)).toSeq
-      if (pending.isEmpty) {
-        Metrics.append(spark, root, runId, name,
-          readManifest(spark, root, name).map(_.rowCount).getOrElse(0L), 0L, resumed = true)
-        spark.read.parquet(dir)
-      } else {
-        val t0 = System.nanoTime()
-        // dynamic partition overwrite, NOT append: a run killed between the
-        // data write and the lineage append leaves the day's partition
-        // written but unrecorded — the restart recomputes it, and overwrite
-        // replaces the torn partition instead of double-appending rows
-        build(input.where(col("warc_day").isin(pending: _*)))
-          .write.mode(SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("warc_day").parquet(dir)
-        val out = spark.read.parquet(dir)
-        val appended = out.where(col("warc_day").isin(pending: _*))
-        val newRows = appended.count()
-        val wallMs = (System.nanoTime() - t0) / 1000000L
-        // manifest rowCount is a FULL recount, not previous+new: after a
-        // torn run (crash between manifest write and lineage append) the
-        // restart recomputes the day, and an incremental sum would count it
-        // twice — drifting the docs_rows resume key and metrics. Parquet
-        // footer counts make the recount metadata-cheap.
-        writeManifest(spark, root, Manifest(name, cfg.configHash, out.count(), wallMs))
-        Metrics.append(spark, root, runId, name, newRows, wallMs, resumed = false)
-        Lineage.append(spark, root, runId, name, cfg.configHash, appended)
-        out
-      }
+    gate(spark, root, name, cfg.configHash, runId, layout, Some(inDays)) { pending =>
+      build(pending.fold(input)(ds => input.where(col("warc_day").isin(ds: _*))))
     }
   }
 
-  /** Day-incremental variant of `stageBucketed`: the managed table is
-    * partitioned by `warc_day` ON TOP of the doc_id bucketing (the local
-    * mirror of Iceberg `bucket(n, doc_id) × days(warc_ts)`), so a new crawl
-    * day appends its partition into the table — later doc_id joins stay
-    * Exchange-free AND a day-append re-shingles only the new day.
-    *
-    * Torn-append safety: saveAsTable(Append) into a bucketed table cannot
-    * do dynamic partition overwrite, so a run killed between the data
-    * append and the lineage append leaves a day written but unrecorded.
-    * Such "torn" days (in the table, not in lineage) are detected at entry
-    * and trigger a full rebuild — a rare crash costs one recompute, never
-    * silent row duplication. Prod Iceberg replaces the append with an
-    * atomic REPLACE PARTITIONS commit, which removes the case entirely. */
-  def stageBucketedDays(spark: SparkSession, root: String, name: String, cfg: DedupConfig,
-                        runId: String, buckets: Int, byCol: String)
-                       (input: DataFrame)(build: DataFrame => DataFrame): DataFrame = {
-    val tbl = bucketedTableName(root, name)
-    val inDays = dayValues(input) // also validates: nulls are refused loudly
-    val sameCfg = readManifest(spark, root, name).exists(_.configHash == cfg.configHash) &&
-      spark.catalog.tableExists(tbl)
-    val torn = sameCfg &&
-      (dayValues(spark.table(tbl)) -- doneDaySet(spark, root, name, cfg)).nonEmpty
-    if (!sameCfg || torn) {
-      val t0 = System.nanoTime()
-      graft.sources.TableIO.writeBucketed(build(input), tbl, buckets, byCol,
-        Some(byCol), Seq("warc_day"))
-      val out = spark.table(tbl)
-      val rows = out.count()
-      val wallMs = (System.nanoTime() - t0) / 1000000L
-      writeManifest(spark, root, Manifest(name, cfg.configHash, rows, wallMs))
-      Metrics.append(spark, root, runId, name, rows, wallMs, resumed = false)
-      Lineage.append(spark, root, runId, name, cfg.configHash, out)
-      out
-    } else {
-      val pending = (inDays -- doneDaySet(spark, root, name, cfg)).toSeq
-      if (pending.isEmpty) {
-        Metrics.append(spark, root, runId, name,
-          readManifest(spark, root, name).map(_.rowCount).getOrElse(0L), 0L, resumed = true)
-        spark.table(tbl)
-      } else {
-        val t0 = System.nanoTime()
-        graft.sources.TableIO.writeBucketed(
-          build(input.where(col("warc_day").isin(pending: _*))), tbl, buckets, byCol,
-          Some(byCol), Seq("warc_day"), SaveMode.Append)
-        val out = spark.table(tbl)
-        val appended = out.where(col("warc_day").isin(pending: _*))
-        val newRows = appended.count()
-        val wallMs = (System.nanoTime() - t0) / 1000000L
-        // full recount — same torn-run drift rationale as stageDays
-        writeManifest(spark, root, Manifest(name, cfg.configHash, out.count(), wallMs))
-        Metrics.append(spark, root, runId, name, newRows, wallMs, resumed = false)
-        Lineage.append(spark, root, runId, name, cfg.configHash, appended)
-        out
+  /** The one resume gate. `inDays` is None for a whole stage. `build` gets
+    * the days to add, or None for a full build. */
+  private def gate(spark: SparkSession, root: String, name: String, key: String,
+                   runId: String, layout: Layout, inDays: Option[Set[java.sql.Timestamp]])
+                  (build: Option[Seq[java.sql.Timestamp]] => DataFrame): DataFrame = {
+    val prev = current(spark, root, name, layout).filter(_.configHash == key)
+    // None: full build; Some(days): resume when empty, else add those days
+    val pending: Option[Seq[java.sql.Timestamp]] = prev.flatMap { _ =>
+      inDays.fold(Option(Seq.empty[java.sql.Timestamp])) { in =>
+        val done = doneDaySet(spark, root, name, key)
+        val torn = layout.rebuildOnTorn &&
+          (dayValues(layout.read(spark, root, name)) -- done).nonEmpty
+        if (torn) None else Some((in -- done).toSeq)
       }
+    }
+    if (pending.exists(_.isEmpty)) {
+      Metrics.append(spark, root, runId, Seq(Metrics.Row(name, prev.get.rowCount, 0L, resumed = true)))
+      layout.read(spark, root, name)
+    } else {
+      val t0 = System.nanoTime()
+      layout.write(build(pending), root, name, inDays.map(_ => "warc_day").toSeq,
+        addDays = pending.isDefined)
+      val out = layout.read(spark, root, name)
+      val added = pending.fold(out)(ds => out.where(col("warc_day").isin(ds: _*)))
+      val addedRows = added.count()
+      // manifest rowCount is a FULL recount, not previous+new: after a
+      // torn run (crash between manifest write and lineage append) the
+      // restart recomputes the day, and an incremental sum would count it
+      // twice — drifting the docs_rows resume key and metrics. Parquet
+      // footer counts make the recount metadata-cheap.
+      val rows = if (pending.isEmpty) addedRows else out.count()
+      val wallMs = (System.nanoTime() - t0) / 1000000L
+      commit(spark, root, runId, Some(Manifest(name, key, rows, wallMs)),
+        Seq(Metrics.Row(name, addedRows, wallMs)), Lineage.rows(name, key, added))
+      out
     }
   }
 
-  /**
-   * Run (or resume) one stage: if `<root>/<stage>` carries a manifest with
-   * the current configHash (+ extraKey), read it back; otherwise compute
-   * `build`, write parquet + manifest + metrics/lineage rows, and read back
-   * (so downstream always consumes the materialized, lineage-truncated
-   * form).
-   */
-  def stage(spark: SparkSession, root: String, name: String, cfg: DedupConfig,
-            runId: String, extraKey: String = "")(build: => DataFrame): DataFrame = {
-    val dir = s"$root/$name"
-    val key = stageKey(cfg, extraKey)
-    readManifest(spark, root, name) match {
-      case Some(m) if m.configHash == key =>
-        Metrics.append(spark, root, runId, name, m.rowCount, 0L, resumed = true)
-        spark.read.parquet(dir)
-      case _ =>
-        val t0 = System.nanoTime()
-        val df = build
-        df.write.mode(SaveMode.Overwrite).parquet(dir)
-        val out = spark.read.parquet(dir)
-        val rows = out.count()
-        val wallMs = (System.nanoTime() - t0) / 1000000L
-        writeManifest(spark, root, Manifest(name, key, rows, wallMs))
-        Metrics.append(spark, root, runId, name, rows, wallMs, resumed = false)
-        Lineage.append(spark, root, runId, name, key, out)
-        out
-    }
+  /** A stage's commit point, in this order: its manifest (when it has one
+    * to move), its metrics rows in one append, then its lineage rows. The
+    * manifest precedes lineage: a run killed between them leaves the
+    * build's days unrecorded, so the restart redoes them rather than
+    * trusting unwritten ones. */
+  private[run] def commit(spark: SparkSession, root: String, runId: String,
+                          manifest: Option[Manifest], metrics: Seq[Metrics.Row],
+                          lineage: Seq[Lineage.Row]): Unit = {
+    manifest.foreach(writeManifest(spark, root, _))
+    Metrics.append(spark, root, runId, metrics)
+    Lineage.append(spark, root, runId, lineage)
   }
 }
 
 /** SNK2/K3 — append-only metrics table at `<root>/_metrics`. */
 object Metrics {
-  def append(spark: SparkSession, root: String, runId: String, stageName: String,
-             rowsOut: Long, wallMs: Long, resumed: Boolean): Unit = {
+  final case class Row(stage: String, rowsOut: Long, wallMs: Long, resumed: Boolean = false)
+
+  /** All rows of one commit point in one write. */
+  def append(spark: SparkSession, root: String, runId: String, rows: Seq[Row]): Unit = {
     import spark.implicits._
-    Seq((runId, stageName, rowsOut, wallMs, resumed, java.time.Instant.now().toString))
+    val ts = java.time.Instant.now().toString
+    rows.map(r => (runId, r.stage, r.rowsOut, r.wallMs, r.resumed, ts))
       .toDF("run_id", "stage", "rows_out", "wall_ms", "resumed", "ts")
       .coalesce(1)
       .write.mode(SaveMode.Append).parquet(s"$root/_metrics")
@@ -300,74 +275,57 @@ object Metrics {
   * restarts. Day-less stages fall back to spark_partition_id with a null
   * warc_day, so the schema is uniform across stages. */
 object Lineage {
-  def append(spark: SparkSession, root: String, runId: String, stageName: String,
-             configHash: String, df: DataFrame): Unit = {
-    val hasDay = df.columns.contains("warc_day")
-    if (hasDay) {
-      // per-day counts collected and ranked DRIVER-side: one row per crawl
-      // day (tiny by construction), and the previous dense_rank over an
-      // UNPARTITIONED window funneled the (one-row-per-day) aggregate
-      // through a single global-sort task — the only WindowExec in the
-      // pipeline, gone for free
-      val dayRows = df.groupBy(col("warc_day")).agg(count(lit(1)).as("rows"))
-        .collect()
+  final case class Row(stage: String, inputPartition: Int, warcDay: java.sql.Timestamp,
+                       rows: Long, configHash: String)
+
+  /** The lineage rows of a stage output: one per crawl day, or per spark
+    * partition when it has no `warc_day`. Numbered DRIVER-side (tiny by
+    * construction), so no unpartitioned window funnels them through one
+    * task. */
+  def rows(stage: String, configHash: String, df: DataFrame): Seq[Row] =
+    if (df.columns.contains("warc_day"))
+      days(stage, configHash, df.groupBy(col("warc_day")).agg(count(lit(1))).collect().toSeq
         .map(r => (r.getTimestamp(0), r.getLong(1)))
         // null day (a day-less input routed through a warc_day-carrying
         // schema) sorts first; doneDays ignores null-day rows downstream
-        .sortBy(t => Option(t._1).map(_.getTime).getOrElse(Long.MinValue))
-      appendDays(spark, root, runId, stageName, configHash, dayRows.toSeq)
-    } else {
-      df.groupBy(spark_partition_id().as("input_partition"))
-        .agg(count(lit(1)).as("rows"))
-        .withColumn("warc_day", lit(null).cast("timestamp"))
-        .select(lit(runId).as("run_id"), lit(stageName).as("stage"),
-                col("input_partition"), col("warc_day"), col("rows"),
-                lit(configHash).as("config_hash"), lit("ok").as("status"))
-        .coalesce(1)
-        .write.mode(SaveMode.Append).parquet(s"$root/_lineage")
-    }
-  }
-
-  def read(spark: SparkSession, root: String): DataFrame =
-    spark.read.parquet(s"$root/_lineage")
+        .sortBy(t => Option(t._1).map(_.getTime).getOrElse(Long.MinValue)))
+    else
+      df.groupBy(spark_partition_id()).agg(count(lit(1))).collect().toSeq
+        .map(r => Row(stage, r.getInt(0), null, r.getLong(1), configHash))
+        .sortBy(_.inputPartition)
 
   /** Driver-built day rows for stages whose output is not itself
     * day-stamped row-by-row (the pair table: a pair SPANS days; its
     * generation day is an attribute, not a grouping of output rows).
-    * Marks every listed day done — including zero-row days, which must
+    * Every listed day is marked done — including zero-row days, which must
     * still be recorded or the append gate would reprocess them forever. */
-  def appendDays(spark: SparkSession, root: String, runId: String, stageName: String,
-                 configHash: String,
-                 dayRows: Seq[(java.sql.Timestamp, Long)]): Unit = {
-    import spark.implicits._
-    dayRows.zipWithIndex
-      .map { case ((d, n), i) => (runId, stageName, i + 1, d, n, configHash, "ok") }
-      .toDF("run_id", "stage", "input_partition", "warc_day", "rows",
-            "config_hash", "status")
-      .coalesce(1)
-      .write.mode(SaveMode.Append).parquet(s"$root/_lineage")
-  }
+  def days(stage: String, configHash: String,
+           dayRows: Seq[(java.sql.Timestamp, Long)]): Seq[Row] =
+    dayRows.zipWithIndex.map { case ((d, n), i) => Row(stage, i + 1, d, n, configHash) }
+
+  def append(spark: SparkSession, root: String, runId: String, rows: Seq[Row]): Unit =
+    if (rows.nonEmpty) {
+      import spark.implicits._
+      rows.map(r => (runId, r.stage, r.inputPartition, r.warcDay, r.rows, r.configHash, "ok"))
+        .toDF("run_id", "stage", "input_partition", "warc_day", "rows",
+              "config_hash", "status")
+        .coalesce(1)
+        .write.mode(SaveMode.Append).parquet(s"$root/_lineage")
+    }
+
+  def read(spark: SparkSession, root: String): DataFrame =
+    spark.read.parquet(s"$root/_lineage")
 }
 
-/** K2/J3 — partition-level resume filters: restrict the input scan to
-  * partitions not yet processed at this configHash. Local parquet mirrors
-  * the prod Iceberg layout (`days(warc_ts)` partitioning), so the same
-  * anti-join prunes files there and data-files here. */
+/** K2/J3 — partition-level resume filter: the crawl days already processed
+  * at a configHash, which the day gates subtract from their input days.
+  * Local parquet mirrors the prod Iceberg layout (`days(warc_ts)`
+  * partitioning). */
 object Resume {
-  import org.apache.spark.sql.functions.{col, date_trunc}
-
-  /** Pages not belonging to an already-done crawl day (left anti join —
-    * the op the resume gate uses for partial-partition restarts). */
-  def pendingDays(pages: org.apache.spark.sql.DataFrame,
-                  doneDays: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    pages.withColumn("warc_day", date_trunc("day", col("warc_ts")))
-      .join(doneDays.select(col("warc_day")), Seq("warc_day"), "left_anti")
-      .drop("warc_day")
-
   /** Days recorded done in a lineage table for a config (null warc_day rows
     * — day-less stages — are never "done days"). Feed `Lineage.read(spark,
     * root)` straight in; `Lineage.append` stamps warc_day at write time. */
-  def doneDays(lineage: org.apache.spark.sql.DataFrame, configHash: String): org.apache.spark.sql.DataFrame =
+  def doneDays(lineage: DataFrame, configHash: String): DataFrame =
     lineage.where(col("config_hash") === configHash && col("status") === "ok"
                     && col("warc_day").isNotNull)
       .select(col("warc_day")).distinct()

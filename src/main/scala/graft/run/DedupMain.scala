@@ -3,7 +3,6 @@ package graft.run
 import graft.DedupConfig
 import graft.functions.Fns
 import graft.operators.{ConnectedComponents, ExactSubstr, LocalCheckpoints, Lsh, PairPlan}
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -16,8 +15,12 @@ import org.apache.spark.sql.functions._
  * Stages materialize to `<outRoot>/<stage>` via the Checkpoint resume gate:
  * a killed run restarted with the same config skips every completed stage;
  * any config change (different configHash) recomputes from the first
- * affected stage. Metrics and per-partition lineage append under
- * `<outRoot>/_metrics` / `_lineage`.
+ * affected stage; a different day-less input at the same root too.
+ * Checkpoint alone commits, detects torn and resumes stages; this object
+ * keeps its own decisions: each stage's layout, the dup_pairs resume /
+ * day-append / full-build choice (shard hysteresis, seed refresh) and the
+ * pairs' generation-day partitioning. Metrics and per-partition lineage
+ * append under `<outRoot>/_metrics` / `_lineage`.
  *
  * Accepts either the canonical pages shape (url, warc_ts, html, text,
  * lang) — extracting text with E1 where null and deriving doc_id =
@@ -80,10 +83,6 @@ object DedupMain {
     }
   }
 
-  private def md5(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-
   /** The full pipeline, stage-checkpointed under `root`. Returns clusters.
     *
     * `keepBest` (CLI arg `keepBest=<sql-expr>`) additionally materializes
@@ -97,9 +96,6 @@ object DedupMain {
   def run(spark: SparkSession, inputRef: String, root: String, cfg: DedupConfig,
           runId: String = java.util.UUID.randomUUID().toString,
           keepBest: Option[String] = None): DataFrame = {
-    def stage(name: String)(build: => DataFrame): DataFrame =
-      Checkpoint.stage(spark, root, name, cfg, runId)(build)
-
     // durable RDD checkpoints (CC iteration snapshots) live under the run
     // root — same filesystem as the stage outputs, survives executor loss
     if (spark.sparkContext.getCheckpointDir.isEmpty)
@@ -110,8 +106,14 @@ object DedupMain {
     // inputs that carry warc_ts go through the day-incremental stages — a
     // day-append run recomputes docs/shingles/signatures for the NEW days
     // only and appends their partitions; day-less document tables keep the
-    // whole-stage gate
+    // whole-stage gate, keyed by the input's identity: its ref and file
+    // list (a listing, no data scan), so another input at the same root
+    // recomputes instead of resuming the old input's stages
     val dayGranular = raw.columns.contains("warc_ts")
+    val rawKey = s"input=${Checkpoint.md5((inputRef +: raw.inputFiles.sorted).mkString("\n"))}"
+    def stage(name: String, layout: Checkpoint.Layout = Checkpoint.Parquet, extraKey: String = rawKey)
+             (build: => DataFrame): DataFrame =
+      Checkpoint.stage(spark, root, name, cfg, runId, layout, extraKey)(build)
     val docs =
       if (dayGranular)
         Checkpoint.stageDays(spark, root, "docs", cfg, runId)(toDocs(raw))(identity)
@@ -120,18 +122,15 @@ object DedupMain {
     // incremental re-run) re-joins on doc_id — bucketing them by doc_id
     // makes those joins Exchange-free on this (heavy) side
     val buckets = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    def stageBucketed(name: String)(build: => DataFrame): DataFrame =
-      Checkpoint.stageBucketed(spark, root, name, cfg, runId, buckets, "doc_id")(build)
-    def stageBucketedDays(name: String)(build: DataFrame => DataFrame): DataFrame =
-      Checkpoint.stageBucketedDays(spark, root, name, cfg, runId, buckets, "doc_id")(docs)(build)
+    val byDocId = Checkpoint.Bucketed(buckets, "doc_id")
     val shingled =
-      if (dayGranular) stageBucketedDays("shingled") { d =>
+      if (dayGranular) Checkpoint.stageDays(spark, root, "shingled", cfg, runId, byDocId)(docs) { d =>
         d.select(col("doc_id"), Fns.shingleHashes(col("text"), cfg).as("shingles"),
                  col("warc_day"))
       }
-      else stageBucketed("shingled") { Lsh.shingled(docs, cfg) }
+      else stage("shingled", byDocId) { Lsh.shingled(docs, cfg) }
     val signatures =
-      if (dayGranular) stageBucketedDays("signatures") { d =>
+      if (dayGranular) Checkpoint.stageDays(spark, root, "signatures", cfg, runId, byDocId)(docs) { d =>
         // one pass over the pending days' docs computes both fingerprints
         // (same expression composition as the batch/streaming paths)
         d.select(col("doc_id"),
@@ -139,15 +138,16 @@ object DedupMain {
                  Fns.simhash64(col("text"), cfg).as("simhash"),
                  col("warc_day"))
       }
-      else stageBucketed("signatures") {
+      else stage("signatures", byDocId) {
         Lsh.signatures(shingled, cfg)
           .join(Lsh.simhashes(docs, cfg), "doc_id")
       }
     // the global stages below consume ALL days — a day-append changes their
     // input, which the configHash alone cannot see: fold the docs row count
-    // into their resume keys so stale reuse is impossible
+    // into their resume keys so stale reuse is impossible (a day-less input
+    // is named by rawKey already)
     val docsRows = Checkpoint.readManifest(spark, root, "docs").map(_.rowCount).getOrElse(-1L)
-    val inputKey = s"docs_rows=$docsRows"
+    val inputKey = if (dayGranular) s"docs_rows=$docsRows" else rawKey
 
     /** Raw (unsalted) per-doc band keys for BOTH banded families — the
       * persisted band_keys stage's content: (doc_id, key, family, simhash
@@ -183,8 +183,8 @@ object DedupMain {
     // partition-pruned scan of this stage and only pending days are banded.
     val bandKeysDay: Option[DataFrame] =
       if (dayGranular)
-        Some(Checkpoint.stageBucketedDays(spark, root, "band_keys", cfg, runId,
-            buckets, "key")(signatures) { sigs =>
+        Some(Checkpoint.stageDays(spark, root, "band_keys", cfg, runId,
+            Checkpoint.Bucketed(buckets, "key"))(signatures) { sigs =>
           // align writer tasks with the bucket spec: one file per bucket
           // per day, not one per task per bucket
           rawBandKeys(sigs).repartition(buckets, col("key"))
@@ -204,7 +204,13 @@ object DedupMain {
     val substrKey = s"$inputKey;substr_shards=$substrShards"
     val dupKey = Checkpoint.stageKey(cfg, substrKey)
     val dupDir = s"$root/dup_pairs"
-    val prevDup = Checkpoint.readManifest(spark, root, "dup_pairs")
+    // the last COMMITTED pair store: a full Overwrite that crashed mid-write
+    // leaves a partial dir while OLDER per-day lineage (same bare
+    // configHash) survives — resuming or appending onto it would silently
+    // lose the old days' pairs. `_SUCCESS` only exists after a completed job
+    // commit (a torn per-day dynamic overwrite keeps the previous commit's
+    // marker AND its partial files invisible in _temporary).
+    val prevDup = Checkpoint.current(spark, root, "dup_pairs")
     // the loud-cap counter sink of the full build (one slot per family)
     val counters = PairPlan.Counters(
       spark.sparkContext.longAccumulator("minhash_lane_suppressed_pairs"),
@@ -223,44 +229,57 @@ object DedupMain {
       // read) — folding the format into the resume key makes an old-format
       // root recompute instead of failing on the changed schema.
       val rawKeys = bandKeysDay.getOrElse(
-        Checkpoint.stage(spark, root, "band_keys", cfg, runId,
-          s"$inputKey;fmt=2")(rawBandKeys(signatures)))
+        stage("band_keys", extraKey = s"$inputKey;fmt=2")(rawBandKeys(signatures)))
       def keys(fam: String) = rawKeys.where(col("family") === fam)
-      Seq("minhash", "simhash").foreach { fam =>
-        Metrics.append(spark, root, runId, s"salted_drop_est_$fam",
-          Lsh.saltedDropEstimate(keys(fam), cfg), 0L, resumed = false)
-      }
+      Metrics.append(spark, root, runId, Seq("minhash", "simhash").map { fam =>
+        Metrics.Row(s"salted_drop_est_$fam", Lsh.saltedDropEstimate(keys(fam), cfg), 0L)
+      })
       PairPlan.allVsAll(keys("minhash"), keys("simhash"), shingled,
         signatures.select("doc_id", "simhash"), cfg,
         Some(ExactSubstr.substrDupPairs(docs, cfg, Some(substrShards), _)), Some(counters))
     }
-    def pairMetricsAfterBuild(): Unit = {
-      Metrics.append(spark, root, runId, "substr_shards", substrShards.toLong, 0L, resumed = false)
-      Metrics.append(spark, root, runId, "substr_starcap_dropped_pairs",
-        counters.substr.value, 0L, resumed = false)
+    def pairMetricsAfterBuild(): Unit = Metrics.append(spark, root, runId, Seq(
+      Metrics.Row("substr_shards", substrShards.toLong, 0L),
+      Metrics.Row("substr_starcap_dropped_pairs", counters.substr.value, 0L),
       // exact (task-counted) redundant-for-connectivity verified pairs the
       // simhash forest suppressed — loud cap, never silent
-      Metrics.append(spark, root, runId, "simhash_starcap_suppressed_pairs",
-        counters.simhash.value, 0L, resumed = false)
+      Metrics.Row("simhash_starcap_suppressed_pairs", counters.simhash.value, 0L),
       // minhash hot lanes: pairs skipped as already-connected through
       // verified edges (upper bound on redundant verified pairs) — loud
-      Metrics.append(spark, root, runId, "minhash_lane_suppressed_pairs",
-        counters.minhash.value, 0L, resumed = false)
-    }
+      Metrics.Row("minhash_lane_suppressed_pairs", counters.minhash.value, 0L)))
 
     val inDays: Seq[java.sql.Timestamp] =
       if (dayGranular)
         docs.select("warc_day").distinct().collect()
           .map(_.getTimestamp(0)).toSeq.sortBy(_.getTime)
       else Seq.empty
+    // The clusters manifest key encodes WHICH pair-days its snapshot covers.
+    // raw epoch MILLIS per day, not /86400000: the division assumes UTC
+    // midnights, and a non-UTC session's local midnights would truncate
+    // to the wrong day — the incremental branch would then silently
+    // never trigger (the parse could not reconstruct the real
+    // timestamps). Raw millis round-trip identically in any timezone.
+    def dayListKey(days: Seq[java.sql.Timestamp]): String =
+      "pair_days=" + days.map(_.getTime).sorted.mkString("+")
+    // pair-days of the last committed clusters snapshot of this config's day
+    // path; None without one (a clusters Overwrite that crashed mid-write
+    // leaves no _SUCCESS — reading the partial dir as the previous
+    // assignment would silently drop components)
+    val prevCovered: Option[Set[java.sql.Timestamp]] = {
+      val prefix = Checkpoint.stageKey(cfg, dayListKey(Nil))
+      Checkpoint.current(spark, root, "clusters").map(_.configHash)
+        .filter(_.startsWith(prefix))
+        .map(_.stripPrefix(prefix).split("\\+").filter(_.nonEmpty)
+          .map(s => new java.sql.Timestamp(s.toLong)).toSet)
+    }
 
     val dupPairs: DataFrame =
       if (!dayGranular) {
-        // day-less inputs keep the whole-stage gate: any input change
-        // (docs_rows / shard count in the key) recomputes from scratch
+        // day-less inputs keep the whole-stage gate: a different input
+        // (rawKey in the key) or shard count recomputes from scratch
         var built: Option[PairPlan.Plan] = None
         val out = PairPlan.labelled(spark, PairPlan.VerifyUnion) {
-          Checkpoint.stage(spark, root, "dup_pairs", cfg, runId, substrKey) {
+          stage("dup_pairs", extraKey = substrKey) {
             val plan = buildAllPairs()
             built = Some(plan)
             plan.pairs
@@ -282,7 +301,7 @@ object DedupMain {
         //     discipline, ported);
         //  3. otherwise (first build / config change / shrunk input) →
         //     full build.
-        val doneDays = Checkpoint.doneDaySet(spark, root, "dup_pairs", cfg)
+        val doneDays = Checkpoint.doneDaySet(spark, root, "dup_pairs", cfg.configHash)
         val pending = inDays.filterNot(doneDays.contains)
         // previous state at the SAME config: (docs_rows, substr_shards) it
         // was built at. The shard count is PINNED across appends (shard
@@ -300,33 +319,18 @@ object DedupMain {
         val prevShards = prevKeyInfo.map(_._2)
         val shardsFit = prevShards.exists(s =>
           totalTextBytes <= 2L * s * ExactSubstr.TargetShardBytes)
-        // torn-dir gate: a state-3 full Overwrite that crashed mid-write
-        // leaves a partial dup_pairs dir while OLDER per-day lineage (same
-        // bare configHash) survives — appending onto it would silently
-        // lose the old days' pairs. _SUCCESS only exists after a completed
-        // job commit (a torn per-day dynamic overwrite keeps the previous
-        // commit's marker AND its partial files invisible in _temporary),
-        // so requiring it forces the full rebuild exactly when needed.
-        val fsForDir = new Path(dupDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val dupDirCommitted = fsForDir.exists(new Path(s"$dupDir/_SUCCESS"))
         if (prevKeyInfo.exists(_._1 == docsRows)) {
-          Metrics.append(spark, root, runId, "dup_pairs",
-            prevDup.get.rowCount, 0L, resumed = true)
+          Metrics.append(spark, root, runId,
+            Seq(Metrics.Row("dup_pairs", prevDup.get.rowCount, 0L, resumed = true)))
           spark.read.parquet(dupDir)
-        } else if (prevKeyInfo.isDefined && shardsFit && dupDirCommitted &&
+        } else if (prevKeyInfo.isDefined && shardsFit &&
                    doneDays.nonEmpty && doneDays.subsetOf(inDays.toSet)) {
           val t0 = System.nanoTime()
           // previous cluster assignment = the lane operators' union-find
           // seed (sound merge-emit; see Lsh.seedUnion). Read lazily — the
           // clusters stage only overwrites this dir AFTER the append loop.
-          val clustersSeed: Option[DataFrame] = {
-            val cp = new Path(s"$root/clusters/_SUCCESS")
-            if (cp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(cp) &&
-                Checkpoint.readManifest(spark, root, "clusters")
-                  .exists(_.configHash.startsWith(cfg.configHash)))
-              Some(spark.read.parquet(s"$root/clusters").select("doc_id", "cluster_id"))
-            else None
-          }
+          val clustersSeed: Option[DataFrame] = prevCovered.map(_ =>
+            spark.read.parquet(s"$root/clusters").select("doc_id", "cluster_id"))
           var ctx = inDays.filter(doneDays.contains)
           // The lane seed is REFRESHED with an incremental-CC pass so it
           // covers EVERY pair emitted so far — day d+1's seeded lanes then
@@ -357,17 +361,9 @@ object DedupMain {
           // partitions and died BEFORE its clusters rebuild — the committed
           // snapshot then does not cover those done days' pairs, and
           // seeding from it alone would let the first pending day re-emit
-          // their links. The clusters manifest records which pair-days its
-          // snapshot covers (dayListKey); refresh over the done days it
-          // misses (all of them when no usable snapshot exists).
-          val seedCovered: Set[java.sql.Timestamp] =
-            if (clustersSeed.isEmpty) Set.empty
-            else Checkpoint.readManifest(spark, root, "clusters").map(_.configHash)
-              .filter(_.startsWith(s"${cfg.configHash}:pair_days="))
-              .map(_.split("pair_days=")(1).split("\\+").filter(_.nonEmpty)
-                .map(s => new java.sql.Timestamp(s.toLong)).toSet)
-              .getOrElse(Set.empty)
-          refreshSeed(ctx.filterNot(seedCovered.contains))
+          // their links. Refresh over the done days it misses (all of them
+          // when no usable snapshot exists).
+          refreshSeed(ctx.filterNot(prevCovered.getOrElse(Set.empty).contains))
           pending.zipWithIndex.foreach { case (d, i) =>
             appendDayPairs(spark, root, runId, cfg, docs, shingled, signatures,
               bandKeysDay.get, seed, ctx, d, prevShards.get)
@@ -378,51 +374,47 @@ object DedupMain {
           seedCkpt.foreach(LocalCheckpoints.release)
           val out = spark.read.parquet(dupDir)
           val wallMs = (System.nanoTime() - t0) / 1000000L
-          Checkpoint.writeManifest(spark, root, Checkpoint.Manifest("dup_pairs",
-            Checkpoint.stageKey(cfg, s"$inputKey;substr_shards=${prevShards.get}"),
-            out.count(), wallMs))
-          Metrics.append(spark, root, runId, "dup_pairs_incremental_days",
-            pending.size.toLong, wallMs, resumed = false)
+          Checkpoint.commit(spark, root, runId, Some(Checkpoint.Manifest("dup_pairs",
+              Checkpoint.stageKey(cfg, s"$inputKey;substr_shards=${prevShards.get}"),
+              out.count(), wallMs)),
+            Seq(Metrics.Row("dup_pairs_incremental_days", pending.size.toLong, wallMs)), Nil)
           out
         } else {
           val t0 = System.nanoTime()
           val dd = docs.select(col("doc_id"), col("warc_day"))
           val plan = buildAllPairs()
-          plan.materialize {
-            _.join(dd.select(col("doc_id").as("a"), col("warc_day").as("da")), "a")
+          plan.materialize { pairs =>
+            Checkpoint.Parquet.write(pairs
+              .join(dd.select(col("doc_id").as("a"), col("warc_day").as("da")), "a")
               .join(dd.select(col("doc_id").as("b"), col("warc_day").as("db")), "b")
               .withColumn("warc_day", greatest(col("da"), col("db")))
-              .select("a", "b", "family", "warc_day")
-              .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-              .partitionBy("warc_day").parquet(dupDir)
+              .select("a", "b", "family", "warc_day"), root, "dup_pairs", Seq("warc_day"), addDays = false)
           }
           plan.release()
           val out = spark.read.parquet(dupDir)
           val rows = out.count()
           val wallMs = (System.nanoTime() - t0) / 1000000L
-          Checkpoint.writeManifest(spark, root,
-            Checkpoint.Manifest("dup_pairs", dupKey, rows, wallMs))
-          Metrics.append(spark, root, runId, "dup_pairs", rows, wallMs, resumed = false)
           // every input day is now covered — zero-pair days included, or
           // the append gate would reprocess them forever
           val perDay = out.groupBy("warc_day").count().collect()
             .map(r => r.getTimestamp(0) -> r.getLong(1)).toMap
-          Lineage.appendDays(spark, root, runId, "dup_pairs", cfg.configHash,
-            inDays.map(d => d -> perDay.getOrElse(d, 0L)))
+          Checkpoint.commit(spark, root, runId,
+            Some(Checkpoint.Manifest("dup_pairs", dupKey, rows, wallMs)),
+            Seq(Metrics.Row("dup_pairs", rows, wallMs)),
+            Lineage.days("dup_pairs", cfg.configHash, inDays.map(d => d -> perDay.getOrElse(d, 0L))))
           pairMetricsAfterBuild()
           out
         }
       }
 
     val clustersOut = if (!dayGranular) {
-      Checkpoint.stage(spark, root, "clusters", cfg, runId, inputKey) {
+      stage("clusters") {
         ConnectedComponents.clusters(
           ConnectedComponents.assign(dupPairs.select("a", "b")))
       }
     } else {
-      // Clusters manifest key encodes WHICH pair-days the snapshot covers:
-      // an append run finds its predecessor covering a strict subset and
-      // rebuilds incrementally — CC over the previous assignment's
+      // An append run finds its predecessor covering a strict subset of the
+      // pair-days and rebuilds incrementally — CC over the previous assignment's
       // contracted star edges (cluster_id IS a member doc_id, so those
       // rows span every prior component) ∪ only the NEW days' pairs. Cost
       // per append: O(clusters + new pairs), not O(total pair history) —
@@ -430,26 +422,7 @@ object DedupMain {
       // crashed predecessor (pairs appended, clusters stale) parses as a
       // smaller covered set and still rebuilds from exactly the missing
       // days' pairs.
-      // raw epoch MILLIS per day, not /86400000: the division assumes UTC
-      // midnights, and a non-UTC session's local midnights would truncate
-      // to the wrong day — the incremental branch would then silently
-      // never trigger (the parse could not reconstruct the real
-      // timestamps). Raw millis round-trip identically in any timezone.
-      def dayListKey(days: Seq[java.sql.Timestamp]): String =
-        "pair_days=" + days.map(_.getTime).sorted.mkString("+")
-      // torn-dir gate, same rationale as dup_pairs: a clusters Overwrite
-      // that crashed mid-write leaves no _SUCCESS — reading the partial
-      // dir as the previous assignment would silently drop components
-      val clustersCommitted = new Path(s"$root/clusters/_SUCCESS")
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(new Path(s"$root/clusters/_SUCCESS"))
-      val prevCovered: Option[Set[java.sql.Timestamp]] =
-        Checkpoint.readManifest(spark, root, "clusters").map(_.configHash)
-          .filter(_ => clustersCommitted)
-          .filter(_.startsWith(s"${cfg.configHash}:pair_days="))
-          .map(_.split("pair_days=")(1).split("\\+").filter(_.nonEmpty)
-            .map(s => new java.sql.Timestamp(s.toLong)).toSet)
-      Checkpoint.stage(spark, root, "clusters", cfg, runId, dayListKey(inDays)) {
+      stage("clusters", extraKey = dayListKey(inDays)) {
         prevCovered match {
           case Some(cov) if cov.nonEmpty && cov.subsetOf(inDays.toSet) =>
             // eager: the stage write overwrites the dir being read
@@ -475,8 +448,8 @@ object DedupMain {
       // break the flat-JSON manifest parser)
       val clusterKey = Checkpoint.readManifest(spark, root, "clusters")
         .map(_.configHash).getOrElse("")
-      Checkpoint.stage(spark, root, "deduped", cfg, runId,
-        s"clusters=${md5(clusterKey)};score=${md5(scoreExpr)}") {
+      stage("deduped",
+        extraKey = s"clusters=${Checkpoint.md5(clusterKey)};score=${Checkpoint.md5(scoreExpr)}") {
         graft.Dedup.keepBest(docs,
           clustersOut.select("doc_id", "cluster_id"), expr(scoreExpr))
       }
@@ -538,19 +511,15 @@ object DedupMain {
       Some(ExactSubstr.substrDupPairsIncremental(
         docs.where(isNew), docs.where(isOld), cfg, substrShards, _)),
       Some(PairPlan.Counters(daySuppressed, daySuppressed, daySuppressed)))
-    plan.materialize {
-      _.withColumn("warc_day", lit(d))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("warc_day").parquet(s"$root/dup_pairs")
-    }
+    plan.materialize { pairs => Checkpoint.Parquet.write(pairs.withColumn("warc_day", lit(d)),
+      root, "dup_pairs", Seq("warc_day"), addDays = true) }
     plan.release()
     val n = spark.read.parquet(s"$root/dup_pairs").where(isNew).count()
     val wallMs = (System.nanoTime() - t0) / 1000000L
-    Metrics.append(spark, root, runId, "dup_pairs_day", n, wallMs, resumed = false)
-    Metrics.append(spark, root, runId, "append_suppressed_pairs_day",
-      daySuppressed.value, 0L, resumed = false)
-    Lineage.appendDays(spark, root, runId, "dup_pairs", cfg.configHash, Seq(d -> n))
+    Checkpoint.commit(spark, root, runId, None,
+      Seq(Metrics.Row("dup_pairs_day", n, wallMs),
+          Metrics.Row("append_suppressed_pairs_day", daySuppressed.value, 0L)),
+      Lineage.days("dup_pairs", cfg.configHash, Seq(d -> n)))
   }
 
   def main(args: Array[String]): Unit = {

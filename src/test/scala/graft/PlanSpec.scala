@@ -85,8 +85,8 @@ class PlanSpec extends SparkSuite {
         timestamp_seconds(unix_timestamp(col("warc_ts")) +
           pmod(xxhash64(col("url")), lit(2)) * 86400L))
     val docs = graft.run.DedupMain.toDocs(pages)
-    graft.run.Checkpoint.stageBucketedDays(
-      spark, root, "docs_p", cfg, "r1", 4, "doc_id")(docs)(identity)
+    graft.run.Checkpoint.stageDays(spark, root, "docs_p", cfg, "r1",
+      graft.run.Checkpoint.Bucketed(4, "doc_id"))(docs)(identity)
     val tbl = graft.run.Checkpoint.bucketedTableName(root, "docs_p")
     val day = docs.select(col("warc_day").as("d"))
       .distinct().orderBy("d").as[java.sql.Timestamp].head()

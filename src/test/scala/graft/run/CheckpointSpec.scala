@@ -66,6 +66,57 @@ class CheckpointSpec extends SparkSuite {
       "run2 must resume every stage")
   }
 
+  test("a bucketed stage whose table was dropped rebuilds despite its manifest") {
+    val root = tmpRoot()
+    val evals = spark.sparkContext.longAccumulator("evalsDropped")
+    def build = PagesGen.docs(spark, 30, cfg).toDF()
+      .map { r => evals.add(1); r.getLong(0) }.toDF("doc_id")
+    Checkpoint.stage(spark, root, "sb", cfg, "r1", Checkpoint.Bucketed(4, "doc_id"))(build)
+    val v1 = evals.value.longValue
+    spark.sql(s"DROP TABLE ${Checkpoint.bucketedTableName(root, "sb")}")
+    assert(Checkpoint.readManifest(spark, root, "sb").exists(_.configHash == cfg.configHash))
+    val again = Checkpoint.stage(spark, root, "sb", cfg, "r2", Checkpoint.Bucketed(4, "doc_id"))(build)
+    assert(evals.value.longValue > v1, "a missing table must be rebuilt, not resumed")
+    assert(again.count() === 30)
+    assert(Metrics.read(spark, root)
+      .where(col("run_id") === "r2" && col("stage") === "sb" && !col("resumed")).count() === 1)
+  }
+
+  test("a parquet stage whose write never committed rebuilds despite its manifest") {
+    val root = tmpRoot()
+    val evals = spark.sparkContext.longAccumulator("evalsTorn")
+    def build = PagesGen.docs(spark, 30, cfg).toDF()
+      .map { r => evals.add(1); r.getLong(0) }.toDF("doc_id")
+    Checkpoint.stage(spark, root, "sp", cfg, "r1")(build)
+    val v1 = evals.value.longValue
+    // an Overwrite killed mid-write leaves no _SUCCESS marker
+    assert(new java.io.File(s"$root/sp/_SUCCESS").delete())
+    val again = Checkpoint.stage(spark, root, "sp", cfg, "r2")(build)
+    assert(evals.value.longValue > v1, "a torn parquet stage must be rebuilt, not resumed")
+    assert(again.count() === 30)
+  }
+
+  test("a different day-less input at the same root recomputes, then resumes") {
+    // same row count, different documents: neither the configHash nor the
+    // docs row count tells the two inputs apart
+    val inA = tmpRoot() + "/a.parquet"
+    val inB = tmpRoot() + "/b.parquet"
+    PagesGen.docs(spark, 200, cfg).toDF().write.parquet(inA)
+    PagesGen.docs(spark, 200, cfg).toDF()
+      .withColumn("doc_id", col("doc_id") + 1000L).write.parquet(inB)
+    val root = tmpRoot()
+    DedupMain.run(spark, inA, root, cfg, "a").count()
+    val onB = DedupMain.run(spark, inB, root, cfg, "b")
+      .select("doc_id", "cluster_id").as[(Long, Long)].collect().toSet
+    val fresh = DedupMain.run(spark, inB, tmpRoot(), cfg, "fresh")
+      .select("doc_id", "cluster_id").as[(Long, Long)].collect().toSet
+    assert(onB === fresh, "input B at A's root must cluster B, not resume A's stages")
+    DedupMain.run(spark, inB, root, cfg, "b2").count()
+    assert(Metrics.read(spark, root)
+      .where(col("run_id") === "b2" && !col("resumed")).count() === 0,
+      "a rerun on the same input must resume every stage")
+  }
+
   test("pages-shaped input: doc_id from url, E1 extraction when text null") {
     val pages = PagesGen.pages(spark, 40, cfg).toDF()
     val docs = DedupMain.toDocs(pages)

@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
 
 /**
  * J3/K2/SNK3 end-to-end: day-level resume through the REAL composition —
- * Checkpoint.stage → Lineage.read → Resume.doneDays → Resume.pendingDays —
- * with no hand-built lineage DataFrame. Simulates a kill after 2 of 3 crawl
- * days were processed and asserts the restart recomputes only day 3.
+ * Checkpoint.stageDays → Lineage → Resume.doneDays — with no hand-built
+ * lineage DataFrame: a kill after 2 of 3 crawl days, torn day writes in
+ * both stage layouts, and DedupMain day appends.
  */
 class DayResumeSpec extends SparkSuite {
   import spark.implicits._
@@ -17,30 +17,42 @@ class DayResumeSpec extends SparkSuite {
   private def tmpRoot(): String =
     java.nio.file.Files.createTempDirectory("graft-dayresume").toString
 
-  test("kill after 2 of 3 days: restart processes exactly the third day") {
-    // spread the generator's single-day corpus across 3 synthetic days
-    val pages = PagesGen.pages(spark, 120, cfg).toDF()
+  /** 120 pages spread over 3 crawl days, as docs, and the sorted days. */
+  private def threeDayDocs() = {
+    val docs = DedupMain.toDocs(PagesGen.pages(spark, 120, cfg).toDF()
       .withColumn("warc_ts",
         timestamp_seconds(unix_timestamp(col("warc_ts")) +
-          pmod(xxhash64(col("url")), lit(3)) * 86400L))
-    val days = pages.select(date_trunc("day", col("warc_ts")).as("d"))
-      .distinct().orderBy("d").collect().map(_.getTimestamp(0))
+          pmod(xxhash64(col("url")), lit(3)) * 86400L)))
+    val days = docs.select("warc_day").distinct().orderBy("warc_day")
+      .as[java.sql.Timestamp].collect()
     assert(days.length === 3)
+    (docs, days)
+  }
 
+  private def lineageDays(root: String, stage: String, runId: String) =
+    Lineage.read(spark, root).where(col("stage") === stage && col("run_id") === runId)
+      .select("warc_day").distinct().as[java.sql.Timestamp].collect().toSet
+
+  test("kill after 2 of 3 days: restart processes exactly the third day") {
+    val (docs, days) = threeDayDocs()
     // ---- first (killed) run: only days 1-2 reach the docs stage
     val root = tmpRoot()
-    val firstTwo = pages.where(date_trunc("day", col("warc_ts")) < lit(days(2)))
-    Checkpoint.stage(spark, root, "docs", cfg, "run1")(DedupMain.toDocs(firstTwo))
+    Checkpoint.stageDays(spark, root, "docs", cfg, "run1")(
+      docs.where(col("warc_day") < lit(days(2))))(identity)
 
-    // ---- restart: done days come from the lineage table as written
+    // ---- restart on all three days: done days come from the lineage table as written
     val done = Resume.doneDays(Lineage.read(spark, root), cfg.configHash)
     assert(done.as[java.sql.Timestamp].collect().toSet === days.take(2).toSet)
-
-    val pending = Resume.pendingDays(pages, done)
-    val day3Expected = pages.where(date_trunc("day", col("warc_ts")) === lit(days(2)))
-    assert(pending.count() === day3Expected.count())
-    assert(pending.select(date_trunc("day", col("warc_ts")))
-      .distinct().as[java.sql.Timestamp].collect().toSeq === Seq(days(2)))
+    var restartInput: org.apache.spark.sql.DataFrame = null
+    val out = Checkpoint.stageDays(spark, root, "docs", cfg, "run2")(docs) { d =>
+      restartInput = d
+      d
+    }
+    assert(restartInput.select("warc_day").distinct()
+      .as[java.sql.Timestamp].collect().toSeq === Seq(days(2)))
+    assert(lineageDays(root, "docs", "run2") === Set(days(2)))
+    assert(out.count() === 120)
+    assert(out.select("doc_id").distinct().count() === 120, "the stage holds each row once")
 
     // a different configHash must see NO done days (full recompute)
     val other = Resume.doneDays(Lineage.read(spark, root), cfg.copy(k = 5).configHash)
@@ -324,6 +336,41 @@ class DayResumeSpec extends SparkSuite {
     assert(Metrics.read(spark, root)
       .where(col("run_id") === "rerun" && col("stage") === "deduped" && col("resumed"))
       .count() === 1, "no-change rerun must resume the deduped stage")
+  }
+
+  test("torn bucketed day stage: a day in the table but not in lineage rebuilds in full") {
+    val (docs, days) = threeDayDocs()
+    val root = tmpRoot()
+    val tbl = Checkpoint.bucketedTableName(root, "shingled")
+    val byDocId = Checkpoint.Bucketed(4, "doc_id")
+    Checkpoint.stageDays(spark, root, "shingled", cfg, "run1", byDocId)(
+      docs.where(col("warc_day") < lit(days(2))))(identity)
+    // a killed run appended day 3 to the table and died before its lineage row
+    graft.sources.TableIO.writeBucketed(docs.where(col("warc_day") === lit(days(2))),
+      tbl, 4, "doc_id", Some("doc_id"), Seq("warc_day"), org.apache.spark.sql.SaveMode.Append)
+    Checkpoint.stageDays(spark, root, "shingled", cfg, "run2", byDocId)(docs)(identity)
+    assert(spark.table(tbl).count() === 120)
+    assert(spark.table(tbl).select("doc_id").distinct().count() === 120,
+      "each day must be in the table once")
+    assert(lineageDays(root, "shingled", "run2") === days.toSet, "the restart must rebuild in full")
+    assert(Metrics.read(spark, root)
+      .where(col("run_id") === "run2" && col("stage") === "shingled" && !col("resumed"))
+      .select("rows_out").as[Long].collect().toSeq === Seq(120L))
+  }
+
+  test("torn parquet day stage: a day written without its lineage row is overwritten") {
+    val (docs, days) = threeDayDocs()
+    val root = tmpRoot()
+    Checkpoint.stageDays(spark, root, "docs", cfg, "run1")(
+      docs.where(col("warc_day") < lit(days(2))))(identity)
+    // a killed run wrote day 3's partition and died before its lineage row
+    docs.where(col("warc_day") === lit(days(2))).write
+      .mode(org.apache.spark.sql.SaveMode.Append).partitionBy("warc_day").parquet(s"$root/docs")
+    Checkpoint.stageDays(spark, root, "docs", cfg, "run2")(docs)(identity)
+    val out = spark.read.parquet(s"$root/docs")
+    assert(out.count() === 120)
+    assert(out.select("doc_id").distinct().count() === 120, "the torn day must not double")
+    assert(lineageDays(root, "docs", "run2") === Set(days(2)), "only the unrecorded day reruns")
   }
 
   test("day-incremental stages refuse null warc_day rows loudly") {

@@ -1,29 +1,10 @@
 package graft.run
 
 import graft.{DedupConfig, SparkSuite}
-import graft.sources.PagesGen
-import org.apache.spark.sql.functions._
 
 class ResumeSpec extends SparkSuite {
   import spark.implicits._
   private val cfg = DedupConfig.test
-
-  test("pendingDays anti-join drops exactly the done crawl days") {
-    val pages = PagesGen.pages(spark, 100, cfg).toDF()
-    // generator spaces warc_ts by 1s from 2024-01-01; all in one day —
-    // spread them across 3 synthetic days for the test
-    val spread = pages.withColumn("warc_ts",
-      timestamp_seconds(unix_timestamp(col("warc_ts")) +
-        (xxhash64(col("url")) % 3) * 86400L))
-    val days = spread.select(date_trunc("day", col("warc_ts")).as("warc_day"))
-      .distinct().orderBy("warc_day").collect().map(_.getTimestamp(0))
-    assert(days.length >= 2)
-    val done = Seq(days.head).toDF("warc_day")
-    val pending = Resume.pendingDays(spread, done)
-    val expected = spread.where(date_trunc("day", col("warc_ts")) =!= lit(days.head))
-    assert(pending.count() === expected.count())
-    assert(pending.columns.toSet === spread.columns.toSet)
-  }
 
   test("doneDays filters lineage by configHash and status") {
     val lineage = Seq(
