@@ -101,8 +101,7 @@ object ConnectedComponents {
    * cluster_id = min doc_id of the component. Only nodes that appear in at
    * least one pair are emitted (singletons are not duplicates).
    */
-  def assign(pairs: DataFrame, maxRoundsHint: Option[Int] = None,
-             smallGraphMaxEdges: Long = SmallGraphMaxEdges): DataFrame = {
+  def assign(pairs: DataFrame, smallGraphMaxEdges: Long = SmallGraphMaxEdges): DataFrame = {
     val sc = pairs.sparkSession.sparkContext
     val reliable = sc.getCheckpointDir.isDefined
     // Checkpoint-block lifecycle: each round's edge blocks are only needed
@@ -133,8 +132,7 @@ object ConnectedComponents {
       // converged final round
       return assignLocal(edges)
     }
-    val maxRounds = maxRoundsHint.getOrElse(
-      2 * (64 - java.lang.Long.numberOfLeadingZeros(math.max(prevN, 1L))) + 10)
+    val maxRounds = 2 * (64 - java.lang.Long.numberOfLeadingZeros(math.max(prevN, 1L))) + 10
 
     var round = 0
     var converged = prevN == 0
@@ -158,8 +156,8 @@ object ConnectedComponents {
     }
     if (!converged)
       log.warn(s"connected components did NOT converge in $maxRounds rounds " +
-        s"($prevN edges at exit) — emitted clusters may be split; " +
-        "raise maxRoundsHint or investigate the pair graph")
+        s"($prevN edges at exit, bound 2·log2(edges)+10) — emitted clusters " +
+        "may be split; investigate the pair graph")
 
     // Converged forest is a star per component centered at the minimum:
     // every node's component is the min over its closed neighborhood.
@@ -167,6 +165,19 @@ object ConnectedComponents {
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
     sym.groupBy("src").agg(min("dst").as("mn"))
       .select(col("src").as("doc_id"), least(col("mn"), col("src")).as("cluster_id"))
+  }
+
+  /** Incremental CC: the assignment over every pair seen so far, given the
+    * previous assignment (doc_id, cluster_id) and only the pairs (a, b)
+    * added since. The previous rows are a spanning star of every prior
+    * component (cluster_id is itself a member doc_id — the min), so CC over
+    * those edges ∪ `newPairs` equals CC over the whole pair history, at
+    * cost O(clusters + new pairs). With no previous assignment it is
+    * `assign(newPairs)`. */
+  def extend(prev: Option[DataFrame], newPairs: DataFrame): DataFrame = {
+    val pairs = newPairs.select("a", "b")
+    assign(prev.fold(pairs)(
+      _.select(col("doc_id").as("a"), col("cluster_id").as("b")).unionByName(pairs)))
   }
 
   /** Single-task union-find over a (materialized) edge set that fits one

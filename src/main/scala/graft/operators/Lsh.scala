@@ -130,27 +130,20 @@ object Lsh {
   }
 
   /** B3 — hot-bucket salting. Census pass finds buckets over
-    * `saltMaxBucket`; their members fan out into `ceil(n/max)` salt lanes, so
-    * no self-join task ever sees more than ~saltMaxBucket² pair candidates.
-    * Cross-lane pairs inside a hot bucket are intentionally not generated in
-    * that bucket (bounded recall cost — a true near-dup pair still collides
-    * in its other bands); the drop is *logged, never silent*:
-    * `saltedDropEstimate` quantifies it. AQE skew-join splitting remains the
-    * runtime backstop. */
-  def saltBandKeys(bandKeys: DataFrame, cfg: DedupConfig,
-                   materialized: Boolean = false): DataFrame = {
+    * `saltMaxBucket`; their members fan out into `ceil(n/max)` salt lanes
+    * (`is_hot` rows), each resolved in ONE task by `lanePairs`, so no task
+    * ever sees more than ~saltMaxBucket² pair checks. Cross-lane pairs
+    * inside a hot bucket are intentionally not generated in that bucket
+    * (bounded recall cost — a true near-dup pair still collides in its
+    * other bands); the drop is *logged, never silent*: `saltedDropEstimate`
+    * quantifies it. AQE skew-join splitting remains the runtime backstop.
+    *
+    * The census and the salt join both scan `bandKeys`: callers pass a
+    * materialized table (a checkpoint or the durable band_keys stage). */
+  def saltBandKeys(bandKeys: DataFrame, cfg: DedupConfig): DataFrame = {
     if (cfg.saltMaxBucket <= 0) return bandKeys.withColumn("salt", lit(0))
-    // input is reused by the census AND the main join below — materialize
-    // once (lineage-truncating block cache) instead of recomputing the
-    // whole scan→shingle→signature→banding chain twice. `materialized`:
-    // the input is already a durable table (the persisted band_keys
-    // stage) — re-scanning it beats caching corpus×52 rows in executor
-    // memory, so skip the checkpoint.
-    val bk =
-      if (materialized) bandKeys
-      else bandKeys.localCheckpoint(false, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     // the key encodes its band (B1/B2), so the census groups on ONE long
-    val hot = bk.groupBy("key").count()
+    val hot = bandKeys.groupBy("key").count()
       .where(col("count") > cfg.saltMaxBucket)
       .select(col("key"),
               ceil(col("count") / cfg.saltMaxBucket).cast("int").as("nsalt"))
@@ -160,7 +153,7 @@ object Lsh {
     // disconnect its cluster; per-band salting cuts differently in each
     // band, so lanes cross-link and connectivity survives with
     // P ≈ 1-(1-1/s)^bands.
-    bk
+    bandKeys
       .join(broadcast(hot), Seq("key"), "left")
       .withColumn("is_hot", col("nsalt").isNotNull)
       .withColumn("salt",
@@ -169,10 +162,10 @@ object Lsh {
       .drop("nsalt")
   }
 
-  /** Estimated per-band pairs not enumerated due to hot-lane starring:
-    * Σ_hot C(n,2) − (n − s) (a salted bucket of n docs in s lanes emits
-    * n−s star pairs). Written to the metrics table by the pipeline runner —
-    * the cap is loud, never silent. */
+  /** Estimated per-band pairs not enumerated due to hot-lane forests:
+    * Σ_hot C(n,2) − (n − s) (a salted bucket of n docs in s lanes emits at
+    * most n−s forest edges). Written to the metrics table by the pipeline
+    * runner — the cap is loud, never silent. */
   def saltedDropEstimate(bandKeys: DataFrame, cfg: DedupConfig): Long = {
     if (cfg.saltMaxBucket <= 0) return 0L
     val hot = bandKeys.groupBy("key").count()
@@ -184,37 +177,23 @@ object Lsh {
       .head().getDouble(0).toLong
   }
 
-  /** J1 — bucket self-join: equi-join on (band, key, salt), canonical a<b,
-    * multi-band hits collapsed with a count.
+  /** J1 — cold bucket self-join: equi-join on (key, salt), canonical a<b,
+    * multi-band hits collapsed with a count. Every listed pair is a
+    * candidate for the downstream exact verify.
     *
-    * Hot-lane discipline: buckets the census marked hot emit a STAR (every
-    * member paired with the lane minimum), not the full clique — a lane of
-    * 1000 near-identical boilerplate docs yields 999 pairs instead of
-    * 500k. Cluster connectivity is preserved (star spans the lane; lanes
-    * cross-link across bands via per-band salts); the pairs not enumerated
-    * are exactly those already transitively connected through the hub.
-    * A web-scale boilerplate clique (10^9 docs ⇒ 10^18 pairs) is
-    * un-enumerable — every production dedup caps it; ours caps loudly
-    * (saltedDropEstimate) instead of OOMing quietly. */
+    * Hot lanes never come here: a web-scale boilerplate clique (10^9 docs
+    * ⇒ 10^18 pairs) is un-enumerable, so `minhashListing` and the
+    * `PairPlan.newVsAll` families send the census's hot rows to
+    * `lanePairs` — an in-task verified forest of ≤ n−s edges per bucket —
+    * and count the pairs it skips (saltedDropEstimate, `suppressed`). */
   def candidatePairs(saltedKeys: DataFrame): DataFrame = {
-    val hasHot = saltedKeys.columns.contains("is_hot")
     // the band index is folded into the key (B1/B2), so the bucket identity
-    // is (key, salt): joins/windows shuffle two 8-byte columns, never three
-    val cold = if (hasHot) saltedKeys.where(!col("is_hot")) else saltedKeys
-    val x = cold.select(col("key"), col("salt"), col("doc_id").as("a"))
-    val y = cold.select(col("key"), col("salt"), col("doc_id").as("b"))
-    val coldPairs = x.join(y, Seq("key", "salt"))
+    // is (key, salt): the join shuffles two 8-byte columns, never three
+    val x = saltedKeys.select(col("key"), col("salt"), col("doc_id").as("a"))
+    val y = saltedKeys.select(col("key"), col("salt"), col("doc_id").as("b"))
+    x.join(y, Seq("key", "salt"))
       .where(col("a") < col("b"))
-      .select("a", "b")
-    val pairs = if (!hasHot) coldPairs else {
-      val w = org.apache.spark.sql.expressions.Window.partitionBy("key", "salt")
-      val hotPairs = saltedKeys.where(col("is_hot"))
-        .withColumn("m", min("doc_id").over(w))
-        .where(col("doc_id") =!= col("m"))
-        .select(col("m").as("a"), col("doc_id").as("b"))
-      coldPairs.unionByName(hotPairs)
-    }
-    pairs.groupBy("a", "b").agg(count(lit(1)).as("band_hits"))
+      .groupBy("a", "b").agg(count(lit(1)).as("band_hits"))
   }
 
   /** Exact Jaccard over two distinct-sorted long arrays — the same linear
@@ -231,8 +210,27 @@ object Lsh {
     if (union == 0) -1.0 else inter.toDouble / union.toDouble
   }
 
-  /** THE shared merge-emit core of every in-task lane resolver (the batch
-    * hot lanes and both incremental paths — one definition so the
+  /** Union-find over a lane's member positions 0 until n — the one forest
+    * every in-task lane resolver runs (`laneForest`, `seedUnion`,
+    * `hammingCappedPairs`): `find` with path halving; `union` links the
+    * larger root under the smaller and reports whether the two sets were
+    * apart. */
+  private final class Forest(n: Int) {
+    private val parent = Array.tabulate(n)(identity)
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    def union(x: Int, y: Int): Boolean = {
+      val rx = find(x); val ry = find(y)
+      if (rx != ry) parent(math.max(rx, ry)) = math.min(rx, ry)
+      rx != ry
+    }
+  }
+
+  /** THE merge-emit core of `lanePairs` (the batch MinHash hot lanes and
+    * both `PairPlan.newVsAll` families — one definition so the
     * verified-forest contract lives in one place): one lane's members
     * sorted by doc_id (determinism at any parallelism), union-find SEEDED
     * with the previous cluster assignment (`seedUnion`; all-None seeds =
@@ -254,24 +252,18 @@ object Lsh {
     val sorted = members.sortBy(_._1) // determinism across row order
     val n = sorted.length
     if (n < 2) return Iterator.empty
-    val parent = Array.tabulate(n)(identity)
-    def find(x0: Int): Int = {
-      var x = x0
-      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
-      x
-    }
-    seedUnion(sorted.map(_._2), parent)
+    val forest = new Forest(n)
+    seedUnion(sorted.map(_._2), forest)
     var skipped = 0L
     val out = new scala.collection.mutable.ArrayBuffer[(Long, Long, Double)]()
     var i = 0
     while (i < n) {
       var j = i + 1
       while (j < n) {
-        val ri = find(i); val rj = find(j)
-        if (ri != rj) {
+        if (forest.find(i) != forest.find(j)) {
           val s = score(sorted(i)._3, sorted(j)._3)
           if (pass(s)) {
-            parent(math.max(ri, rj)) = math.min(ri, rj)
+            forest.union(i, j)
             out += ((sorted(i)._1, sorted(j)._1, s))
           }
         } else skipped += 1
@@ -295,42 +287,58 @@ object Lsh {
     if (lo >= threshold * hi) jaccardSortedArrays(a, b) else -1.0
   }
 
-  /** Hot-lane resolution for the MinHash family: in-task EXACT-Jaccard
-    * verified spanning forest — `hammingCappedPairs`' discipline brought to
-    * MinHash (the r4 verdict's "what's wrong #2": the hub-star spokes this
-    * replaces were UNVERIFIED, and a lane member whose spoke failed the
-    * exact check in every band silently lost connectivity — the exact
-    * failure class measured and fixed for SimHash at 240k/960k).
+  /** A banded family's in-task exact check: the lane rows' payload column,
+    * the pair score, and the score's pass test. */
+  final case class LaneCheck[P](payload: String, score: (P, P) => Double,
+                                pass: Double => Boolean)
+
+  /** MinHash: exact Jaccard ≥ `threshold` over `shingles` (distinct-sorted),
+    * behind the length-ratio prefilter; the score is the Jaccard value. */
+  def jaccardCheck(threshold: Double): LaneCheck[Array[Long]] =
+    LaneCheck("shingles", jaccardScore(threshold), _ >= threshold)
+
+  /** SimHash: exact Hamming distance ≤ `maxHamming` over `simhash`; the
+    * score is the distance. */
+  def hammingCheck(maxHamming: Int): LaneCheck[Long] =
+    LaneCheck("simhash", (a, b) => java.lang.Long.bitCount(a ^ b).toDouble,
+      _ <= maxHamming)
+
+  /** THE hot-lane operator: resolves every (key, salt) lane of `lanes` —
+    * rows (key, salt, doc_id, seed, <check.payload>), ≤ ~saltMaxBucket
+    * members per lane by construction — in ONE task by `laneForest`, and
+    * returns the verified forest edges (a, b, score). `seed` is the
+    * member's previous cluster id (`withLaneSeeds`); the batch MinHash hot
+    * lanes pass null seeds (`withLaneSeeds(_, None)`), the `newVsAll`
+    * families the previous assignment.
     *
-    * Input: the is_hot rows of a salted key table, (key, salt, doc_id);
-    * each member's distinct-sorted shingle array joins in (Exchange-free
-    * on the shingle side when it is the doc_id-bucketed stage table), and
-    * each (key, salt) lane — ≤ ~saltMaxBucket members by construction — is
-    * resolved in ONE task by `laneForest` (unseeded). */
-  def jaccardLaneVerifiedPairs(hotKeys: DataFrame, shingled: DataFrame,
-                               threshold: Double,
-                               suppressed: Option[org.apache.spark.util.LongAccumulator] = None)
-      : DataFrame = {
-    val spark = hotKeys.sparkSession
+    * Every edge is verified in-task: an unverified edge (e.g. a hub-star
+    * spoke) that fails the exact check in every band silently disconnects
+    * its member. Union over increments: every verified link that any
+    * increment's lane partition exposes is either already in the global
+    * clustering or gets emitted. */
+  def lanePairs[P: scala.reflect.runtime.universe.TypeTag](
+      lanes: DataFrame, check: LaneCheck[P],
+      suppressed: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame = {
+    val spark = lanes.sparkSession
     import spark.implicits._
-    val rows = hotKeys.select(col("key"), col("salt").cast("int").as("salt"), col("doc_id"))
-      .join(shingled.select(col("doc_id"), col("shingles")), "doc_id")
-      .select(col("key"), col("salt"), col("doc_id"), col("shingles"))
-      .as[(Long, Int, Long, Array[Long])]
-    rows.groupByKey(r => (r._1, r._2))
+    val LaneCheck(payload, score, pass) = check
+    lanes.select(col("key"), col("salt").cast("int").as("salt"),
+                 col("doc_id"), col("seed"), col(payload))
+      .as[(Long, Int, Long, Option[Long], P)]
+      .groupByKey(r => (r._1, r._2))
       .flatMapGroups { (_, it) =>
-        laneForest[Array[Long]](it.map(r => (r._3, Option.empty[Long], r._4)).toArray,
-          jaccardScore(threshold), _ >= threshold, suppressed)
+        laneForest[P](it.map(r => (r._3, r._4, r._5)).toArray, score, pass, suppressed)
       }
-      .toDF("a", "b", "jaccard")
+      .toDF("a", "b", "score")
   }
 
   /** Split MinHash pair listing: (cold candidate listing — downstream
-    * exact-verified as always, hot-lane listing — ALREADY verified). Hot
-    * lanes run the in-task exact-Jaccard forest (`jaccardLaneVerifiedPairs`)
-    * instead of unverified hub stars; cold buckets keep the equi-join
-    * listing. Callers verify the first, union the second, e.g.
-    * `verifyJaccard(cands, sh, cfg).unionByName(hotVerified)`. */
+    * exact-verified as always, hot-lane listing (a, b, jaccard) — ALREADY
+    * verified). Hot lanes run `lanePairs` with the exact-Jaccard check and
+    * null seeds; each member's shingle array joins in (Exchange-free on the
+    * shingle side when it is the doc_id-bucketed stage table). Cold
+    * buckets keep the equi-join listing. Callers verify the first, union
+    * the second, e.g. `verifyJaccard(cands, sh, cfg).unionByName(hot)`. */
   def minhashListing(saltedKeys: DataFrame, shingled: DataFrame, cfg: DedupConfig,
                      suppressed: Option[org.apache.spark.util.LongAccumulator] = None)
       : (DataFrame, DataFrame) = {
@@ -340,11 +348,12 @@ object Lsh {
       (candidatePairs(saltedKeys),
        Seq.empty[(Long, Long, Double)].toDF("a", "b", "jaccard"))
     else
-      // dropping is_hot on the cold side skips candidatePairs' (empty) hot
-      // window branch entirely — no WindowExec in the cold plan
       (candidatePairs(saltedKeys.where(!col("is_hot")).drop("is_hot")),
-       jaccardLaneVerifiedPairs(saltedKeys.where(col("is_hot")), shingled,
-         cfg.jaccardThreshold, suppressed))
+       lanePairs(
+         withLaneSeeds(saltedKeys.where(col("is_hot")).select("key", "salt", "doc_id"), None)
+           .join(shingled.select("doc_id", "shingles"), "doc_id"),
+         jaccardCheck(cfg.jaccardThreshold), suppressed)
+         .withColumnRenamed("score", "jaccard"))
   }
 
   /** J1 variant with a PAIR-LISTING cap for the SimHash family (the
@@ -387,12 +396,9 @@ object Lsh {
             for { i <- (0 until n).iterator; j <- (i + 1 until n).iterator }
               yield (sorted(i)._3, sorted(j)._3)
           } else {
-            val parent = Array.tabulate(n)(identity)
-            def find(x0: Int): Int = {
-              var x = x0
-              while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
-              x
-            }
+            // score-first: every pair is checked, so `passes` counts the
+            // uncapped listing's verified pairs exactly
+            val forest = new Forest(n)
             var passes = 0L
             val out = new scala.collection.mutable.ArrayBuffer[(Long, Long)]()
             var i = 0
@@ -401,11 +407,7 @@ object Lsh {
               while (j < n) {
                 if (java.lang.Long.bitCount(sorted(i)._4 ^ sorted(j)._4) <= maxHamming) {
                   passes += 1
-                  val ri = find(i); val rj = find(j)
-                  if (ri != rj) {
-                    parent(math.max(ri, rj)) = math.min(ri, rj)
-                    out += ((sorted(i)._3, sorted(j)._3))
-                  }
+                  if (forest.union(i, j)) out += ((sorted(i)._3, sorted(j)._3))
                 }
                 j += 1
               }
@@ -435,23 +437,20 @@ object Lsh {
     *  - **hot lanes** (buckets > cap), salted with the IDENTICAL
     *    census+salt formula as the batch path (`saltBandKeys`: nsalt =
     *    ceil(count/cap), salt = pmod(xxhash64(doc_id, key), nsalt)), as
-    *    (key, salt, doc_id, is_new) rows. Callers join the family's
-    *    verification payload and resolve each lane in-task with
-    *    `jaccardIncrementalLanePairs` / `hammingIncrementalLanePairs` —
-    *    the batch families' verified-forest discipline, incrementally.
-    *    (The pre-r5 hub-star spokes here were UNVERIFIED edges: a spoke
-    *    failing the downstream exact check silently cost connectivity —
-    *    the same class the batch listings already fixed.)
+    *    (key, salt, doc_id, is_new) rows. Callers seed them
+    *    (`withLaneSeeds`), join the family's verification payload and
+    *    resolve each lane in-task with `lanePairs` — the batch hot lanes'
+    *    verified-forest operator, incrementally.
     *
     * Loud-cap accounting into `suppressed`: the cross-lane new-involving
     * candidates a hot bucket never enumerates, ≈ (m(n−m) + C(m,2)) ·
-    * (1 − 1/s) per bucket (estimate; the lane operators additionally
-    * count their in-task skips exactly). */
+    * (1 − 1/s) per bucket (estimate; `lanePairs` additionally counts its
+    * in-task skips exactly). */
   def newVsAllListing(newKeys: DataFrame, oldKeys: DataFrame, cap: Int,
                       suppressed: Option[org.apache.spark.util.LongAccumulator] = None)
       : (DataFrame, DataFrame) = {
     // cap <= 0 means UNCAPPED — the saltMaxBucket convention everywhere
-    // else (saltBandKeys, pairStarCap, candidatePairsStream)
+    // else (saltBandKeys, pairStarCap)
     val capped = if (cap <= 0) Int.MaxValue else cap
     val spark = newKeys.sparkSession
     import spark.implicits._
@@ -520,8 +519,9 @@ object Lsh {
   }
 
   /** Attach the previous cluster assignment (doc_id, cluster_id) as the
-    * lanes' nullable `seed` column — see `seedUnion` for why this makes
-    * the lane operators' merge-emit rule sound and no-pair-twice. */
+    * lanes' nullable `seed` column (None: all null, every member a
+    * singleton) — see `seedUnion` for why this makes `lanePairs`'
+    * merge-emit rule sound and no-pair-twice. */
   def withLaneSeeds(lanes: DataFrame, prevAssign: Option[DataFrame]): DataFrame =
     prevAssign match {
       case Some(pa) => lanes.join(
@@ -543,77 +543,21 @@ object Lsh {
     * snapshot merely degraded to re-emitting a drift link found earlier
     * in the same run — duplicate day-partition rows, harmless to CC, but
     * an over-count for pair consumers). Without it (`None` seeds throughout,
-    * e.g. a first streaming batch) every member starts a singleton and
-    * the operator emits more redundant-but-verified edges. */
-  private def seedUnion(seeds: Array[Option[Long]], parent: Array[Int]): Unit = {
-    def find(x0: Int): Int = {
-      var x = x0
-      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
-      x
-    }
+    * e.g. the batch hot lanes or a first streaming batch) every member
+    * starts a singleton and the operator emits more redundant-but-verified
+    * edges. */
+  private def seedUnion(seeds: Array[Option[Long]], forest: Forest): Unit = {
     val first = new scala.collection.mutable.HashMap[Long, Int]()
     var i = 0
     while (i < seeds.length) {
       seeds(i).foreach { s =>
         first.get(s) match {
-          case Some(f) =>
-            val ri = find(i); val rf = find(f)
-            if (ri != rf) parent(math.max(ri, rf)) = math.min(ri, rf)
+          case Some(f) => forest.union(i, f)
           case None => first(s) = i
         }
       }
       i += 1
     }
-  }
-
-  /** In-task incremental lane resolution, exact-Hamming form: members of
-    * one (key, salt) lane sorted by doc_id, union-find SEEDED with the
-    * previous cluster assignment (`seedUnion`), then every pair whose
-    * components still differ is exact-verified and EMITTED on merge. All
-    * emitted edges are verified (skip the downstream verify join); pairs
-    * skipped as already-connected are counted into `suppressed` (loud).
-    * Union over increments: every verified link that any increment's lane
-    * partition exposes is either already in the global clustering or gets
-    * emitted — no silent connectivity loss, the failure class of the
-    * unverified hub-star spokes this replaces. */
-  def hammingIncrementalLanePairs(lanes: DataFrame, maxHamming: Int,
-                                  suppressed: Option[org.apache.spark.util.LongAccumulator] = None)
-      : DataFrame = {
-    val spark = lanes.sparkSession
-    import spark.implicits._
-    lanes.select(col("key"), col("salt").cast("int").as("salt"),
-                 col("doc_id"), col("seed"), col("simhash"))
-      .as[(Long, Int, Long, Option[Long], Long)]
-      .groupByKey(r => (r._1, r._2))
-      .flatMapGroups { (_, it) =>
-        laneForest[Long](it.map(r => (r._3, r._4, r._5)).toArray,
-          (a, b) => java.lang.Long.bitCount(a ^ b).toDouble,
-          _ <= maxHamming, suppressed)
-          .map { case (a, b, _) => (a, b) }
-      }
-      .toDF("a", "b")
-  }
-
-  /** In-task incremental lane resolution, exact-Jaccard form — same
-    * seeded merge-emit contract as `hammingIncrementalLanePairs` with the
-    * MinHash family's exact verification (the JaccardSorted merge,
-    * length-ratio prefilter). Lane rows must carry the member's
-    * distinct-sorted `shingles` and the nullable `seed`. */
-  def jaccardIncrementalLanePairs(lanes: DataFrame, threshold: Double,
-                                  suppressed: Option[org.apache.spark.util.LongAccumulator] = None)
-      : DataFrame = {
-    val spark = lanes.sparkSession
-    import spark.implicits._
-    lanes.select(col("key"), col("salt").cast("int").as("salt"),
-                 col("doc_id"), col("seed"), col("shingles"))
-      .as[(Long, Int, Long, Option[Long], Array[Long])]
-      .groupByKey(r => (r._1, r._2))
-      .flatMapGroups { (_, it) =>
-        laneForest[Array[Long]](it.map(r => (r._3, r._4, r._5)).toArray,
-          jaccardScore(threshold), _ >= threshold, suppressed)
-          .map { case (a, b, _) => (a, b) }
-      }
-      .toDF("a", "b")
   }
 
   /** SimHash pair listing with the `saltMaxBucket <= 0` guard: the in-task
@@ -688,39 +632,29 @@ object Lsh {
   def minhashDupPairs(docs: DataFrame, cfg: DedupConfig): DataFrame = {
     val ser = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
     val sh = shingled(spreadInput(docs), cfg).localCheckpoint(false, ser)
-    val bandKeys = minhashBandKeys(signatures(sh, cfg), cfg)
+    val bk = minhashBandKeys(signatures(sh, cfg), cfg).localCheckpoint(false, ser)
     // Count-gated hot path selection (r7, the restrictToCandidateDocs
     // discipline): materialize the band keys + census ONCE and branch on
-    // whether any bucket is actually hot. No hot buckets — the normal
-    // small/medium regime — means the salt join, the (empty) hot-lane
-    // forest subplan, the union and the final dropDuplicates are all
-    // provably no-ops: the cold candidate listing is already distinct on
-    // (a, b) and every pair flows through the verify join. Output is
-    // identical in both branches; the hot branch is byte-for-byte the
-    // previous plan. (The facade keeps its fully-lazy listing so the
-    // three families' stages overlap — this gate is the standalone
-    // family's, where the census materialization is the first action
-    // anyway.)
-    if (cfg.saltMaxBucket > 0) {
-      val bk = bandKeys.localCheckpoint(false, ser)
-      val anyHot = !bk.groupBy("key").count()
-        .where(col("count") > cfg.saltMaxBucket).isEmpty
-      if (!anyHot)
-        return verifyJaccard(
-          candidatePairs(bk.withColumn("salt", lit(0))), sh, cfg)
-      val keys = saltBandKeys(bk, cfg, materialized = true)
-      val (cands, hotVerified) = minhashListing(keys, sh, cfg)
-      return verifyJaccard(cands, sh, cfg).unionByName(hotVerified)
-        .dropDuplicates("a", "b")
+    // whether any bucket is actually hot (never, with salting off). No hot
+    // buckets — the normal small/medium regime — means the salt join, the
+    // (empty) hot-lane forest subplan, the union and the final
+    // dropDuplicates are all provably no-ops: the cold candidate listing
+    // is already distinct on (a, b) and every pair flows through the
+    // verify join. Output is identical in both branches. (The facade keeps
+    // its fully-lazy listing so the three families' stages overlap — this
+    // gate is the standalone family's, where the census materialization
+    // is the first action anyway.)
+    val anyHot = cfg.saltMaxBucket > 0 &&
+      !bk.groupBy("key").count().where(col("count") > cfg.saltMaxBucket).isEmpty
+    if (!anyHot) verifyJaccard(candidatePairs(bk.withColumn("salt", lit(0))), sh, cfg)
+    else {
+      // candidates are consumed exactly once (the verify join) — caching
+      // them would be pure block-manager pressure. Hot lanes come back
+      // already exact-verified (in-task forest); a pair that is both a cold
+      // candidate in one band and a hot-lane edge in another dedupes here.
+      val (cands, hotVerified) = minhashListing(saltBandKeys(bk, cfg), sh, cfg)
+      verifyJaccard(cands, sh, cfg).unionByName(hotVerified).dropDuplicates("a", "b")
     }
-    val keys = saltBandKeys(bandKeys, cfg)
-    // candidates are consumed exactly once (the verify join) — caching them
-    // here would be pure block-manager pressure. Hot lanes come back
-    // already exact-verified (in-task forest); a pair that is both a cold
-    // candidate in one band and a hot-lane edge in another dedupes here.
-    val (cands, hotVerified) = minhashListing(keys, sh, cfg)
-    verifyJaccard(cands, sh, cfg).unionByName(hotVerified)
-      .dropDuplicates("a", "b")
   }
 
   /** Full SimHash family: docs(doc_id, text) → verified (a, b, hamming).
@@ -730,9 +664,11 @@ object Lsh {
     * verified forest bounds it linearly per bucket with clusters
     * provably identical to the uncapped listing. */
   def simhashDupPairs(docs: DataFrame, cfg: DedupConfig): DataFrame = {
-    val sims = simhashes(spreadInput(docs), cfg).localCheckpoint(false, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    val keys = saltBandKeys(simhashBandKeys(sims, cfg, carryHash = true), cfg)
-    verifyHamming(simhashCandidatePairs(keys, cfg), sims, cfg)
+    val ser = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
+    val sims = simhashes(spreadInput(docs), cfg).localCheckpoint(false, ser)
+    // the salt census and join both scan the key table: materialize it once
+    val bk = simhashBandKeys(sims, cfg, carryHash = true).localCheckpoint(false, ser)
+    verifyHamming(simhashCandidatePairs(saltBandKeys(bk, cfg), cfg), sims, cfg)
   }
 
   /** Cross-corpus near-duplicate hits: corpus docs whose exact Jaccard

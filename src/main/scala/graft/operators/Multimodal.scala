@@ -61,26 +61,18 @@ object Multimodal {
   /** Near-dup media pairs via phash Hamming, through the SAME block-
     * combination machinery as SimHash (`Lsh.hamming64BandKeys`): every pair
     * within Hamming ≤ maxHamming collides on ≥1 block key (pigeonhole), so
-    * with the DEFAULT config (capping off) this is EXACT — identical output
-    * to a brute crossJoin (unit-tested) without materializing the O(n²)
-    * product.
+    * this is EXACT — identical output to a brute crossJoin (unit-tested)
+    * without materializing the O(n²) product.
     *
-    * Capping is OPT-IN here (pass a cfg with saltMaxBucket > 0), unlike the
-    * text families: media pairs are a terminal pair-listing API, not CC
-    * input, so a star-suppressed pair whose hub fails the Hamming verify is
-    * LOST outright (no transitive-connectivity backstop). With capping on,
-    * a clique larger than saltMaxBucket is reported as hub stars only —
-    * use only when boilerplate-media cliques make all-pairs unpayable, and
-    * dedupe exact copies first (`mediaExactDedup`) so near-dup cliques stay
-    * small. */
+    * Buckets are never capped: media pairs are a terminal pair-listing API,
+    * not CC input, so every verified pair is listed (a spanning forest
+    * would drop pairs outright). Dedupe exact copies first
+    * (`mediaExactDedup`) so near-dup cliques stay small. */
   def mediaNearDupPairs(features: Dataset[MediaMeta], maxHamming: Int,
-                        blocks: Int = 6,
-                        cfg: graft.DedupConfig = graft.DedupConfig.test.copy(saltMaxBucket = 0))
-      : DataFrame = {
+                        blocks: Int = 6): DataFrame = {
     val hashes = features.toDF().select(col("doc_id"), col("phash"))
-    val keys = Lsh.saltBandKeys(
-      Lsh.hamming64BandKeys(hashes, "phash", blocks, maxHamming), cfg)
-    val cands = Lsh.candidatePairs(keys)
+    val cands = Lsh.candidatePairs(
+      Lsh.hamming64BandKeys(hashes, "phash", blocks, maxHamming).withColumn("salt", lit(0)))
     val ha = hashes.select(col("doc_id").as("a"), col("phash").as("pa"))
     val hb = hashes.select(col("doc_id").as("b"), col("phash").as("pb"))
     cands.join(ha, "a").join(hb, "b")

@@ -96,13 +96,12 @@ object PairPlan {
       // the exact-Jaccard verified forest (clusters identical to the uncapped
       // enumeration)
       val (mhCands, mhHot) = Lsh.minhashListing(
-        Lsh.saltBandKeys(minhashKeys.select("doc_id", "key"), cfg, materialized = true),
+        Lsh.saltBandKeys(minhashKeys.select("doc_id", "key"), cfg),
         shingled.select("doc_id", "shingles"), cfg, counters.map(_.minhash))
       // the in-task verified-forest cap (join listing when salting is off);
       // its edges take the verify join like any candidate
       val shCands = Lsh.simhashCandidatePairs(
-        Lsh.saltBandKeys(simhashKeys.select("doc_id", "key", "simhash"), cfg,
-          materialized = true),
+        Lsh.saltBandKeys(simhashKeys.select("doc_id", "key", "simhash"), cfg),
         cfg, counters.map(_.simhash))
       tail(Listing(ckpt(mhCands), Some(ckpt(mhHot)), shingled),
         Listing(ckpt(shCands), None, simhashes), Nil, sub, cfg)
@@ -111,14 +110,15 @@ object PairPlan {
   /** New×all front-end: every emitted pair involves ≥1 new doc, so no pair
     * repeats across increments. `seeds` is the previous cluster assignment
     * (doc_id, cluster_id), the lanes' union-find seed (`Lsh.withLaneSeeds`);
-    * it must cover every pair emitted so far. */
+    * it must cover every pair emitted so far. Both families resolve their
+    * hot lanes with `Lsh.lanePairs`, each under its own exact check. */
   def newVsAll(minhash: Increment, simhash: Increment, seeds: Option[DataFrame],
                cfg: DedupConfig, substr: Option[SubstrLeg] = None,
                counters: Option[Counters] = None): Plan =
     labelled(minhash.newKeys.sparkSession, ListingPrep) {
       val sub = startSubstr(minhash.newKeys.sparkSession, substr, counters)
-      def family(inc: Increment, acc: Option[LongAccumulator],
-                 resolve: (DataFrame, Option[LongAccumulator]) => DataFrame)
+      def family[P: scala.reflect.runtime.universe.TypeTag](
+          inc: Increment, acc: Option[LongAccumulator], check: Lsh.LaneCheck[P])
           : (Listing, DataFrame) = {
         val (cold, lanes) = Lsh.newVsAllListing(inc.newKeys, inc.oldKeys, cfg.saltMaxBucket, acc)
         val cands = ckpt(cold.distinct())
@@ -131,13 +131,14 @@ object PairPlan {
           .unionByName(cands.select(col("a").as("doc_id")))
           .unionByName(cands.select(col("b").as("doc_id")))))
         // lane edges come back ALREADY exact-verified (they bypass verify)
-        val laneEdges = ckpt(resolve(seeded.join(payload, "doc_id"), acc))
+        val laneEdges = ckpt(
+          Lsh.lanePairs(seeded.join(payload, "doc_id"), check, acc).select("a", "b"))
         (Listing(cands, Some(laneEdges), payload), seeded)
       }
       val (mh, mhSeeded) = family(minhash, counters.map(_.minhash),
-        Lsh.jaccardIncrementalLanePairs(_, cfg.jaccardThreshold, _))
+        Lsh.jaccardCheck(cfg.jaccardThreshold))
       val (sh, shSeeded) = family(simhash, counters.map(_.simhash),
-        Lsh.hammingIncrementalLanePairs(_, cfg.hammingThreshold, _))
+        Lsh.hammingCheck(cfg.hammingThreshold))
       tail(mh, sh, Seq(mhSeeded, mh.payload, shSeeded, sh.payload), sub, cfg)
     }
 

@@ -26,6 +26,18 @@ object Checkpoint {
   private def fs(spark: SparkSession, p: Path) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
+  /** Read a parquet table whose directory name starts with `_` (the
+    * `_metrics`/`_lineage` tables) by its data files, listed here: Spark
+    * treats such a read root as hidden and logs `All paths were ignored`
+    * although the rows are read. Files named `_…`/`.…` are skipped, as
+    * Spark skips them. */
+  private[run] def readHidden(spark: SparkSession, dir: String): DataFrame = {
+    val p = new Path(dir)
+    spark.read.parquet(fs(spark, p).listStatus(p).map(_.getPath)
+      .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
+      .map(_.toString).toIndexedSeq: _*)
+  }
+
   def readManifest(spark: SparkSession, root: String, stage: String): Option[Manifest] = {
     val p = manifestPath(root, stage)
     val f = fs(spark, p)
@@ -262,7 +274,7 @@ object Metrics {
   }
 
   def read(spark: SparkSession, root: String): DataFrame =
-    spark.read.parquet(s"$root/_metrics")
+    Checkpoint.readHidden(spark, s"$root/_metrics")
 }
 
 /** SNK3/K3 — per-partition lineage rows at `<root>/_lineage`: which input
@@ -314,7 +326,7 @@ object Lineage {
     }
 
   def read(spark: SparkSession, root: String): DataFrame =
-    spark.read.parquet(s"$root/_lineage")
+    Checkpoint.readHidden(spark, s"$root/_lineage")
 }
 
 /** K2/J3 — partition-level resume filter: the crawl days already processed

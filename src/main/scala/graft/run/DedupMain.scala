@@ -326,7 +326,7 @@ object DedupMain {
         } else if (prevKeyInfo.isDefined && shardsFit &&
                    doneDays.nonEmpty && doneDays.subsetOf(inDays.toSet)) {
           val t0 = System.nanoTime()
-          // previous cluster assignment = the lane operators' union-find
+          // previous cluster assignment = `Lsh.lanePairs`' union-find
           // seed (sound merge-emit; see Lsh.seedUnion). Read lazily — the
           // clusters stage only overwrites this dir AFTER the append loop.
           val clustersSeed: Option[DataFrame] = prevCovered.map(_ =>
@@ -346,11 +346,7 @@ object DedupMain {
           def refreshSeed(days: Seq[java.sql.Timestamp]): Unit = if (days.nonEmpty) {
             val dayPairs = spark.read.parquet(dupDir)
               .where(col("warc_day").isin(days.map(x => x: Any): _*))
-              .select("a", "b")
-            val prevEdges = seed.map(pa =>
-              pa.select(col("doc_id").as("a"), col("cluster_id").as("b")))
-            val next = ConnectedComponents.assign(
-                prevEdges.fold(dayPairs)(_.unionByName(dayPairs)))
+            val next = ConnectedComponents.extend(seed, dayPairs)
               .localCheckpoint(true,
                 org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
             seedCkpt.foreach(LocalCheckpoints.release)
@@ -426,15 +422,13 @@ object DedupMain {
         prevCovered match {
           case Some(cov) if cov.nonEmpty && cov.subsetOf(inDays.toSet) =>
             // eager: the stage write overwrites the dir being read
-            val prevEdges = spark.read.parquet(s"$root/clusters")
-              .select(col("doc_id").as("a"), col("cluster_id").as("b"))
+            val prev = spark.read.parquet(s"$root/clusters")
+              .select("doc_id", "cluster_id")
               .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
             val newDays = inDays.filterNot(cov.contains)
             val newPairs = dupPairs
               .where(col("warc_day").isin(newDays.map(x => x: Any): _*))
-              .select("a", "b")
-            ConnectedComponents.clusters(
-              ConnectedComponents.assign(prevEdges.unionByName(newPairs)))
+            ConnectedComponents.clusters(ConnectedComponents.extend(Some(prev), newPairs))
           case _ =>
             ConnectedComponents.clusters(
               ConnectedComponents.assign(dupPairs.select("a", "b")))

@@ -1,82 +1,20 @@
 package graft.streaming
 
 import graft.DedupConfig
-import graft.functions.Fns
 import graft.operators.{ConnectedComponents, LocalCheckpoints, Lsh, PairPlan}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /**
- * Structured Streaming mapping of the dedup pipeline (SURVEY.md §2.10):
- * incremental crawl batches stream through the SAME signature expressions,
- * and LSH buckets become keyed state — each (band, key) group remembers its
- * members (bounded by saltMaxBucket, the streaming form of hot-bucket
- * protection) and emits only the NEW candidate pairs each micro-batch.
- *
- * Invariant (tested): over any sequence of micro-batches, the union of
- * emitted candidate pairs equals the batch pipeline's candidate pairs on
- * the same corpus (modulo pairs suppressed by the state cap, which are
- * counted, never silent).
+ * Streaming mapping of the dedup pipeline (SURVEY.md §2.10): the
+ * foreachBatch bridge. Each micro-batch of docs runs through the SAME
+ * signature expressions and the same new×all pair plan as DedupMain's day
+ * append (`PairPlan.newVsAll`: cold candidates verified, hot buckets salted
+ * with the batch census formula and resolved by `Lsh.lanePairs`' verified
+ * forests), and the cluster snapshot extends the previous one by
+ * incremental CC.
  */
 object StreamingDedup {
-
-  final case class BandKey(band: Int, key: Long, doc_id: Long)
-  final case class CandPair(a: Long, b: Long, band: Int, key: Long)
-  /** Bounded bucket membership (SORTED ascending — membership tests are
-    * binary searches, not list scans; at cap=1000 a per-batch linear
-    * `contains` over a List was O(cap²) compares per bucket), plus how many
-    * docs the cap suppressed. Array[Long] state also encodes to a compact
-    * unboxed UnsafeArrayData row instead of a boxed list. */
-  final case class BucketState(members: Array[Long], suppressed: Long)
-
-  /** Band keys as a streaming-safe projection (same expressions as batch). */
-  def bandKeys(docs: DataFrame, cfg: DedupConfig): Dataset[BandKey] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    // no isNotNull filter: it would re-evaluate the sig chain per row
-    // (see Lsh.signatures); posexplode drops null signatures for free
-    val sigs = docs
-      .select(col("doc_id"), Fns.minhashSig(Fns.shingleHashes(col("text"), cfg), cfg).as("minhash"))
-    Lsh.minhashBandKeys(sigs, cfg)
-      .select(col("band"), col("key"), col("doc_id")).as[BandKey]
-  }
-
-  /** Incremental candidate generation: flatMapGroupsWithState keyed by
-    * (band, key); state = bucket members so far. */
-  def candidatePairsStream(keys: Dataset[BandKey], cfg: DedupConfig): Dataset[CandPair] = {
-    val spark = keys.sparkSession
-    import spark.implicits._
-    keys.groupByKey(k => (k.band, k.key))
-      .flatMapGroupsWithState[BucketState, CandPair](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        case ((band, key), rows, state: GroupState[BucketState]) =>
-          val prev = state.getOption.getOrElse(BucketState(Array.emptyLongArray, 0L))
-          val existing = prev.members
-          // enforce the sorted invariant on LOAD, not just on store: state
-          // restored from a checkpoint written by the pre-r4 List-based
-          // BucketState deserializes in prepend order (List and Array both
-          // encode as ArrayType(Long)), and binarySearch on unsorted data
-          // would silently re-admit seen docs. Sorting a sorted array is a
-          // cheap no-op pass.
-          java.util.Arrays.sort(existing)
-          val incoming = rows.map(_.doc_id).toSeq.distinct
-            .filter(d => java.util.Arrays.binarySearch(existing, d) < 0)
-          val cap = if (cfg.saltMaxBucket > 0) cfg.saltMaxBucket else Int.MaxValue
-          val room = math.max(0, cap - existing.length)
-          val admitted = incoming.take(room)
-          val suppressed = prev.suppressed + (incoming.size - admitted.size)
-          val merged = existing ++ admitted
-          java.util.Arrays.sort(merged)
-          state.update(BucketState(merged, suppressed))
-          // new pairs: admitted × existing  ∪  admitted × admitted
-          val newPairs = for {
-            (n, i) <- admitted.zipWithIndex
-            o <- existing.iterator ++ admitted.drop(i + 1).iterator
-          } yield CandPair(math.min(n, o), math.max(n, o), band, key)
-          newPairs.iterator
-      }
-  }
 
   /**
    * foreachBatch bridge (SURVEY §2.10 → batch stages): each micro-batch of
@@ -84,8 +22,8 @@ object StreamingDedup {
    * candidate pairs (this batch's band keys ⋈ all keys so far — every pair
    * involves ≥1 new doc, so no pair is ever produced twice) are verified
    * against the accumulated shingle table, appended to the verified-pair
-   * table, and the cluster snapshot is rebuilt with the SAME batch CC
-   * operator. Invariant (tested): after replaying a corpus in any number of
+   * table, and the cluster snapshot is extended with the SAME batch CC
+   * operator (`ConnectedComponents.extend`). Invariant (tested): after replaying a corpus in any number of
    * micro-batches, the cluster snapshot equals the batch pipeline's
    * clusters on that corpus.
    *
@@ -93,9 +31,9 @@ object StreamingDedup {
    * streaming checkpoint — the recovery layer) under an executor-RESIDENT
    * view (see the state-cache block below) that per-batch reads actually
    * hit, so per-batch durable I/O tracks the batch, not the stream's
-   * lifetime. Hot-bucket capping for the stateful in-memory route is
-   * `candidatePairsStream`; here buckets are bounded by the same
-   * census+salt pass as batch (applied to the accumulated key table).
+   * lifetime. Hot buckets are bounded by the same census+salt pass as
+   * batch (applied to the increment-touched keys of the accumulated key
+   * table).
    *
    * Retry idempotence: foreachBatch delivers at-least-once — a micro-batch
    * that failed mid-write is REPLAYED with the same batchId. Every state
@@ -668,21 +606,15 @@ object StreamingDedup {
         newKeysSh, oldKeysLookup("keys_sh", newKeysSh), simhashLookup),
       prevAssign, cfg)
     plan.materialize(_.write.mode("overwrite").parquet(s"$root/pairs/batch_id=$batchId"))
-    // Incremental CC over the CONTRACTED history: the previous committed
-    // snapshot's (doc_id, cluster_id) rows are a spanning star of every
-    // prior component (cluster_id is itself a member doc_id — the min), so
-    // CC over those edges ∪ THIS batch's verified pairs equals CC over all
-    // pairs ever seen, at per-batch cost O(clusters + new pairs) instead
-    // of O(total pair history) — the bound that keeps a long-running
-    // stream's micro-batch wall flat. Each snapshot lands in its own
+    // Incremental CC over the CONTRACTED history (previous snapshot ∪ THIS
+    // batch's verified pairs): per-batch cost O(clusters + new pairs), not
+    // O(total pair history) — the bound that keeps a long-running stream's
+    // micro-batch wall flat. Each snapshot lands in its own
     // batch_id dir (same replay-overwrite idempotence as the state
     // tables): a replayed batch recomputes from the SAME prior snapshot
     // (strictly smaller batch_id) and overwrites only its own output.
-    val prevEdges = prevAssign
-      .map(_.select(col("doc_id").as("a"), col("cluster_id").as("b")))
-    val newPairs = spark.read.parquet(s"$root/pairs/batch_id=$batchId").select("a", "b")
-    ConnectedComponents.assign(
-        prevEdges.fold(newPairs)(_.unionByName(newPairs)))
+    ConnectedComponents.extend(prevAssign,
+        spark.read.parquet(s"$root/pairs/batch_id=$batchId"))
       .write.mode("overwrite").parquet(s"$root/clusters/batch_id=$batchId")
     // this batch's snapshot is committed — drop all but the 2 most recent
     // (the second-newest is what a replay of THIS batch rebuilds from)

@@ -70,6 +70,24 @@ class ConnectedComponentsSpec extends SparkSuite {
     assert(fast === unionFind(0, edges))
   }
 
+  test("extend: previous assignment + new pairs == assign over both halves") {
+    val rnd = new java.util.SplittableRandom(0xCC2L)
+    def assigned(pairs: org.apache.spark.sql.DataFrame) = pairs.as[(Long, Long)].collect().toMap
+    (1 to 4).foreach { trial =>
+      val n = 40 + trial * 30
+      val edges = (1 to n * 2).map(_ => (rnd.nextLong(0, n), rnd.nextLong(0, n)))
+        .filter(e => e._1 != e._2)
+      // trial 1 splits at 0 (empty first half); the rest at random points
+      val (h1, h2) = edges.splitAt(if (trial == 1) 0 else rnd.nextInt(edges.size + 1))
+      val prev = ConnectedComponents.assign(h1.toDF("a", "b"))
+      assert(assigned(ConnectedComponents.extend(Some(prev), h2.toDF("a", "b"))) ===
+        assigned(ConnectedComponents.assign((h1 ++ h2).toDF("a", "b"))),
+        s"trial $trial: extend diverged from assign(h1 ∪ h2)")
+      assert(assigned(ConnectedComponents.extend(None, h2.toDF("a", "b"))) ===
+        assigned(ConnectedComponents.assign(h2.toDF("a", "b"))))
+    }
+  }
+
   test("reliable checkpoint: long path writes durable snapshots, same answer") {
     val sc = spark.sparkContext
     val ckpt = java.nio.file.Files.createTempDirectory("graft-cc-ckpt").toString

@@ -3,7 +3,7 @@ package graft.operators
 import graft.SparkSuite
 import org.apache.spark.sql.functions._
 
-/** Properties of `Lsh.newVsAllListing` + the incremental lane operators —
+/** Properties of `Lsh.newVsAllListing` + `Lsh.lanePairs` with seeds —
   * the shared incremental new×all machinery behind the streaming bridge
   * and DedupMain's day-append path (SURVEY §2.10.2 J6). r5 contract: cold
   * buckets list exact new-involving candidates; hot buckets come back as
@@ -157,9 +157,9 @@ class NewVsAllSpec extends SparkSuite {
       // FRESH seed per increment — CC over everything emitted so far (the
       // streaming bridge's exact situation; the day path may be staler)
       val seed = components(emittedAll).toSeq.toDF("doc_id", "cluster_id")
-      val emitted = Lsh.hammingIncrementalLanePairs(
-          Lsh.withLaneSeeds(lanes, Some(seed)).join(payload, "doc_id"), T)
-        .as[(Long, Long)].collect().toSet
+      val emitted = Lsh.lanePairs(
+          Lsh.withLaneSeeds(lanes, Some(seed)).join(payload, "doc_id"), Lsh.hammingCheck(T))
+        .select("a", "b").as[(Long, Long)].collect().toSet
       emitted.foreach { case (a, b) =>
         assert(java.lang.Long.bitCount(fpOf(a) ^ fpOf(b)) <= T,
           s"emitted edge ($a,$b) is UNVERIFIED — the hub-spoke failure class")
@@ -237,9 +237,9 @@ class NewVsAllSpec extends SparkSuite {
       val payload = docs.filter(d => old.contains(d._1) || inc.contains(d._1))
         .toDF("doc_id", "shingles")
       val seed = components(emittedAll).toSeq.toDF("doc_id", "cluster_id")
-      val emitted = Lsh.jaccardIncrementalLanePairs(
-          Lsh.withLaneSeeds(lanes, Some(seed)).join(payload, "doc_id"), 0.8)
-        .as[(Long, Long)].collect().toSet
+      val emitted = Lsh.lanePairs(
+          Lsh.withLaneSeeds(lanes, Some(seed)).join(payload, "doc_id"), Lsh.jaccardCheck(0.8))
+        .select("a", "b").as[(Long, Long)].collect().toSet
       emitted.foreach { case (a, b) =>
         val sa = docs(a.toInt)._2.toSet; val sb = docs(b.toInt)._2.toSet
         val j = sa.intersect(sb).size.toDouble / sa.union(sb).size

@@ -50,6 +50,36 @@ class CheckpointSpec extends SparkSuite {
     assert(lin.select("config_hash").as[String].head() === cfg.configHash)
   }
 
+  /** Formatted messages `logger` emits while `body` runs. */
+  private def captureLog(logger: String)(body: => Unit): Seq[String] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new org.apache.logging.log4j.core.appender.AbstractAppender(
+        "capture", null, null, true, org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: org.apache.logging.log4j.core.LogEvent): Unit =
+        seen.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val log = org.apache.logging.log4j.LogManager.getLogger(logger)
+      .asInstanceOf[org.apache.logging.log4j.core.Logger]
+    log.addAppender(appender)
+    try body finally { log.removeAppender(appender); appender.stop() }
+    seen.toArray.toSeq.map(_.toString)
+  }
+
+  test("reading _lineage/_metrics logs no ignored-path WARN during DedupMain.run") {
+    val input = tmpRoot() + "/pages.parquet"
+    PagesGen.pages(spark, 60, cfg).toDF().write.parquet(input)
+    val root = tmpRoot()
+    val lines = captureLog("org.apache.spark.sql.execution.datasources.DataSource") {
+      DedupMain.run(spark, input, root, cfg, "r1").count()
+      // the resume reads the day stages' lineage (Checkpoint.doneDaySet)
+      DedupMain.run(spark, input, root, cfg, "r2").count()
+      assert(Metrics.read(spark, root).where(col("run_id") === "r2").count() > 0)
+    }
+    val ignored = lines.filter(_.contains("All paths were ignored"))
+    assert(ignored.isEmpty, ignored.mkString("\n"))
+  }
+
   test("end-to-end DedupMain.run is resumable and reproduces clusters") {
     val root = tmpRoot()
     val input = tmpRoot() + "/docs.parquet"

@@ -54,7 +54,7 @@ class DedupMainSpec extends SparkSuite {
             spark.read.parquet(s"$root/band_keys")
               .where(org.apache.spark.sql.functions.col("family") === "minhash")
               .select("doc_id", "key"),
-            cfg, materialized = true))
+            cfg))
         graft.operators.Lsh.verifyJaccard(cands, sh, cfg)
           .queryExecution.executedPlan.toString
       }

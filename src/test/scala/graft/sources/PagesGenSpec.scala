@@ -74,8 +74,11 @@ class PagesGenSpec extends SparkSuite {
     // truth recall unaffected (planted dups pair in many non-hot bands)
     val truth = PagesGen.truthPairsLocal(N, salty)
       .filter(_.kind == "minhash").map(p => (p.a, p.b)).toSet
+    // the production listing: cold candidates verified, hot-lane forest
+    // edges (already verified) unioned in
     val sh = Lsh.shingled(docs, salty)
-    val found = Lsh.verifyJaccard(Lsh.candidatePairs(salted), sh, salty)
+    val (cands, hotVerified) = Lsh.minhashListing(salted, sh, salty)
+    val found = Lsh.verifyJaccard(cands, sh, salty).unionByName(hotVerified)
       .select(least($"a", $"b"), greatest($"a", $"b"))
       .as[(Long, Long)].collect().toSet
     val recall = (found intersect truth).size.toDouble / truth.size

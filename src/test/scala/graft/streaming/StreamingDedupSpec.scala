@@ -22,33 +22,6 @@ class StreamingDedupSpec extends SparkSuite {
   import spark.implicits._
   private val cfg = DedupConfig.test
 
-  test("incremental candidates over micro-batches == batch candidates") {
-    implicit val sqlCtx = spark.sqlContext
-    val docs = PagesGen.docs(spark, 300, cfg).collect()
-    val stream = MemoryStream[(Long, String, String)]
-    val keys = StreamingDedup.bandKeys(
-      stream.toDF().toDF("doc_id", "text", "lang"), cfg)
-    val q = StreamingDedup.candidatePairsStream(keys, cfg)
-      .writeStream.outputMode("append")
-      .format("memory").queryName("cands")
-      .start()
-    try {
-      // three micro-batches
-      docs.grouped(100).foreach { batch =>
-        stream.addData(batch.map(d => (d.doc_id, d.text, d.lang)).toSeq)
-        q.processAllAvailable()
-      }
-      val streamed = spark.table("cands")
-        .select("a", "b").distinct().as[(Long, Long)].collect().toSet
-      val batch = Lsh.candidatePairs(
-        Lsh.minhashBandKeys(
-          Lsh.signatures(Lsh.shingled(PagesGen.docs(spark, 300, cfg).toDF(), cfg), cfg), cfg)
-          .withColumn("salt", lit(0)))
-        .select("a", "b").as[(Long, Long)].collect().toSet
-      assert(streamed === batch)
-    } finally q.stop()
-  }
-
   test("foreachBatch bridge: streamed clusters == batch clusters on a replayed corpus") {
     implicit val sqlCtx = spark.sqlContext
     val n = 300
@@ -456,22 +429,5 @@ class StreamingDedupSpec extends SparkSuite {
     }
     assert(err.getMessage.contains("rebuild"),
       s"must refuse with a rebuild instruction, got: ${err.getMessage}")
-  }
-
-  test("state cap suppresses hot-bucket blowup but is counted, not silent") {
-    implicit val sqlCtx = spark.sqlContext
-    val tiny = cfg.copy(saltMaxBucket = 3)
-    // 10 identical docs -> every band bucket would hold 10 members
-    val stream = MemoryStream[(Long, String, String)]
-    val q = StreamingDedup.candidatePairsStream(
-      StreamingDedup.bandKeys(stream.toDF().toDF("doc_id", "text", "lang"), tiny), tiny)
-      .writeStream.outputMode("append").format("memory").queryName("capped").start()
-    try {
-      val text = (1 to 50).map(i => s"tok$i").mkString(" ")
-      stream.addData((0L until 10L).map(i => (i, text, "en")))
-      q.processAllAvailable()
-      val pairs = spark.table("capped").select("a", "b").distinct().count()
-      assert(pairs === 3L * 2 / 2) // C(3,2): only 3 members admitted per bucket
-    } finally q.stop()
   }
 }
