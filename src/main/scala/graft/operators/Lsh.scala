@@ -538,14 +538,13 @@ object Lsh {
     * genuinely new link the from-scratch build would also know) and
     * NO-PAIR-TWICE (an already-emitted pair can never merge again). The
     * no-pair-twice property needs the seed to cover EVERY pair emitted so
-    * far — DedupMain's multi-day pending loop therefore refreshes it with
-    * an incremental-CC pass between pending days (a stale pre-append
-    * snapshot merely degraded to re-emitting a drift link found earlier
-    * in the same run — duplicate day-partition rows, harmless to CC, but
-    * an over-count for pair consumers). Without it (`None` seeds throughout,
-    * e.g. the batch hot lanes or a first streaming batch) every member
-    * starts a singleton and the operator emits more redundant-but-verified
-    * edges. */
+    * far — DedupMain's day append therefore extends the clusters snapshot
+    * over the done days it misses, and lists its whole pending backlog as
+    * one increment (a stale seed re-emits drift links — duplicate
+    * day-partition rows, harmless to CC, but an over-count for pair
+    * consumers). Without it (`None` seeds throughout, e.g. the batch hot
+    * lanes or a first streaming batch) every member starts a singleton and
+    * the operator emits more redundant-but-verified edges. */
   private def seedUnion(seeds: Array[Option[Long]], forest: Forest): Unit = {
     val first = new scala.collection.mutable.HashMap[Long, Int]()
     var i = 0
@@ -702,7 +701,7 @@ object Lsh {
     * the session's ContextCleaner collects them (periodic GC cadence) —
     * a decontamination loop calling this per increment should run each
     * call through its own stage boundary (materialize + let the facade
-    * lifecycle release), as DedupMain's day loop does for its stages.
+    * lifecycle release), as DedupMain's day path does for its stages.
     */
   def crossDupPairs(corpus: DataFrame, reference: DataFrame, cfg: DedupConfig,
                     maxBucket: Int = 100 * 1000): DataFrame = {

@@ -18,9 +18,12 @@ import org.apache.spark.sql.functions._
  * affected stage; a different day-less input at the same root too.
  * Checkpoint alone commits, detects torn and resumes stages; this object
  * keeps its own decisions: each stage's layout, the dup_pairs resume /
- * day-append / full-build choice (shard hysteresis, seed refresh) and the
- * pairs' generation-day partitioning. Metrics and per-partition lineage
- * append under `<outRoot>/_metrics` / `_lineage`.
+ * day-append / full-build choice (shard hysteresis, the lane seed) and the
+ * pairs' generation-day partitioning. A day-granular run builds dup_pairs
+ * once: every input day as new (full build), or the whole pending-day
+ * backlog as ONE new×all increment against the done days — one plan, one
+ * write, one commit. Metrics and per-partition lineage append under
+ * `<outRoot>/_metrics` / `_lineage`.
  *
  * Accepts either the canonical pages shape (url, warc_ts, html, text,
  * lang) — extracting text with E1 where null and deriving doc_id =
@@ -65,7 +68,7 @@ object DedupMain {
   /** Normalize any accepted input shape to (doc_id, text, lang, warc_day).
     * `warc_day` (day-truncated warc_ts, null for day-less inputs) rides
     * along so the docs stage's lineage rows carry the crawl-day partition
-    * value — the key `Resume.doneDays`/`pendingDays` resume on. */
+    * value — the key `Resume.doneDays` resumes on. */
   def toDocs(input: DataFrame): DataFrame = {
     val cols = input.columns.toSet
     val day =
@@ -202,16 +205,15 @@ object DedupMain {
     // ';' separator — the manifest's flat JSON parser treats ',' as a
     // field delimiter, so a comma inside the key would corrupt the readback
     val substrKey = s"$inputKey;substr_shards=$substrShards"
-    val dupKey = Checkpoint.stageKey(cfg, substrKey)
     val dupDir = s"$root/dup_pairs"
     // the last COMMITTED pair store: a full Overwrite that crashed mid-write
     // leaves a partial dir while OLDER per-day lineage (same bare
     // configHash) survives — resuming or appending onto it would silently
     // lose the old days' pairs. `_SUCCESS` only exists after a completed job
-    // commit (a torn per-day dynamic overwrite keeps the previous commit's
-    // marker AND its partial files invisible in _temporary).
+    // commit (a torn dynamic overwrite keeps the previous commit's marker
+    // AND its partial files invisible in _temporary).
     val prevDup = Checkpoint.current(spark, root, "dup_pairs")
-    // the loud-cap counter sink of the full build (one slot per family)
+    // the loud-cap counter sink of every pair build (one slot per family)
     val counters = PairPlan.Counters(
       spark.sparkContext.longAccumulator("minhash_lane_suppressed_pairs"),
       spark.sparkContext.longAccumulator("simhash_starcap_suppressed_pairs"),
@@ -238,15 +240,16 @@ object DedupMain {
         signatures.select("doc_id", "simhash"), cfg,
         Some(ExactSubstr.substrDupPairs(docs, cfg, Some(substrShards), _)), Some(counters))
     }
-    def pairMetricsAfterBuild(): Unit = Metrics.append(spark, root, runId, Seq(
-      Metrics.Row("substr_shards", substrShards.toLong, 0L),
+    /** The counter rows of a pair build at `shards` substring shards. */
+    def pairMetricsAfterBuild(shards: Int): Seq[Metrics.Row] = Seq(
+      Metrics.Row("substr_shards", shards.toLong, 0L),
       Metrics.Row("substr_starcap_dropped_pairs", counters.substr.value, 0L),
       // exact (task-counted) redundant-for-connectivity verified pairs the
       // simhash forest suppressed — loud cap, never silent
       Metrics.Row("simhash_starcap_suppressed_pairs", counters.simhash.value, 0L),
       // minhash hot lanes: pairs skipped as already-connected through
       // verified edges (upper bound on redundant verified pairs) — loud
-      Metrics.Row("minhash_lane_suppressed_pairs", counters.minhash.value, 0L)))
+      Metrics.Row("minhash_lane_suppressed_pairs", counters.minhash.value, 0L))
 
     val inDays: Seq[java.sql.Timestamp] =
       if (dayGranular)
@@ -272,6 +275,10 @@ object DedupMain {
         .map(_.stripPrefix(prefix).split("\\+").filter(_.nonEmpty)
           .map(s => new java.sql.Timestamp(s.toLong)).toSet)
     }
+    def snapshot(): DataFrame =
+      spark.read.parquet(s"$root/clusters").select("doc_id", "cluster_id")
+    def onDays(days: Iterable[java.sql.Timestamp]) =
+      col("warc_day").isin(days.toSeq.map(x => x: Any): _*)
 
     val dupPairs: DataFrame =
       if (!dayGranular) {
@@ -286,23 +293,26 @@ object DedupMain {
           }
         }
         // the stage wrote and re-read its parquet: the plan's blocks are dead
-        built.foreach { plan => plan.release(); pairMetricsAfterBuild() }
+        built.foreach { plan =>
+          plan.release()
+          Metrics.append(spark, root, runId, pairMetricsAfterBuild(substrShards))
+        }
         out
       } else {
         // Day-granular pair store: partitioned by the pair's GENERATION day
-        // (max of its two docs' crawl days — the day the pair first became
-        // generable in day-ordered processing), with per-day lineage rows
-        // under the BARE configHash so day bookkeeping survives input-key
-        // changes. Three states:
+        // (the latest NEW crawl day among its two docs — the day the pair
+        // first became generable in day-ordered processing), with per-day
+        // lineage rows under the BARE configHash so day bookkeeping survives
+        // input-key changes. Three states:
         //  1. manifest key matches (same config, same input) → resume;
         //  2. same configHash, lineage covers a strict subset of the input
-        //     days → DAY-APPEND: each pending day costs new×all candidate
-        //     generation + verify, not all×all (the streaming bridge's
-        //     discipline, ported);
+        //     days → DAY-APPEND: the pending days are ONE increment costing
+        //     new×all candidate generation + verify, not all×all (the
+        //     streaming bridge's discipline, ported);
         //  3. otherwise (first build / config change / shrunk input) →
-        //     full build.
+        //     full build, every input day new.
+        // States 2 and 3 build one plan, write it once and commit once.
         val doneDays = Checkpoint.doneDaySet(spark, root, "dup_pairs", cfg.configHash)
-        val pending = inDays.filterNot(doneDays.contains)
         // previous state at the SAME config: (docs_rows, substr_shards) it
         // was built at. The shard count is PINNED across appends (shard
         // assignment must match the accumulated pair table), with
@@ -323,82 +333,85 @@ object DedupMain {
           Metrics.append(spark, root, runId,
             Seq(Metrics.Row("dup_pairs", prevDup.get.rowCount, 0L, resumed = true)))
           spark.read.parquet(dupDir)
-        } else if (prevKeyInfo.isDefined && shardsFit &&
-                   doneDays.nonEmpty && doneDays.subsetOf(inDays.toSet)) {
-          val t0 = System.nanoTime()
-          // previous cluster assignment = `Lsh.lanePairs`' union-find
-          // seed (sound merge-emit; see Lsh.seedUnion). Read lazily — the
-          // clusters stage only overwrites this dir AFTER the append loop.
-          val clustersSeed: Option[DataFrame] = prevCovered.map(_ =>
-            spark.read.parquet(s"$root/clusters").select("doc_id", "cluster_id"))
-          var ctx = inDays.filter(doneDays.contains)
-          // The lane seed is REFRESHED with an incremental-CC pass so it
-          // covers EVERY pair emitted so far — day d+1's seeded lanes then
-          // cannot re-merge (and so re-emit) a link day d already wrote,
-          // keeping dup_pairs day partitions duplicate-free
-          // (DayResumeSpec-asserted; the pre-r6 pre-append-snapshot seed
-          // re-emitted drift links across partitions). Cost per refresh:
-          // O(clusters + refreshed days' pairs) — the incremental-CC
-          // bound. Superseded seed checkpoints are released once the next
-          // one is eagerly materialized (the CC round-lifecycle lesson).
-          var seedCkpt: Option[DataFrame] = None // the refresh we own blocks of
-          var seed: Option[DataFrame] = clustersSeed
-          def refreshSeed(days: Seq[java.sql.Timestamp]): Unit = if (days.nonEmpty) {
-            val dayPairs = spark.read.parquet(dupDir)
-              .where(col("warc_day").isin(days.map(x => x: Any): _*))
-            val next = ConnectedComponents.extend(seed, dayPairs)
-              .localCheckpoint(true,
-                org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-            seedCkpt.foreach(LocalCheckpoints.release)
-            seedCkpt = Some(next)
-            seed = Some(next)
-          }
-          // Crash-resume gap: a previous run may have appended day
-          // partitions and died BEFORE its clusters rebuild — the committed
-          // snapshot then does not cover those done days' pairs, and
-          // seeding from it alone would let the first pending day re-emit
-          // their links. Refresh over the done days it misses (all of them
-          // when no usable snapshot exists).
-          refreshSeed(ctx.filterNot(prevCovered.getOrElse(Set.empty).contains))
-          pending.zipWithIndex.foreach { case (d, i) =>
-            appendDayPairs(spark, root, runId, cfg, docs, shingled, signatures,
-              bandKeysDay.get, seed, ctx, d, prevShards.get)
-            ctx = ctx :+ d
-            // not after the last day — the clusters stage rebuild covers it
-            if (i < pending.size - 1) refreshSeed(Seq(d))
-          }
-          seedCkpt.foreach(LocalCheckpoints.release)
-          val out = spark.read.parquet(dupDir)
-          val wallMs = (System.nanoTime() - t0) / 1000000L
-          Checkpoint.commit(spark, root, runId, Some(Checkpoint.Manifest("dup_pairs",
-              Checkpoint.stageKey(cfg, s"$inputKey;substr_shards=${prevShards.get}"),
-              out.count(), wallMs)),
-            Seq(Metrics.Row("dup_pairs_incremental_days", pending.size.toLong, wallMs)), Nil)
-          out
         } else {
           val t0 = System.nanoTime()
-          val dd = docs.select(col("doc_id"), col("warc_day"))
-          val plan = buildAllPairs()
+          val append = prevKeyInfo.isDefined && shardsFit &&
+            doneDays.nonEmpty && doneDays.subsetOf(inDays.toSet)
+          val newDays = if (append) inDays.filterNot(doneDays.contains) else inDays
+          val shards = if (append) prevShards.get else substrShards
+          val isNew = onDays(newDays)
+          // the append's lane seed (`Lsh.lanePairs`' union-find seed; sound
+          // merge-emit, see Lsh.seedUnion) must cover every pair written so
+          // far: the last committed clusters snapshot, extended once over
+          // the done days it misses — a run that wrote pairs and died before
+          // its clusters rebuild (all done days when there is no snapshot).
+          // Read lazily: the clusters stage overwrites that dir only later.
+          val missed = doneDays -- prevCovered.getOrElse(Set.empty)
+          val seed: Option[DataFrame] = if (!append) None else {
+            val snap = prevCovered.map(_ => snapshot())
+            if (missed.isEmpty) snap
+            else Some(ConnectedComponents.extend(snap, spark.read.parquet(dupDir).where(onDays(missed)))
+              .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
+          }
+          // band keys come from storage on BOTH sides (r4 re-derived and
+          // block-cached corpus×52 keys from signatures per appended day —
+          // measured ~80% of the append wall); each leg of the new×all
+          // operator re-scans the day-pruned, key-bucketed table
+          def keys(side: org.apache.spark.sql.Column, fam: String) =
+            bandKeysDay.get.where(side && col("family") === fam).select("doc_id", "key")
+          // payload: the doc_id-bucketed stage rows of the requested ids
+          def rows(stage: DataFrame, payload: String)(ids: DataFrame): DataFrame =
+            stage.select("doc_id", payload).join(ids, Seq("doc_id"), "left_semi")
+          // cap = saltMaxBucket for BOTH families: below it the new×all
+          // listing is exact (the batch path's cold cliques restricted to
+          // new-involving pairs); above it, the census-salted lanes use the
+          // IDENTICAL salt formula as the batch build and are resolved
+          // in-task by the family's exact-verified forest — no unverified
+          // edge anywhere. A touched lane may expose an old↔old drift link
+          // (census growth co-locating a pair no earlier lane saw), emitted
+          // deliberately (added true connectivity); the seed covers every
+          // stored pair, so no link is emitted twice.
+          val plan =
+            if (!append) buildAllPairs()
+            else PairPlan.newVsAll(
+              PairPlan.Increment(keys(isNew, "minhash"), keys(!isNew, "minhash"),
+                rows(shingled, "shingles")),
+              PairPlan.Increment(keys(isNew, "simhash"), keys(!isNew, "simhash"),
+                rows(signatures, "simhash")),
+              seed, cfg,
+              Some(ExactSubstr.substrDupPairsIncremental(
+                docs.where(isNew), docs.where(!isNew), cfg, shards, _)),
+              Some(counters))
+          // generation day = the latest new day among the pair's docs; an
+          // old↔old drift link falls back to the latest new day. Only new
+          // days' partitions are written, so the append's dynamic overwrite
+          // never replaces a done day (a late day older than a done one
+          // included) and a torn append overwrites itself.
+          def newDay(id: String) =
+            docs.where(isNew).select(col("doc_id").as(id), col("warc_day").as(s"nd_$id"))
           plan.materialize { pairs =>
             Checkpoint.Parquet.write(pairs
-              .join(dd.select(col("doc_id").as("a"), col("warc_day").as("da")), "a")
-              .join(dd.select(col("doc_id").as("b"), col("warc_day").as("db")), "b")
-              .withColumn("warc_day", greatest(col("da"), col("db")))
-              .select("a", "b", "family", "warc_day"), root, "dup_pairs", Seq("warc_day"), addDays = false)
+              .join(newDay("a"), Seq("a"), "left").join(newDay("b"), Seq("b"), "left")
+              .withColumn("warc_day",
+                coalesce(greatest(col("nd_a"), col("nd_b")), lit(newDays.lastOption.orNull)))
+              .select("a", "b", "family", "warc_day"), root, "dup_pairs", Seq("warc_day"),
+              addDays = append)
           }
           plan.release()
+          seed.foreach(LocalCheckpoints.release)
           val out = spark.read.parquet(dupDir)
-          val rows = out.count()
-          val wallMs = (System.nanoTime() - t0) / 1000000L
-          // every input day is now covered — zero-pair days included, or
-          // the append gate would reprocess them forever
           val perDay = out.groupBy("warc_day").count().collect()
             .map(r => r.getTimestamp(0) -> r.getLong(1)).toMap
+          val total = perDay.values.sum
+          val wallMs = (System.nanoTime() - t0) / 1000000L
+          // every new day is now covered — zero-pair days included, or the
+          // append gate would reprocess them forever
           Checkpoint.commit(spark, root, runId,
-            Some(Checkpoint.Manifest("dup_pairs", dupKey, rows, wallMs)),
-            Seq(Metrics.Row("dup_pairs", rows, wallMs)),
-            Lineage.days("dup_pairs", cfg.configHash, inDays.map(d => d -> perDay.getOrElse(d, 0L))))
-          pairMetricsAfterBuild()
+            Some(Checkpoint.Manifest("dup_pairs",
+              Checkpoint.stageKey(cfg, s"$inputKey;substr_shards=$shards"), total, wallMs)),
+            (if (append) Metrics.Row("dup_pairs_incremental_days", newDays.size.toLong, wallMs)
+             else Metrics.Row("dup_pairs", total, wallMs)) +: pairMetricsAfterBuild(shards),
+            Lineage.days("dup_pairs", cfg.configHash, newDays.map(d => d -> perDay.getOrElse(d, 0L))))
           out
         }
       }
@@ -417,22 +430,14 @@ object DedupMain {
       // the same bound the streaming bridge's incremental CC runs at. A
       // crashed predecessor (pairs appended, clusters stale) parses as a
       // smaller covered set and still rebuilds from exactly the missing
-      // days' pairs.
+      // days' pairs. Without a usable snapshot it is CC over every pair.
       stage("clusters", extraKey = dayListKey(inDays)) {
-        prevCovered match {
-          case Some(cov) if cov.nonEmpty && cov.subsetOf(inDays.toSet) =>
-            // eager: the stage write overwrites the dir being read
-            val prev = spark.read.parquet(s"$root/clusters")
-              .select("doc_id", "cluster_id")
-              .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-            val newDays = inDays.filterNot(cov.contains)
-            val newPairs = dupPairs
-              .where(col("warc_day").isin(newDays.map(x => x: Any): _*))
-            ConnectedComponents.clusters(ConnectedComponents.extend(Some(prev), newPairs))
-          case _ =>
-            ConnectedComponents.clusters(
-              ConnectedComponents.assign(dupPairs.select("a", "b")))
-        }
+        val cov = prevCovered.filter(c => c.nonEmpty && c.subsetOf(inDays.toSet))
+        // eager: the stage write overwrites the dir being read
+        val prev = cov.map(_ => snapshot()
+          .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
+        ConnectedComponents.clusters(ConnectedComponents.extend(prev,
+          cov.fold(dupPairs)(c => dupPairs.where(onDays(inDays.filterNot(c.contains))))))
       }
     }
 
@@ -449,71 +454,6 @@ object DedupMain {
       }
     }
     clustersOut
-  }
-
-  /** One pending crawl day of the incremental pair build: new×all
-    * candidates per family (`PairPlan.newVsAll`; minhash/simhash band keys
-    * read from the PERSISTED band_keys stage — partition-pruned scans, zero
-    * key re-derivation for the old corpus; substring via the gram new×all
-    * route + new-docs suffix-array shards), verify joins
-    * candidate-restricted, and the day's pairs written into their own
-    * partition with dynamic overwrite — a torn day is recomputed and
-    * overwrites itself, never double-appends. Lineage marks the day done
-    * under the bare configHash. */
-  private def appendDayPairs(spark: SparkSession, root: String, runId: String,
-                             cfg: DedupConfig, docs: DataFrame, shingled: DataFrame,
-                             signatures: DataFrame, bandKeys: DataFrame,
-                             clustersSeed: Option[DataFrame],
-                             ctxDays: Seq[java.sql.Timestamp],
-                             d: java.sql.Timestamp, substrShards: Int): Unit = {
-    val t0 = System.nanoTime()
-    // loud-cap accounting for the appended day (estimates, counted by the
-    // hot censuses of all three routes — never silent): one accumulator in
-    // every slot of the sink
-    val daySuppressed = spark.sparkContext.longAccumulator("append_suppressed_pairs")
-    val isNew = col("warc_day") === lit(d)
-    val isOld = col("warc_day").isin(ctxDays.map(x => x: Any): _*)
-    // band keys come from storage on BOTH sides (r4 re-derived and block-
-    // cached corpus×52 keys from signatures per appended day — measured
-    // ~80% of the append wall); each leg of the new×all operator re-scans
-    // the day-pruned, key-bucketed table instead of caching it
-    def keys(side: org.apache.spark.sql.Column, fam: String) =
-      bandKeys.where(side && col("family") === fam).select("doc_id", "key")
-    // payload: the day-filtered doc_id-bucketed stage rows of the requested ids
-    def rows(stage: DataFrame, payload: String)(ids: DataFrame): DataFrame =
-      stage.where(isNew || isOld).select("doc_id", payload)
-        .join(ids, Seq("doc_id"), "left_semi")
-    // cap = saltMaxBucket for BOTH families: below it the new×all listing
-    // is exact (same pair set as the batch path's cold cliques restricted
-    // to new-involving pairs); above it, the census-salted lanes use the
-    // IDENTICAL salt formula as the batch build and are resolved in-task
-    // by the family's exact-verified forest — no unverified edge anywhere
-    // (a pairStarCap hub star here split clusters at 240k; r4's hub
-    // spokes were the same class). Touched-lane merges are usually
-    // new-involving but NOT exclusively: a lane may expose an old↔old
-    // drift link (census growth co-locating a pair no earlier lane saw),
-    // emitted deliberately (added true connectivity). The caller refreshes
-    // the seed between pending days, so a link emitted in day k can never
-    // re-merge — and so never re-emit — in day k+1 (Lsh.seedUnion
-    // documents the soundness argument).
-    val plan = PairPlan.newVsAll(
-      PairPlan.Increment(keys(isNew, "minhash"), keys(isOld, "minhash"),
-        rows(shingled, "shingles")),
-      PairPlan.Increment(keys(isNew, "simhash"), keys(isOld, "simhash"),
-        rows(signatures, "simhash")),
-      clustersSeed, cfg,
-      Some(ExactSubstr.substrDupPairsIncremental(
-        docs.where(isNew), docs.where(isOld), cfg, substrShards, _)),
-      Some(PairPlan.Counters(daySuppressed, daySuppressed, daySuppressed)))
-    plan.materialize { pairs => Checkpoint.Parquet.write(pairs.withColumn("warc_day", lit(d)),
-      root, "dup_pairs", Seq("warc_day"), addDays = true) }
-    plan.release()
-    val n = spark.read.parquet(s"$root/dup_pairs").where(isNew).count()
-    val wallMs = (System.nanoTime() - t0) / 1000000L
-    Checkpoint.commit(spark, root, runId, None,
-      Seq(Metrics.Row("dup_pairs_day", n, wallMs),
-          Metrics.Row("append_suppressed_pairs_day", daySuppressed.value, 0L)),
-      Lineage.days("dup_pairs", cfg.configHash, Seq(d -> n)))
   }
 
   def main(args: Array[String]): Unit = {

@@ -265,8 +265,8 @@ object ScalingBench {
       val all = spark.read.parquet(corpus)
       // SPARK_GRAFT_APPEND_DAYS=k (default 1): the head run covers all but
       // the last k crawl days; the append run adds those k days in ONE
-      // DedupMain invocation (the multi-day ordered-context path) — the
-      // append-wall-vs-#pending-days cost curve the verdict asked to pin
+      // DedupMain invocation (the k-day backlog as one new×all increment)
+      // — the append-wall-vs-#pending-days cost curve
       val pendK = sys.env.getOrElse("SPARK_GRAFT_APPEND_DAYS", "1").toInt
       require(pendK >= 1, s"SPARK_GRAFT_APPEND_DAYS must be >= 1, got $pendK")
       val days = all.select(date_trunc("day", col("warc_ts")).as("d"))

@@ -50,22 +50,6 @@ class CheckpointSpec extends SparkSuite {
     assert(lin.select("config_hash").as[String].head() === cfg.configHash)
   }
 
-  /** Formatted messages `logger` emits while `body` runs. */
-  private def captureLog(logger: String)(body: => Unit): Seq[String] = {
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val appender = new org.apache.logging.log4j.core.appender.AbstractAppender(
-        "capture", null, null, true, org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
-      override def append(e: org.apache.logging.log4j.core.LogEvent): Unit =
-        seen.add(e.getMessage.getFormattedMessage)
-    }
-    appender.start()
-    val log = org.apache.logging.log4j.LogManager.getLogger(logger)
-      .asInstanceOf[org.apache.logging.log4j.core.Logger]
-    log.addAppender(appender)
-    try body finally { log.removeAppender(appender); appender.stop() }
-    seen.toArray.toSeq.map(_.toString)
-  }
-
   test("reading _lineage/_metrics logs no ignored-path WARN during DedupMain.run") {
     val input = tmpRoot() + "/pages.parquet"
     PagesGen.pages(spark, 60, cfg).toDF().write.parquet(input)

@@ -142,9 +142,10 @@ class DayResumeSpec extends SparkSuite {
 
   test("multi-day append: two pending days process in order, parity with from-scratch") {
     // days 1-2 built first, then days 3 AND 4 appended in ONE run: the
-    // pending loop must process them oldest-first with a growing context
-    // (day-3↔day-4 pairs are generated when day 4 runs, day 3 then being
-    // part of "all") and still reproduce the from-scratch clusters.
+    // pending backlog is one new×all increment (day-3↔day-4 pairs are
+    // new↔new pairs of that increment, partitioned under day 4), listed
+    // through ONE famCounts barrier, and still reproduces the from-scratch
+    // clusters.
     val pages = PagesGen.pages(spark, 160, cfg).toDF()
       .withColumn("warc_ts",
         timestamp_seconds(unix_timestamp(col("warc_ts")) +
@@ -157,12 +158,22 @@ class DayResumeSpec extends SparkSuite {
     pages.write.parquet(in4)
     val root = tmpRoot()
     DedupMain.run(spark, in2, root, cfg, "base").count()
-    val appended = DedupMain.run(spark, in4, root, cfg, "app2")
-      .select("doc_id", "cluster_id").as[(Long, Long)].collect().toSet
+    val barriers = new java.util.concurrent.atomic.AtomicInteger()
+    val appended = listening(new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case x: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+            if x.description == graft.operators.PairPlan.FamCountsBarrier => barriers.incrementAndGet()
+        case _ =>
+      }
+    }) {
+      DedupMain.run(spark, in4, root, cfg, "app2")
+        .select("doc_id", "cluster_id").as[(Long, Long)].collect().toSet
+    }
     assert(Metrics.read(spark, root)
       .where(col("run_id") === "app2" && col("stage") === "dup_pairs_incremental_days")
       .select("rows_out").as[Long].head() === 2L,
       "both pending days must go through the incremental path")
+    assert(barriers.get === 1, "the two-day backlog must be listed as one pair plan")
     val freshRoot = tmpRoot()
     val fresh = DedupMain.run(spark, in4, freshRoot, cfg, "fresh2")
       .select("doc_id", "cluster_id").as[(Long, Long)].collect().toSet
@@ -212,12 +223,13 @@ class DayResumeSpec extends SparkSuite {
   }
 
   test("2-pending-day HOT append: dup_pairs partitions are duplicate-free, parity holds") {
-    // the VERDICT_r5 #2 contract: the lane seed refreshes between pending
-    // days, so a drift link emitted in pending day k cannot re-emit in day
-    // k+1 — zero duplicate (a, b, family) rows across day partitions. The
-    // hot regime (saltMaxBucket=8 → the 5% boilerplate clique salts in
-    // every band) is where drift links live; a 2-day pending backlog is
-    // the geometry that re-emitted them pre-r6.
+    // the VERDICT_r5 #2 contract: zero duplicate (a, b, family) rows
+    // across day partitions. The backlog is one increment, so its pairs
+    // are deduplicated together and its lane seed covers every stored
+    // pair. The hot regime (saltMaxBucket=8 → the 5% boilerplate clique
+    // salts in every band) is where drift links live; a 2-day pending
+    // backlog is the geometry that re-emitted them pre-r6, when each
+    // pending day was its own increment.
     val hot = cfg.copy(saltMaxBucket = 8)
     val pages = PagesGen.pages(spark, 400, hot).toDF()
       .withColumn("warc_ts",
@@ -236,9 +248,8 @@ class DayResumeSpec extends SparkSuite {
     assert(Metrics.read(spark, root)
       .where(col("run_id") === "app2" && col("stage") === "dup_pairs_incremental_days")
       .select("rows_out").as[Long].head() === 2L)
-    // duplicate-free across ALL day partitions (within-day dedup already
-    // holds via Lsh.dupPairs; cross-day re-emission is what the refreshed
-    // seed eliminates)
+    // duplicate-free across ALL day partitions (within the increment via
+    // Lsh.dupPairs; against the stored days via the seed)
     val pairRows = spark.read.parquet(s"$root/dup_pairs")
       .groupBy("a", "b", "family").count().where(col("count") > 1).collect()
     assert(pairRows.isEmpty,
@@ -253,7 +264,7 @@ class DayResumeSpec extends SparkSuite {
   test("crash-resume: the seed refresh covers done days the clusters snapshot misses") {
     // a previous run appended day-3's pair partition and died BEFORE its
     // clusters rebuild: the committed snapshot covers only days 1-2. The
-    // resume must refresh the seed over day 3's pairs before appending
+    // resume must extend the seed over day 3's pairs before appending
     // day 4, or day-4 lanes could re-emit day-3 links (duplicate pair
     // rows) — and clusters must still equal from-scratch.
     val hot = cfg.copy(saltMaxBucket = 8)
@@ -292,6 +303,51 @@ class DayResumeSpec extends SparkSuite {
     val fresh = DedupMain.run(spark, in4, freshRoot, hot, "fresh4")
       .select("doc_id", "cluster_id").as[(Long, Long)].collect().toSet
     assert(appended === fresh)
+  }
+
+  test("late-arriving day: appending a day older than a done day keeps the done day's pairs") {
+    // days 1 and 3 built first, then day 2 arrives: every pair the append
+    // writes goes to day 2's partition, so day 3's stored pairs survive the
+    // dynamic partition overwrite
+    val pages = PagesGen.pages(spark, 160, cfg).toDF()
+      .withColumn("warc_ts",
+        timestamp_seconds(unix_timestamp(col("warc_ts")) +
+          pmod(xxhash64(col("url")), lit(3)) * 86400L))
+    val days = pages.select(date_trunc("day", col("warc_ts")).as("d"))
+      .distinct().orderBy("d").collect().map(_.getTimestamp(0))
+    assert(days.length === 3)
+    val in13 = tmpRoot() + "/in13.parquet"
+    val in123 = tmpRoot() + "/in123.parquet"
+    pages.where(date_trunc("day", col("warc_ts")) =!= lit(days(1))).write.parquet(in13)
+    pages.write.parquet(in123)
+    val root = tmpRoot()
+    DedupMain.run(spark, in13, root, cfg, "base").count()
+    def day3Rows() = spark.read.parquet(s"$root/dup_pairs")
+      .where(col("warc_day") === lit(days(2)))
+      .select("a", "b", "family").as[(Long, Long, String)].collect().toSet
+    val day3Before = day3Rows()
+    assert(day3Before.nonEmpty)
+    val appended = DedupMain.run(spark, in123, root, cfg, "late")
+      .select("doc_id", "cluster_id").as[(Long, Long)].collect().toSet
+    assert(Metrics.read(spark, root)
+      .where(col("run_id") === "late" && col("stage") === "dup_pairs_incremental_days")
+      .select("rows_out").as[Long].head() === 1L, "day 2 must be appended, not rebuilt")
+    assert(day3Rows() === day3Before, "the done day's pairs must be unchanged")
+    val dupRows = spark.read.parquet(s"$root/dup_pairs")
+      .groupBy("a", "b", "family").count().where(col("count") > 1).collect()
+    assert(dupRows.isEmpty, s"duplicate pair rows: ${dupRows.take(5).mkString(", ")}")
+    assert(lineageDays(root, "dup_pairs", "late") === Set(days(1)))
+    val freshRoot = tmpRoot()
+    val fresh = DedupMain.run(spark, in123, freshRoot, cfg, "fresh")
+      .select("doc_id", "cluster_id").as[(Long, Long)].collect().toSet
+    assert(appended === fresh, "late-day append must equal the from-scratch clusters")
+    // the fixture holds day-2↔day-3 pairs: a rule partitioning the append's
+    // pairs by their docs' latest day would write them to day 3
+    val docDay = spark.read.parquet(s"$root/docs").select("doc_id", "warc_day")
+      .as[(Long, java.sql.Timestamp)].collect().toMap
+    assert(spark.read.parquet(s"$freshRoot/dup_pairs").select("a", "b")
+      .as[(Long, Long)].collect()
+      .exists { case (a, b) => Set(docDay(a), docDay(b)) == Set(days(1), days(2)) })
   }
 
   test("keepBest quality dedup on the staged path: append invalidates it, parity with from-scratch") {
