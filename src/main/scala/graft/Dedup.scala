@@ -70,21 +70,6 @@ object Dedup {
     docs.join(drop, Seq("doc_id"), "left_anti")
   }
 
-  /** Quality-aware dedup: every cluster keeps its HIGHEST-`score` member
-    * (smallest doc_id on ties — fully deterministic); singletons pass
-    * through untouched. This is the policy a training-data pipeline
-    * actually wants — "keep the best copy", not "keep the first crawled".
-    *
-    * Scale shape: the score is evaluated only on CLUSTERED docs (the
-    * assignment is a tiny table relative to the corpus), the winner per
-    * cluster comes from one partial-aggregating `max(struct(score,
-    * -doc_id))` groupBy — no per-cluster window, the same mega-cluster
-    * skew rule as `ConnectedComponents.clusters` — and the corpus is
-    * touched only by one final anti-join against the loser id list. */
-  def dedupeBy(docs: DataFrame, score: org.apache.spark.sql.Column,
-               cfg: DedupConfig = DedupConfig.test): DataFrame =
-    keepBest(docs, ConnectedComponents.assign(dupPairs(docs, cfg).select("a", "b")), score)
-
   /** Keep, for every cluster of `assignment`, the member with the highest
     * `score` (smallest doc_id on ties); docs outside any cluster pass
     * through. The winner per cluster comes from one partial-aggregating

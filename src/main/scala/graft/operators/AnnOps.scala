@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
  *  - `bruteTopK` / `bruteCosinePairs`: exact cosine via a broadcast
  *    cartesian product — the correctness baseline. Fine when one side fits
  *    in an executor (queries × corpus); never the 100 TB self-join path.
- *  - `lshTopK` / `lshCosinePairs`: the scale path — random-hyperplane LSH
+ *  - `lshTopK`: the scale path — random-hyperplane LSH
  *    bucketing [Charikar02]: vectors only meet inside a (table, key)
  *    bucket, so the join is an equi-join that shuffles by bucket (AQE
  *    skew-split applies), O(n·tables) rows instead of O(n²) pairs.
@@ -191,14 +191,6 @@ object AnnOps {
       .where(col("rank") <= k)
       .select("vec_id", "rank", "neighbor_id", "cos")
   }
-
-  /** Embedding near-dup pairs at a cosine threshold via LSH buckets
-    * (embedding-cosine near-dup op from the brief): (a, b, cos). */
-  def cosineDupPairs(emb: DataFrame, threshold: Double, tables: Int = 8,
-                     bitsPerTable: Int = 8, seed: Long = 0x5EAC15DL): DataFrame =
-    withCosine(lshCandidatePairs(emb, tables, bitsPerTable, seed), emb)
-      .where(col("cos") >= threshold)
-      .select("a", "b", "cos")
 
   // ---- IVF (inverted-file) route ---------------------------------------
 

@@ -748,15 +748,6 @@ object Lsh {
            coalesce(sum(col("count") * col("rc")), lit(0L)).as("suppressed_candidates"))
   }
 
-  /** Near-dup decontamination (the training-data policy over
-    * `crossDupPairs`): the corpus with every doc near-duplicating a
-    * reference doc removed — one anti-join against the (small) hit list. */
-  def decontaminateNearDup(corpus: DataFrame, reference: DataFrame,
-                           cfg: DedupConfig, maxBucket: Int = 100 * 1000): DataFrame =
-    corpus.join(
-      crossDupPairs(corpus, reference, cfg, maxBucket).select("doc_id").distinct(),
-      Seq("doc_id"), "left_anti")
-
   /** V3 — evidence accumulation [FredJain05]: union of verified pair
     * families, canonicalized and tagged. Schema: (a, b, family). */
   def dupPairs(minhash: DataFrame, simhash: DataFrame, substr: DataFrame): DataFrame = {

@@ -60,6 +60,13 @@ object Checkpoint {
     try out.write(json.getBytes("UTF-8")) finally out.close()
   }
 
+  /** Forget a stage's last commit: without its manifest no later run
+    * resumes or extends the stage's rows. */
+  private[run] def drop(spark: SparkSession, root: String, stage: String): Unit = {
+    val p = manifestPath(root, stage)
+    fs(spark, p).delete(p, false)
+  }
+
   private[run] def md5(s: String): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString

@@ -19,15 +19,18 @@ import org.apache.spark.sql.functions._
  * Checkpoint alone commits, detects torn and resumes stages; this object
  * keeps its own decisions: each stage's layout, the dup_pairs resume /
  * day-append / full-build choice (shard hysteresis, the lane seed) and the
- * pairs' generation-day partitioning. A day-granular run builds dup_pairs
- * once: every input day as new (full build), or the whole pending-day
- * backlog as ONE new×all increment against the done days — one plan, one
- * write, one commit. Metrics and per-partition lineage append under
+ * pairs' generation-day partitioning. dup_pairs is built once per run:
+ * every input day as new (full build), or the whole pending-day backlog as
+ * ONE new×all increment against the done days — one plan, one write, one
+ * commit. Metrics and per-partition lineage append under
  * `<outRoot>/_metrics` / `_lineage`.
  *
  * Accepts either the canonical pages shape (url, warc_ts, html, text,
  * lang) — extracting text with E1 where null and deriving doc_id =
- * xxhash64(url) — or a documents shape (doc_id, text, lang).
+ * xxhash64(url) — or a documents shape (doc_id, text, lang). The shape
+ * decides only the stage gate (per crawl day with warc_ts, whole without)
+ * and the resume key (the docs row count, or the input's identity); every
+ * stage builder, the dup_pairs build and the clusters stage are shared.
  */
 object DedupMain {
 
@@ -105,52 +108,51 @@ object DedupMain {
       spark.sparkContext.setCheckpointDir(s"$root/_ckpt")
 
     val raw = graft.sources.TableIO.read(spark, inputRef)
-    // crawl-day granularity (BASELINE.json:15 `days(warc_ts)` partitioning):
-    // inputs that carry warc_ts go through the day-incremental stages — a
-    // day-append run recomputes docs/shingles/signatures for the NEW days
-    // only and appends their partitions; day-less document tables keep the
-    // whole-stage gate, keyed by the input's identity: its ref and file
-    // list (a listing, no data scan), so another input at the same root
-    // recomputes instead of resuming the old input's stages
+    // The input shape decides only the stage gate and the resume key. An
+    // input carrying warc_ts (BASELINE.json:15 `days(warc_ts)`
+    // partitioning) is staged per crawl day: a day-append run builds docs,
+    // shingles, signatures and band keys for the NEW days only and appends
+    // their partitions. A day-less document table is staged whole, keyed by
+    // its identity: its ref and file list (a listing, no data scan), so
+    // another input at the same root recomputes instead of resuming the old
+    // input's stages. Every stage body below serves both shapes.
     val dayGranular = raw.columns.contains("warc_ts")
     val rawKey = s"input=${Checkpoint.md5((inputRef +: raw.inputFiles.sorted).mkString("\n"))}"
     def stage(name: String, layout: Checkpoint.Layout = Checkpoint.Parquet, extraKey: String = rawKey)
              (build: => DataFrame): DataFrame =
       Checkpoint.stage(spark, root, name, cfg, runId, layout, extraKey)(build)
-    val docs =
-      if (dayGranular)
-        Checkpoint.stageDays(spark, root, "docs", cfg, runId)(toDocs(raw))(identity)
-      else stage("docs") { toDocs(raw) }
+    /** A stage fed by `input`: `build` runs over its pending crawl days, or
+      * over all of it when the input is day-less. */
+    def inputStage(name: String, layout: Checkpoint.Layout = Checkpoint.Parquet)(input: DataFrame)
+                  (build: DataFrame => DataFrame): DataFrame =
+      if (dayGranular) Checkpoint.stageDays(spark, root, name, cfg, runId, layout)(input)(build)
+      else stage(name, layout)(build(input))
+    val docs = inputStage("docs")(toDocs(raw))(identity)
     // shingles + signatures are the tables every verify join (and every
     // incremental re-run) re-joins on doc_id — bucketing them by doc_id
     // makes those joins Exchange-free on this (heavy) side
     val buckets = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val byDocId = Checkpoint.Bucketed(buckets, "doc_id")
-    val shingled =
-      if (dayGranular) Checkpoint.stageDays(spark, root, "shingled", cfg, runId, byDocId)(docs) { d =>
-        d.select(col("doc_id"), Fns.shingleHashes(col("text"), cfg).as("shingles"),
-                 col("warc_day"))
-      }
-      else stage("shingled", byDocId) { Lsh.shingled(docs, cfg) }
-    val signatures =
-      if (dayGranular) Checkpoint.stageDays(spark, root, "signatures", cfg, runId, byDocId)(docs) { d =>
-        // one pass over the pending days' docs computes both fingerprints
-        // (same expression composition as the batch/streaming paths)
-        d.select(col("doc_id"),
-                 Fns.minhashSig(Fns.shingleHashes(col("text"), cfg), cfg).as("minhash"),
-                 Fns.simhash64(col("text"), cfg).as("simhash"),
-                 col("warc_day"))
-      }
-      else stage("signatures", byDocId) {
-        Lsh.signatures(shingled, cfg)
-          .join(Lsh.simhashes(docs, cfg), "doc_id")
-      }
+    val shingled = inputStage("shingled", byDocId)(docs) { d =>
+      d.select(col("doc_id"), Fns.shingleHashes(col("text"), cfg).as("shingles"),
+               col("warc_day"))
+    }
+    val signatures = inputStage("signatures", byDocId)(docs) { d =>
+      // one pass over the pending days' docs computes both fingerprints
+      // (same expression composition as the batch/streaming paths)
+      d.select(col("doc_id"),
+               Fns.minhashSig(Fns.shingleHashes(col("text"), cfg), cfg).as("minhash"),
+               Fns.simhash64(col("text"), cfg).as("simhash"),
+               col("warc_day"))
+    }
     // the global stages below consume ALL days — a day-append changes their
     // input, which the configHash alone cannot see: fold the docs row count
     // into their resume keys so stale reuse is impossible (a day-less input
     // is named by rawKey already)
-    val docsRows = Checkpoint.readManifest(spark, root, "docs").map(_.rowCount).getOrElse(-1L)
-    val inputKey = if (dayGranular) s"docs_rows=$docsRows" else rawKey
+    val inputKey =
+      if (dayGranular)
+        s"docs_rows=${Checkpoint.readManifest(spark, root, "docs").map(_.rowCount).getOrElse(-1L)}"
+      else rawKey
 
     /** Raw (unsalted) per-doc band keys for BOTH banded families — the
       * persisted band_keys stage's content: (doc_id, key, family, simhash
@@ -159,9 +161,10 @@ object DedupMain {
       * hot-census is NOT stored: it is a census over the whole corpus
       * (which every append would invalidate), recomputed at listing time
       * from the materialized key table — one pruned groupBy, no
-      * re-derivation. Day-granular inputs carry warc_day through (the
-      * band-key builders pass non-signature columns through), so the stage
-      * partitions by crawl day and a day-append bands ONLY pending days. */
+      * re-derivation. warc_day rides through (the band-key builders pass
+      * non-signature columns through), so the stage partitions by crawl
+      * day and a day-append bands ONLY pending days; a day-less root
+      * written before the signatures carried it has none. */
     def rawBandKeys(sigs: DataFrame): DataFrame = {
       val carry =
         if (sigs.columns.contains("warc_day")) Seq(col("warc_day")) else Nil
@@ -177,34 +180,31 @@ object DedupMain {
         .withColumn("family", lit("simhash"))
       mh.unionByName(sh)
     }
-    // Day-granular: band_keys is a DAY-INCREMENTAL stage bucketed by KEY
-    // (warc_day partitions × bucket(n, key) — the census groupBy and every
-    // bucket join on `key` read it Exchange-free on this heavy side). The
-    // r4 append path re-derived the OLD corpus's keys from signatures on
-    // every appended day — corpus×52 posexplode + shuffles + a corpus-key
-    // block cache, measured ~80% of the append wall; now the old side is a
+    // band_keys is bucketed by KEY (day inputs: warc_day partitions ×
+    // bucket(n, key)) — the census groupBy and every bucket join on `key`
+    // read it Exchange-free on this heavy side. The r4 append path
+    // re-derived the OLD corpus's keys from signatures on every appended
+    // day — corpus×52 posexplode + shuffles + a corpus-key block cache,
+    // measured ~80% of the append wall; now the old side is a
     // partition-pruned scan of this stage and only pending days are banded.
-    val bandKeysDay: Option[DataFrame] =
-      if (dayGranular)
-        Some(Checkpoint.stageDays(spark, root, "band_keys", cfg, runId,
-            Checkpoint.Bucketed(buckets, "key"))(signatures) { sigs =>
-          // align writer tasks with the bucket spec: one file per bucket
-          // per day, not one per task per bucket
-          rawBandKeys(sigs).repartition(buckets, col("key"))
-        })
-      else None
+    val bandKeys = inputStage("band_keys", Checkpoint.Bucketed(buckets, "key"))(signatures) { sigs =>
+      // align writer tasks with the bucket spec: one file per bucket per
+      // day, not one per task per bucket
+      rawBandKeys(sigs).repartition(buckets, col("key"))
+    }
+    // the band index is folded into `key` (Lsh.minhashBandKeys /
+    // simhashBandKeys), so the bucket identity downstream is (key, salt)
+    def keys(fam: String) = bandKeys.where(col("family") === fam)
     // Substring sharding scales with corpus bytes (determinism: a pure
     // function of input content, not parallelism — ExactSubstr.shardsFor is
     // the single source of truth shared with the Dedup facade/SparkEntry).
-    // The shard count is folded into the dup_pairs resume key, so a restart
-    // against a corpus that grew past a shard boundary recomputes (full
-    // path) or day-appends (incremental path) instead of silently reusing
-    // stale pairs. One column-pruned scan of the materialized docs stage.
+    // The shard count is folded into the dup_pairs manifest key, so a
+    // restart against a corpus that grew past a shard boundary recomputes
+    // (full path) or day-appends (incremental path) instead of silently
+    // reusing stale pairs. One column-pruned scan of the materialized docs
+    // stage.
     val totalTextBytes = ExactSubstr.totalTextBytes(docs)
     val substrShards = ExactSubstr.shardsFor(totalTextBytes, cfg)
-    // ';' separator — the manifest's flat JSON parser treats ',' as a
-    // field delimiter, so a comma inside the key would corrupt the readback
-    val substrKey = s"$inputKey;substr_shards=$substrShards"
     val dupDir = s"$root/dup_pairs"
     // the last COMMITTED pair store: a full Overwrite that crashed mid-write
     // leaves a partial dir while OLDER per-day lineage (same bare
@@ -219,43 +219,11 @@ object DedupMain {
       spark.sparkContext.longAccumulator("simhash_starcap_suppressed_pairs"),
       spark.sparkContext.longAccumulator("substr_starcap_dropped_pairs"))
 
-    /** Full-corpus three-family build → `PairPlan.allVsAll` over the
-      * persisted raw band_keys stage (building it when absent; salted at
-      * listing time) and the doc_id-bucketed fingerprint stages, after
-      * recording the loud-cap drop estimates (Lsh.saltedDropEstimate
-      * contract). */
-    def buildAllPairs(): PairPlan.Plan = PairPlan.labelled(spark, PairPlan.ListingPrep) {
-      // the band index is folded into `key` (Lsh.minhashBandKeys /
-      // simhashBandKeys), so the bucket identity downstream is (key, salt).
-      // fmt=2: the day-less stage now stores RAW keys (salt applied on
-      // read) — folding the format into the resume key makes an old-format
-      // root recompute instead of failing on the changed schema.
-      val rawKeys = bandKeysDay.getOrElse(
-        stage("band_keys", extraKey = s"$inputKey;fmt=2")(rawBandKeys(signatures)))
-      def keys(fam: String) = rawKeys.where(col("family") === fam)
-      Metrics.append(spark, root, runId, Seq("minhash", "simhash").map { fam =>
-        Metrics.Row(s"salted_drop_est_$fam", Lsh.saltedDropEstimate(keys(fam), cfg), 0L)
-      })
-      PairPlan.allVsAll(keys("minhash"), keys("simhash"), shingled,
-        signatures.select("doc_id", "simhash"), cfg,
-        Some(ExactSubstr.substrDupPairs(docs, cfg, Some(substrShards), _)), Some(counters))
-    }
-    /** The counter rows of a pair build at `shards` substring shards. */
-    def pairMetricsAfterBuild(shards: Int): Seq[Metrics.Row] = Seq(
-      Metrics.Row("substr_shards", shards.toLong, 0L),
-      Metrics.Row("substr_starcap_dropped_pairs", counters.substr.value, 0L),
-      // exact (task-counted) redundant-for-connectivity verified pairs the
-      // simhash forest suppressed — loud cap, never silent
-      Metrics.Row("simhash_starcap_suppressed_pairs", counters.simhash.value, 0L),
-      // minhash hot lanes: pairs skipped as already-connected through
-      // verified edges (upper bound on redundant verified pairs) — loud
-      Metrics.Row("minhash_lane_suppressed_pairs", counters.minhash.value, 0L))
-
+    // the input's crawl days, ascending; a day-less input's one value is
+    // the null day, which no lineage row ever marks done
     val inDays: Seq[java.sql.Timestamp] =
-      if (dayGranular)
-        docs.select("warc_day").distinct().collect()
-          .map(_.getTimestamp(0)).toSeq.sortBy(_.getTime)
-      else Seq.empty
+      docs.select("warc_day").distinct().collect()
+        .map(_.getTimestamp(0)).toSeq.sortBy(d => Option(d).map(_.getTime))
     // The clusters manifest key encodes WHICH pair-days its snapshot covers.
     // raw epoch MILLIS per day, not /86400000: the division assumes UTC
     // midnights, and a non-UTC session's local midnights would truncate
@@ -267,8 +235,9 @@ object DedupMain {
     // pair-days of the last committed clusters snapshot of this config's day
     // path; None without one (a clusters Overwrite that crashed mid-write
     // leaves no _SUCCESS — reading the partial dir as the previous
-    // assignment would silently drop components)
-    val prevCovered: Option[Set[java.sql.Timestamp]] = {
+    // assignment would silently drop components; a full pair build drops
+    // the manifest)
+    def prevCovered(): Option[Set[java.sql.Timestamp]] = {
       val prefix = Checkpoint.stageKey(cfg, dayListKey(Nil))
       Checkpoint.current(spark, root, "clusters").map(_.configHash)
         .filter(_.startsWith(prefix))
@@ -280,165 +249,168 @@ object DedupMain {
     def onDays(days: Iterable[java.sql.Timestamp]) =
       col("warc_day").isin(days.toSeq.map(x => x: Any): _*)
 
+    // The pair store: partitioned by the pair's GENERATION day (the latest
+    // NEW crawl day among its two docs — the day the pair first became
+    // generable in day-ordered processing; null for a day-less input), with
+    // per-day lineage rows under the BARE configHash so day bookkeeping
+    // survives input-key changes. Three states:
+    //  1. the committed manifest was built from this input (same config,
+    //     same input key) → resume;
+    //  2. the committed store is a day store at the same configHash and
+    //     lineage covers a strict subset of the input days → DAY-APPEND: the
+    //     pending days are ONE increment costing new×all candidate
+    //     generation + verify, not all×all (the streaming bridge's
+    //     discipline, ported);
+    //  3. otherwise (first build / config change / shrunk input / a
+    //     day-less input) → full build, every input day new.
+    // States 2 and 3 build one plan, write it once and commit once.
+    val doneDays = Checkpoint.doneDaySet(spark, root, "dup_pairs", cfg.configHash)
+    // the committed build's (input key, substr_shards). The shard count is
+    // PINNED across appends (shard assignment must match the accumulated
+    // pair table), with hysteresis: once the corpus outgrows ~2× the
+    // per-shard byte target, fall back to a full rebuild at a fresh
+    // byte-scaled count — amortized O(log growth) rebuilds.
+    val builtKeyRe =
+      (java.util.regex.Pattern.quote(cfg.configHash) + ":([^;]*);substr_shards=(\\d+)").r
+    val prevKeyInfo: Option[(String, Int)] = prevDup.map(_.configHash).collect {
+      case builtKeyRe(k, s) => (k, s.toInt)
+    }
     val dupPairs: DataFrame =
-      if (!dayGranular) {
-        // day-less inputs keep the whole-stage gate: a different input
-        // (rawKey in the key) or shard count recomputes from scratch
-        var built: Option[PairPlan.Plan] = None
-        val out = PairPlan.labelled(spark, PairPlan.VerifyUnion) {
-          stage("dup_pairs", extraKey = substrKey) {
-            val plan = buildAllPairs()
-            built = Some(plan)
-            plan.pairs
-          }
-        }
-        // the stage wrote and re-read its parquet: the plan's blocks are dead
-        built.foreach { plan =>
-          plan.release()
-          Metrics.append(spark, root, runId, pairMetricsAfterBuild(substrShards))
-        }
-        out
+      if (prevKeyInfo.exists(_._1 == inputKey)) {
+        Metrics.append(spark, root, runId,
+          Seq(Metrics.Row("dup_pairs", prevDup.get.rowCount, 0L, resumed = true)))
+        spark.read.parquet(dupDir)
       } else {
-        // Day-granular pair store: partitioned by the pair's GENERATION day
-        // (the latest NEW crawl day among its two docs — the day the pair
-        // first became generable in day-ordered processing), with per-day
-        // lineage rows under the BARE configHash so day bookkeeping survives
-        // input-key changes. Three states:
-        //  1. manifest key matches (same config, same input) → resume;
-        //  2. same configHash, lineage covers a strict subset of the input
-        //     days → DAY-APPEND: the pending days are ONE increment costing
-        //     new×all candidate generation + verify, not all×all (the
-        //     streaming bridge's discipline, ported);
-        //  3. otherwise (first build / config change / shrunk input) →
-        //     full build, every input day new.
-        // States 2 and 3 build one plan, write it once and commit once.
-        val doneDays = Checkpoint.doneDaySet(spark, root, "dup_pairs", cfg.configHash)
-        // previous state at the SAME config: (docs_rows, substr_shards) it
-        // was built at. The shard count is PINNED across appends (shard
-        // assignment must match the accumulated pair table), with
-        // hysteresis: once the corpus outgrows ~2× the per-shard byte
-        // target, fall back to a full rebuild at a fresh byte-scaled count
-        // — amortized O(log growth) rebuilds.
-        val dayKeyRe =
-          (java.util.regex.Pattern.quote(cfg.configHash) +
-            ":docs_rows=(-?\\d+);substr_shards=(\\d+)").r
-        val prevKeyInfo: Option[(Long, Int)] = prevDup.map(_.configHash).flatMap {
-          case dayKeyRe(r, s) => Some((r.toLong, s.toInt))
-          case _ => None
+        val t0 = System.nanoTime()
+        // a day-less build at this root overwrote every day's pairs, so
+        // only a store built from days can take an append
+        val prevShards = prevKeyInfo.filter(_._1.startsWith("docs_rows=")).map(_._2)
+        val append = prevShards.exists(s => totalTextBytes <= 2L * s * ExactSubstr.TargetShardBytes) &&
+          doneDays.nonEmpty && doneDays.subsetOf(inDays.toSet)
+        val newDays = if (append) inDays.filterNot(doneDays.contains) else inDays
+        val shards = if (append) prevShards.get else substrShards
+        val isNew = onDays(newDays)
+        // a full build replaces every day's pairs (at a new shard count the
+        // done days' substring pairs change): forget the clusters snapshot
+        // of the old pairs before writing, so neither this run nor one that
+        // resumes it extends that snapshot instead of clustering every pair
+        if (!append) Checkpoint.drop(spark, root, "clusters")
+        // the append's lane seed (`Lsh.lanePairs`' union-find seed; sound
+        // merge-emit, see Lsh.seedUnion) must cover every pair written so
+        // far: the last committed clusters snapshot, extended once over
+        // the done days it misses — a run that wrote pairs and died before
+        // its clusters rebuild (all done days when there is no snapshot).
+        // Read lazily: the clusters stage overwrites that dir only later.
+        val seed: Option[DataFrame] = if (!append) None else {
+          val covered = prevCovered()
+          val missed = doneDays -- covered.getOrElse(Set.empty)
+          val snap = covered.map(_ => snapshot())
+          if (missed.isEmpty) snap
+          else Some(ConnectedComponents.extend(snap, spark.read.parquet(dupDir).where(onDays(missed)))
+            .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
         }
-        val prevShards = prevKeyInfo.map(_._2)
-        val shardsFit = prevShards.exists(s =>
-          totalTextBytes <= 2L * s * ExactSubstr.TargetShardBytes)
-        if (prevKeyInfo.exists(_._1 == docsRows)) {
-          Metrics.append(spark, root, runId,
-            Seq(Metrics.Row("dup_pairs", prevDup.get.rowCount, 0L, resumed = true)))
-          spark.read.parquet(dupDir)
-        } else {
-          val t0 = System.nanoTime()
-          val append = prevKeyInfo.isDefined && shardsFit &&
-            doneDays.nonEmpty && doneDays.subsetOf(inDays.toSet)
-          val newDays = if (append) inDays.filterNot(doneDays.contains) else inDays
-          val shards = if (append) prevShards.get else substrShards
-          val isNew = onDays(newDays)
-          // the append's lane seed (`Lsh.lanePairs`' union-find seed; sound
-          // merge-emit, see Lsh.seedUnion) must cover every pair written so
-          // far: the last committed clusters snapshot, extended once over
-          // the done days it misses — a run that wrote pairs and died before
-          // its clusters rebuild (all done days when there is no snapshot).
-          // Read lazily: the clusters stage overwrites that dir only later.
-          val missed = doneDays -- prevCovered.getOrElse(Set.empty)
-          val seed: Option[DataFrame] = if (!append) None else {
-            val snap = prevCovered.map(_ => snapshot())
-            if (missed.isEmpty) snap
-            else Some(ConnectedComponents.extend(snap, spark.read.parquet(dupDir).where(onDays(missed)))
-              .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
+        // the full build's loud-cap drop estimates (Lsh.saltedDropEstimate
+        // contract), recorded before listing
+        val estimates = if (append) Nil else PairPlan.labelled(spark, PairPlan.ListingPrep) {
+          Seq("minhash", "simhash").map { fam =>
+            Metrics.Row(s"salted_drop_est_$fam", Lsh.saltedDropEstimate(keys(fam), cfg), 0L)
           }
-          // band keys come from storage on BOTH sides (r4 re-derived and
-          // block-cached corpus×52 keys from signatures per appended day —
-          // measured ~80% of the append wall); each leg of the new×all
-          // operator re-scans the day-pruned, key-bucketed table
-          def keys(side: org.apache.spark.sql.Column, fam: String) =
-            bandKeysDay.get.where(side && col("family") === fam).select("doc_id", "key")
-          // payload: the doc_id-bucketed stage rows of the requested ids
-          def rows(stage: DataFrame, payload: String)(ids: DataFrame): DataFrame =
-            stage.select("doc_id", payload).join(ids, Seq("doc_id"), "left_semi")
-          // cap = saltMaxBucket for BOTH families: below it the new×all
-          // listing is exact (the batch path's cold cliques restricted to
-          // new-involving pairs); above it, the census-salted lanes use the
-          // IDENTICAL salt formula as the batch build and are resolved
-          // in-task by the family's exact-verified forest — no unverified
-          // edge anywhere. A touched lane may expose an old↔old drift link
-          // (census growth co-locating a pair no earlier lane saw), emitted
-          // deliberately (added true connectivity); the seed covers every
-          // stored pair, so no link is emitted twice.
-          val plan =
-            if (!append) buildAllPairs()
-            else PairPlan.newVsAll(
-              PairPlan.Increment(keys(isNew, "minhash"), keys(!isNew, "minhash"),
-                rows(shingled, "shingles")),
-              PairPlan.Increment(keys(isNew, "simhash"), keys(!isNew, "simhash"),
-                rows(signatures, "simhash")),
-              seed, cfg,
-              Some(ExactSubstr.substrDupPairsIncremental(
-                docs.where(isNew), docs.where(!isNew), cfg, shards, _)),
-              Some(counters))
-          // generation day = the latest new day among the pair's docs; an
-          // old↔old drift link falls back to the latest new day. Only new
-          // days' partitions are written, so the append's dynamic overwrite
-          // never replaces a done day (a late day older than a done one
-          // included) and a torn append overwrites itself.
-          def newDay(id: String) =
-            docs.where(isNew).select(col("doc_id").as(id), col("warc_day").as(s"nd_$id"))
-          plan.materialize { pairs =>
-            Checkpoint.Parquet.write(pairs
-              .join(newDay("a"), Seq("a"), "left").join(newDay("b"), Seq("b"), "left")
-              .withColumn("warc_day",
-                coalesce(greatest(col("nd_a"), col("nd_b")), lit(newDays.lastOption.orNull)))
-              .select("a", "b", "family", "warc_day"), root, "dup_pairs", Seq("warc_day"),
-              addDays = append)
-          }
-          plan.release()
-          seed.foreach(LocalCheckpoints.release)
-          val out = spark.read.parquet(dupDir)
-          val perDay = out.groupBy("warc_day").count().collect()
-            .map(r => r.getTimestamp(0) -> r.getLong(1)).toMap
-          val total = perDay.values.sum
-          val wallMs = (System.nanoTime() - t0) / 1000000L
-          // every new day is now covered — zero-pair days included, or the
-          // append gate would reprocess them forever
-          Checkpoint.commit(spark, root, runId,
-            Some(Checkpoint.Manifest("dup_pairs",
-              Checkpoint.stageKey(cfg, s"$inputKey;substr_shards=$shards"), total, wallMs)),
-            (if (append) Metrics.Row("dup_pairs_incremental_days", newDays.size.toLong, wallMs)
-             else Metrics.Row("dup_pairs", total, wallMs)) +: pairMetricsAfterBuild(shards),
-            Lineage.days("dup_pairs", cfg.configHash, newDays.map(d => d -> perDay.getOrElse(d, 0L))))
-          out
         }
+        // band keys come from storage on BOTH sides (r4 re-derived and
+        // block-cached corpus×52 keys from signatures per appended day —
+        // measured ~80% of the append wall); each leg of the new×all
+        // operator re-scans the day-pruned, key-bucketed table
+        def sideKeys(side: org.apache.spark.sql.Column, fam: String) =
+          keys(fam).where(side).select("doc_id", "key")
+        // payload: the doc_id-bucketed stage rows of the requested ids
+        def rows(stage: DataFrame, payload: String)(ids: DataFrame): DataFrame =
+          stage.select("doc_id", payload).join(ids, Seq("doc_id"), "left_semi")
+        // Full build: the all×all plan over the persisted raw band keys
+        // (salted at listing time) and the doc_id-bucketed fingerprint
+        // stages. Append: cap = saltMaxBucket for BOTH families: below it
+        // the new×all listing is exact (the batch path's cold cliques
+        // restricted to new-involving pairs); above it, the census-salted
+        // lanes use the IDENTICAL salt formula as the batch build and are
+        // resolved in-task by the family's exact-verified forest — no
+        // unverified edge anywhere. A touched lane may expose an old↔old
+        // drift link (census growth co-locating a pair no earlier lane
+        // saw), emitted deliberately (added true connectivity); the seed
+        // covers every stored pair, so no link is emitted twice.
+        val plan =
+          if (!append) PairPlan.allVsAll(keys("minhash"), keys("simhash"), shingled,
+            signatures.select("doc_id", "simhash"), cfg,
+            Some(ExactSubstr.substrDupPairs(docs, cfg, Some(shards), _)), Some(counters))
+          else PairPlan.newVsAll(
+            PairPlan.Increment(sideKeys(isNew, "minhash"), sideKeys(!isNew, "minhash"),
+              rows(shingled, "shingles")),
+            PairPlan.Increment(sideKeys(isNew, "simhash"), sideKeys(!isNew, "simhash"),
+              rows(signatures, "simhash")),
+            seed, cfg,
+            Some(ExactSubstr.substrDupPairsIncremental(
+              docs.where(isNew), docs.where(!isNew), cfg, shards, _)),
+            Some(counters))
+        // generation day = the latest new day among the pair's docs; an
+        // old↔old drift link falls back to the latest new day. Only new
+        // days' partitions are written, so the append's dynamic overwrite
+        // never replaces a done day (a late day older than a done one
+        // included) and a torn append overwrites itself.
+        def newDay(id: String) =
+          docs.where(isNew).select(col("doc_id").as(id), col("warc_day").as(s"nd_$id"))
+        plan.materialize { pairs =>
+          Checkpoint.Parquet.write(pairs
+            .join(newDay("a"), Seq("a"), "left").join(newDay("b"), Seq("b"), "left")
+            .withColumn("warc_day",
+              coalesce(greatest(col("nd_a"), col("nd_b")), lit(newDays.lastOption.orNull)))
+            .select("a", "b", "family", "warc_day"), root, "dup_pairs", Seq("warc_day"),
+            addDays = append)
+        }
+        plan.release()
+        seed.foreach(LocalCheckpoints.release)
+        val out = spark.read.parquet(dupDir)
+        val perDay = out.groupBy("warc_day").count().collect()
+          .map(r => r.getTimestamp(0) -> r.getLong(1)).toMap
+        val total = perDay.values.sum
+        val wallMs = (System.nanoTime() - t0) / 1000000L
+        // every new day is now covered — zero-pair days included, or the
+        // append gate would reprocess them forever. ';' separates the key's
+        // parts: the manifest's flat JSON parser treats ',' as a field
+        // delimiter, so a comma inside the key would corrupt the readback
+        Checkpoint.commit(spark, root, runId,
+          Some(Checkpoint.Manifest("dup_pairs",
+            Checkpoint.stageKey(cfg, s"$inputKey;substr_shards=$shards"), total, wallMs)),
+          estimates ++ Seq(
+            if (append) Metrics.Row("dup_pairs_incremental_days", newDays.size.toLong, wallMs)
+            else Metrics.Row("dup_pairs", total, wallMs),
+            Metrics.Row("substr_shards", shards.toLong, 0L),
+            Metrics.Row("substr_starcap_dropped_pairs", counters.substr.value, 0L),
+            // exact (task-counted) redundant-for-connectivity verified pairs
+            // the simhash forest suppressed — loud cap, never silent
+            Metrics.Row("simhash_starcap_suppressed_pairs", counters.simhash.value, 0L),
+            // minhash hot lanes: pairs skipped as already-connected through
+            // verified edges (upper bound on redundant verified pairs) — loud
+            Metrics.Row("minhash_lane_suppressed_pairs", counters.minhash.value, 0L)),
+          Lineage.days("dup_pairs", cfg.configHash, newDays.map(d => d -> perDay.getOrElse(d, 0L))))
+        out
       }
 
-    val clustersOut = if (!dayGranular) {
-      stage("clusters") {
-        ConnectedComponents.clusters(
-          ConnectedComponents.assign(dupPairs.select("a", "b")))
-      }
-    } else {
-      // An append run finds its predecessor covering a strict subset of the
-      // pair-days and rebuilds incrementally — CC over the previous assignment's
-      // contracted star edges (cluster_id IS a member doc_id, so those
-      // rows span every prior component) ∪ only the NEW days' pairs. Cost
-      // per append: O(clusters + new pairs), not O(total pair history) —
-      // the same bound the streaming bridge's incremental CC runs at. A
-      // crashed predecessor (pairs appended, clusters stale) parses as a
-      // smaller covered set and still rebuilds from exactly the missing
-      // days' pairs. Without a usable snapshot it is CC over every pair.
-      stage("clusters", extraKey = dayListKey(inDays)) {
-        val cov = prevCovered.filter(c => c.nonEmpty && c.subsetOf(inDays.toSet))
-        // eager: the stage write overwrites the dir being read
-        val prev = cov.map(_ => snapshot()
-          .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
-        ConnectedComponents.clusters(ConnectedComponents.extend(prev,
-          cov.fold(dupPairs)(c => dupPairs.where(onDays(inDays.filterNot(c.contains))))))
-      }
+    // An append run finds its predecessor covering a strict subset of the
+    // pair-days and rebuilds incrementally — CC over the previous
+    // assignment's contracted star edges (cluster_id IS a member doc_id, so
+    // those rows span every prior component) ∪ only the NEW days' pairs.
+    // Cost per append: O(clusters + new pairs), not O(total pair history) —
+    // the same bound the streaming bridge's incremental CC runs at. A
+    // crashed predecessor (pairs appended, clusters stale) parses as a
+    // smaller covered set and still rebuilds from exactly the missing
+    // days' pairs. Without a usable snapshot (a day-less input, a full pair
+    // build) it is CC over every pair. The key is the pair-day list, or the
+    // input's identity for a day-less input.
+    val clustersOut = stage("clusters", extraKey = if (dayGranular) dayListKey(inDays) else rawKey) {
+      val cov = prevCovered().filter(c => c.nonEmpty && c.subsetOf(inDays.toSet))
+      // eager: the stage write overwrites the dir being read
+      val prev = cov.map(_ => snapshot()
+        .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
+      ConnectedComponents.clusters(ConnectedComponents.extend(prev,
+        cov.fold(dupPairs)(c => dupPairs.where(onDays(inDays.filterNot(c.contains))))))
     }
 
     keepBest.foreach { scoreExpr =>

@@ -51,7 +51,7 @@ object StreamingDedup {
     streamingDocs.writeStream
       .option("checkpointLocation", s"$root/_stream_ckpt")
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        processBatch(batch.toDF(), batchId, cfg, root)
+        processBatch(batch.toDF(), batchId, cfg, root): Unit
       }
       .start()
 
@@ -201,9 +201,6 @@ object StreamingDedup {
                                        indexes: Map[String, TableIndex] = Map.empty)
   private val stateCache =
     scala.collection.mutable.LinkedHashMap[String, Vector[CachedBatch]]()
-  /** How the last processBatch obtained its old-state view — the spec's
-    * observability hook ("cache-extend" / "cache-replay" / "rebuild"). */
-  @volatile private[graft] var lastStateSource: String = ""
   /** Roots cached concurrently; beyond this the least-recently-used root's
     * blocks are released (tests churn many tiny roots in one JVM). */
   private val MaxCachedRoots = 2
@@ -225,11 +222,12 @@ object StreamingDedup {
   /** The resident view of this root's state, maintained around `batchId`:
     * extend with this batch's (already-checkpointed) rows, recognize a
     * replay (content already covered), or rebuild from parquet. Returns
-    * the per-batch entries; callers assemble old/new/full views by
-    * filtering ENTRIES (no batch_id column needed row-side). */
+    * the per-batch entries — callers assemble old/new/full views by
+    * filtering ENTRIES (no batch_id column needed row-side) — and how the
+    * view was obtained (`BatchReport.stateSource`). */
   private def residentState(spark: org.apache.spark.sql.SparkSession, root: String,
                             batchId: Long, newRows: Map[String, DataFrame])
-      : Vector[CachedBatch] = synchronized {
+      : (Vector[CachedBatch], String) = synchronized {
     val prevNewest = committedSnapshots(spark, s"$root/keys")
       .filter(_ != batchId).reduceOption(_ max _)
     // Session guard (ADVICE_r6): the cache is JVM-global keyed by root —
@@ -242,26 +240,23 @@ object StreamingDedup {
         evictStateCache(root)
     }
     val cached = stateCache.get(root)
-    val next: Vector[CachedBatch] = cached match {
+    val (next, source) = cached match {
       case Some(v) if v.nonEmpty && v.last.id == batchId &&
           v.map(_.id).dropRight(1).lastOption == prevNewest =>
-        lastStateSource = "cache-replay"
         // re-delivery: content identical — ADOPT the freshly-built
         // checkpoints and release the prior delivery's (keeping both
         // would leak one full block set per replay; the caller keeps
         // using its fresh handles either way)
         unpersistBatch(v.last)
-        v.dropRight(1) :+
-          CachedBatch(batchId, newRows, v.last.span, indexesFor(newRows))
+        (v.dropRight(1) :+ CachedBatch(batchId, newRows, v.last.span, indexesFor(newRows)),
+          "cache-replay")
       case Some(v) if v.nonEmpty && prevNewest.contains(v.last.id) =>
-        lastStateSource = "cache-extend"
-        binaryMerge(v :+ CachedBatch(batchId, newRows, 1, indexesFor(newRows)))
+        (binaryMerge(v :+ CachedBatch(batchId, newRows, 1, indexesFor(newRows))), "cache-extend")
       case other =>
         // fresh JVM, evicted root, or a root recreated under a live cache
         // — the one O(state) read left: recovery. Prior batches collapse
         // into one lazily-checkpointed entry (materializes at the batch's
         // existing union action), id'd as the newest prior batch.
-        lastStateSource = "rebuild"
         other.foreach(_.foreach(unpersistBatch))
         val prior = prevNewest.map { pn =>
           val tabs = StateTables.map { t =>
@@ -273,7 +268,7 @@ object StreamingDedup {
           CachedBatch(pn, tabs, span = committedSnapshots(spark, s"$root/keys")
             .count(_ != batchId), indexes = indexesFor(tabs))
         }.toVector
-        prior :+ CachedBatch(batchId, newRows, 1, indexesFor(newRows))
+        (prior :+ CachedBatch(batchId, newRows, 1, indexesFor(newRows)), "rebuild")
     }
     stateCache.remove(root) // re-insert moves the root to LRU tail
     stateCache.put(root, next)
@@ -281,7 +276,7 @@ object StreamingDedup {
       val lru = stateCache.head._1
       stateCache.remove(lru).foreach(_.foreach(unpersistBatch))
     }
-    next
+    (next, source)
   }
 
   /** Binary-counter entry merging (Bentley-Saxe): cascade-merge adjacent
@@ -454,6 +449,17 @@ object StreamingDedup {
   /** Trigger compaction once this many committed batch dirs accumulate. */
   val CompactEvery = 16
 
+  /** What one processBatch did with the resident state: how it obtained
+    * its old-state view ("cache-extend" / "cache-replay" / "rebuild"), and
+    * the resident rows it touched, split into PROBES (the increment's
+    * distinct keys/ids, ~flat for same-sized batches × the O(log n) entry
+    * count) and MATCHES (the old rows those probes hit — exactly the
+    * candidate rows the listings/joins consume, so this term tracks the
+    * batch's CANDIDATE volume, never state size) — the VERDICT_r6 #1
+    * observability metric. */
+  final case class BatchReport(stateSource: String, residentRowsProbed: Long,
+                               residentRowsMatched: Long)
+
   /** One micro-batch of the bridge (public so the replay-idempotence test
     * can re-deliver a batch exactly as the streaming engine would). Runs
     * BOTH banded families: MinHash (shingle state + Jaccard verify) and
@@ -461,7 +467,7 @@ object StreamingDedup {
     * new×all operator, their verified pairs family-tagged into the same
     * per-batch pair partition. */
   def processBatch(batch: DataFrame, batchId: Long, cfg: DedupConfig, root: String,
-                   compactEvery: Int = CompactEvery): Unit =
+                   compactEvery: Int = CompactEvery): BatchReport =
     try processBatchAttempt(batch, batchId, cfg, root, compactEvery)
     catch {
       // Resident-state self-healing (ADVICE_r6 medium): localCheckpoint'd
@@ -498,7 +504,7 @@ object StreamingDedup {
   }
 
   private def processBatchAttempt(batch: DataFrame, batchId: Long, cfg: DedupConfig,
-                                  root: String, compactEvery: Int): Unit = {
+                                  root: String, compactEvery: Int): BatchReport = {
     val spark = batch.sparkSession
     // refuse incompatible state, recover any torn compaction, and fold the
     // batch-dir backlog before reading state
@@ -552,7 +558,7 @@ object StreamingDedup {
     // the durable/recovery layer; every read below comes from the cache
     // blocks, so per-batch durable-state I/O tracks the batch (steady
     // state), not the stream's lifetime
-    val resident = residentState(spark, root, batchId, Map(
+    val (resident, stateSource) = residentState(spark, root, batchId, Map(
       "keys" -> newKeys, "keys_sh" -> newKeysSh,
       "shingled" -> sh, "simhashes" -> sims))
     // Every state read below is a POINT LOOKUP against the entries'
@@ -628,18 +634,8 @@ object StreamingDedup {
     // (released at fold/evict).
     plan.release()
     probeSets.foreach(r => scala.util.Try(r.unpersist(blocking = false)))
-    lastResidentRowsProbed = probed.value
-    lastResidentRowsMatched = matched.value
+    BatchReport(stateSource, probed.value, matched.value)
   }
-
-  /** Resident rows touched by the last processBatch, split into PROBES
-    * (the increment's distinct keys/ids, ~flat for same-sized batches ×
-    * the O(log n) entry count) and MATCHES (the old rows those probes hit
-    * — exactly the candidate rows the listings/joins consume, so this
-    * term tracks the batch's CANDIDATE volume, never state size) — the
-    * VERDICT_r6 #1 observability metric. */
-  @volatile private[graft] var lastResidentRowsProbed: Long = 0L
-  @volatile private[graft] var lastResidentRowsMatched: Long = 0L
 
   /** Ids whose state dirs are compaction-consolidation targets (they hold
     * the folded rows of earlier batches under one id's name) — recorded by
@@ -689,13 +685,4 @@ object StreamingDedup {
     graft.Dedup.keepBest(docs,
       latestClusters(docs.sparkSession, root).select("doc_id", "cluster_id"),
       score)
-
-  /** Windowed event-time throughput rollup with late-data watermark:
-    * docs/minute per lang (the streaming metrics table). */
-  def windowedDocCounts(pages: DataFrame, watermark: String = "10 minutes",
-                        window_ : String = "1 minute"): DataFrame =
-    pages
-      .withWatermark("warc_ts", watermark)
-      .groupBy(window(col("warc_ts"), window_), col("lang"))
-      .agg(count(lit(1)).as("n_docs"))
 }

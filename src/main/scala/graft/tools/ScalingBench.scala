@@ -387,11 +387,9 @@ object ScalingBench {
           .where(pmod(xxhash64(col("doc_id")), lit(k)) === i)
         val b0 = fileBytesRead()
         val t0 = System.nanoTime()
-        graft.streaming.StreamingDedup.processBatch(b, i.toLong, cfg, root)
+        val rep = graft.streaming.StreamingDedup.processBatch(b, i.toLong, cfg, root)
         val w = (System.nanoTime() - t0) / 1e9
         val mb = (fileBytesRead() - b0) / 1e6
-        val trP = graft.streaming.StreamingDedup.lastResidentRowsProbed
-        val trM = graft.streaming.StreamingDedup.lastResidentRowsMatched
         // VERDICT_r6 #7: per-batch streaming keepBest at scale — the
         // consumer query (quality dedup over the CURRENT snapshot against
         // the full doc table), timed with its kept-doc count disclosed
@@ -402,7 +400,7 @@ object ScalingBench {
             org.apache.spark.sql.functions.octet_length(col("text")).cast("long")).count()
           f" keepbest=${(System.nanoTime() - t1) / 1e9}%5.1fs kept=$kept%8d"
         } else ""
-        println(f"  stream-batch $i%3d wall=$w%7.1fs src=${graft.streaming.StreamingDedup.lastStateSource}%-13s durable_read=$mb%8.1f MB resident_probes=$trP%9d resident_matches=$trM%9d$kb")
+        println(f"  stream-batch $i%3d wall=$w%7.1fs src=${rep.stateSource}%-13s durable_read=$mb%8.1f MB resident_probes=${rep.residentRowsProbed}%9d resident_matches=${rep.residentRowsMatched}%9d$kb")
         (w, mb)
       }
       val walls = measured.map(_._1)

@@ -26,12 +26,13 @@ class DedupSpec extends SparkSuite {
     assert(twice.count() === once.count())
   }
 
-  test("dedupeBy keeps the highest-score member per cluster, min doc_id on ties") {
+  test("keepBest keeps the highest-score member per cluster, min doc_id on ties") {
     val cl = Dedup.clusters(docs, cfg)
       .select("doc_id", "cluster_id").as[(Long, Long)].collect()
     val lens = docs.select(col("doc_id"), octet_length(col("text")).cast("long"))
       .as[(Long, Long)].collect().toMap
-    val kept = Dedup.dedupeBy(docs, octet_length(col("text")).cast("long"), cfg)
+    val kept = Dedup.keepBest(docs, Dedup.clusters(docs, cfg).select("doc_id", "cluster_id"),
+        octet_length(col("text")).cast("long"))
       .select("doc_id").as[Long].collect().toSet
     val all = docs.select("doc_id").as[Long].collect().toSet
     val expectedWinners = cl.groupBy(_._2).values.map { members =>

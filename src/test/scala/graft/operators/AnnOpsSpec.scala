@@ -94,15 +94,6 @@ class AnnOpsSpec extends SparkSuite {
     assert(again === ivf)
   }
 
-  test("cosineDupPairs respects threshold and canonical a<b") {
-    val rows = AnnOps.cosineDupPairs(emb, 0.3)
-      .as[(Long, Long, Double)].collect()
-    rows.foreach { case (a, b, c) =>
-      assert(a < b)
-      assert(c >= 0.3)
-    }
-  }
-
   test("brute kernels == the crossJoin+window formulation, incl. zero-norm rows") {
     // r7: bruteTopK/bruteCosinePairs run an in-task primitive kernel; this
     // row pins bit-identical parity against the declarative reference they

@@ -4,7 +4,7 @@ import graft.{DedupConfig, SparkSuite}
 import graft.functions.Fns
 import org.apache.spark.sql.functions._
 
-/** `Lsh.crossDupPairs` / `decontaminateNearDup` — cross-corpus near-dup
+/** `Lsh.crossDupPairs` / `crossSuppressedEstimate` — cross-corpus near-dup
   * decontamination (the fuzzy complement of the q40 n-gram overlap op).
   * Contract: hits == the brute-force exact-Jaccard cross pairs at the
   * configured threshold (banding is recall-complete at this scale — the
@@ -77,19 +77,6 @@ class CrossDupSpec extends SparkSuite {
       .where(col("doc_id") === 102L && col("ref_id") === 2L)
       .select("jaccard").as[Double].collect()
     assert(j.toSeq === Seq(1.0), "identical docs verify at exactly 1.0")
-  }
-
-  test("decontaminateNearDup drops exactly the hit docs") {
-    val (corpus, refs) = fixture()
-    val cdf = corpus.toDF("doc_id", "text")
-    val rdf = refs.toDF("doc_id", "text")
-    val survivors = Lsh.decontaminateNearDup(cdf, rdf, cfg)
-      .select("doc_id").as[Long].collect().toSet
-    val hitDocs = brute(corpus, refs).map(_._1)
-    assert(survivors === corpus.map(_._1).toSet -- hitDocs)
-    assert(!survivors.contains(101L) && !survivors.contains(102L))
-    assert(survivors.contains(103L) && survivors.contains(104L),
-      "corpus-internal near-dups survive decontamination")
   }
 
   test("hot-key cap drops loudly: suppressed estimate > 0, hits empty") {

@@ -350,6 +350,62 @@ class DayResumeSpec extends SparkSuite {
       .exists { case (a, b) => Set(docDay(a), docDay(b)) == Set(days(1), days(2)) })
   }
 
+  /** 160 pages over 3 crawl days, written as days {1, 2} and days {1, 2, 3}. */
+  private def twoThenThreeDays(): (String, String) = {
+    val pages = PagesGen.pages(spark, 160, cfg).toDF()
+      .withColumn("warc_ts",
+        timestamp_seconds(unix_timestamp(col("warc_ts")) +
+          pmod(xxhash64(col("url")), lit(3)) * 86400L))
+    val days = pages.select(date_trunc("day", col("warc_ts")).as("d"))
+      .distinct().orderBy("d").collect().map(_.getTimestamp(0))
+    assert(days.length === 3)
+    val in2 = tmpRoot() + "/in2.parquet"
+    val in3 = tmpRoot() + "/in3.parquet"
+    pages.where(date_trunc("day", col("warc_ts")) < lit(days(2))).write.parquet(in2)
+    pages.write.parquet(in3)
+    (in2, in3)
+  }
+
+  private def clustersOf(input: String, root: String, runId: String) =
+    DedupMain.run(spark, input, root, cfg, runId)
+      .select("doc_id", "cluster_id").as[(Long, Long)].collect().toSet
+
+  test("a full dup_pairs rebuild clusters every pair, not the older snapshot") {
+    // a torn pair store forces a full rebuild; the committed clusters
+    // snapshot belongs to the older pair generation (here: emptied, as a
+    // stand-in for pairs a different shard count produced) and must not be
+    // extended with only the uncovered day's pairs
+    val (in2, in3) = twoThenThreeDays()
+    val root = tmpRoot()
+    DedupMain.run(spark, in2, root, cfg, "base").count()
+    val manifest = Checkpoint.readManifest(spark, root, "clusters").get
+    val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      spark.read.parquet(s"$root/clusters").schema)
+    empty.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$root/clusters")
+    Checkpoint.writeManifest(spark, root, manifest)
+    assert(new java.io.File(s"$root/clusters/_SUCCESS").exists())
+    assert(new java.io.File(s"$root/dup_pairs/_SUCCESS").delete())
+    val appended = clustersOf(in3, root, "app")
+    assert(appended === clustersOf(in3, tmpRoot(), "fresh"),
+      "a full pair rebuild must recluster every pair")
+  }
+
+  test("a day input after a day-less input at the same root rebuilds its pairs") {
+    // the day-less build overwrote the days' pairs at this root: the done
+    // days in lineage must not let the next day input append onto it
+    val (in2, in3) = twoThenThreeDays()
+    val asDocs = tmpRoot() + "/docs.parquet"
+    DedupMain.toDocs(spark.read.parquet(in2)).drop("warc_day").write.parquet(asDocs)
+    val root = tmpRoot()
+    DedupMain.run(spark, in2, root, cfg, "days").count()
+    DedupMain.run(spark, asDocs, root, cfg, "dayless").count()
+    val again = clustersOf(in3, root, "days3")
+    assert(Metrics.read(spark, root)
+      .where(col("run_id") === "days3" && col("stage") === "dup_pairs" && !col("resumed"))
+      .count() === 1, "the day input must take a full pair build")
+    assert(again === clustersOf(in3, tmpRoot(), "fresh"))
+  }
+
   test("keepBest quality dedup on the staged path: append invalidates it, parity with from-scratch") {
     val pages = PagesGen.pages(spark, 160, cfg).toDF()
       .withColumn("warc_ts",

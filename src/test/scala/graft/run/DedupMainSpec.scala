@@ -48,10 +48,10 @@ class DedupMainSpec extends SparkSuite {
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       def verifyPlan(sh: org.apache.spark.sql.DataFrame): String = {
-        // the persisted stage stores RAW keys (fmt=2); salt applies on read
+        // the persisted stage stores RAW keys; salt applies on read
         val cands = graft.operators.Lsh.candidatePairs(
           graft.operators.Lsh.saltBandKeys(
-            spark.read.parquet(s"$root/band_keys")
+            spark.table(Checkpoint.bucketedTableName(root, "band_keys"))
               .where(org.apache.spark.sql.functions.col("family") === "minhash")
               .select("doc_id", "key"),
             cfg))
@@ -91,5 +91,34 @@ class DedupMainSpec extends SparkSuite {
       .select("a", "b", "family").as[(Long, Long, String)].collect().toSet
     assert(pipelinePairs === facadePairs,
       "pipeline and facade must produce the same pair set at the same configHash")
+  }
+
+  test("pages over crawl days and the same corpus as a day-less table give one result") {
+    // one PagesGen corpus through both input shapes: the shape picks only
+    // the stage gate and the resume key, so pairs and clusters must agree
+    val cfg = DedupConfig.test
+    val pages = PagesGen.pages(spark, 240, cfg).toDF()
+      .withColumn("warc_ts",
+        timestamp_seconds(unix_timestamp(col("warc_ts")) +
+          pmod(xxhash64(col("url")), lit(3)) * 86400L))
+    val pagesIn = tmpRoot() + "/pages.parquet"
+    val docsIn = tmpRoot() + "/docs.parquet"
+    pages.write.parquet(pagesIn)
+    DedupMain.toDocs(pages).drop("warc_day").write.parquet(docsIn)
+    assert(spark.read.parquet(pagesIn)
+      .select(date_trunc("day", col("warc_ts"))).distinct().count() >= 2)
+    def result(input: String) = {
+      val root = tmpRoot()
+      val clusters = DedupMain.run(spark, input, root, cfg, "r1")
+        .select("doc_id", "cluster_id").as[(Long, Long)].collect().toSet
+      val pairs = spark.read.parquet(s"$root/dup_pairs")
+        .select("a", "b", "family").as[(Long, Long, String)].collect().toSet
+      (pairs, clusters)
+    }
+    val (dayPairs, dayClusters) = result(pagesIn)
+    val (docPairs, docClusters) = result(docsIn)
+    assert(dayPairs.nonEmpty && dayClusters.nonEmpty)
+    assert(dayPairs === docPairs, "both input shapes must list the same dup_pairs")
+    assert(dayClusters === docClusters, "both input shapes must give the same clusters")
   }
 }
