@@ -1,6 +1,6 @@
 package graft.run
 
-import graft.DedupConfig
+import graft.{DedupConfig, Sessions}
 import graft.functions.Fns
 import graft.operators.{ConnectedComponents, ExactSubstr, LocalCheckpoints, Lsh, PairPlan}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -404,14 +404,17 @@ object DedupMain {
     // days' pairs. Without a usable snapshot (a day-less input, a full pair
     // build) it is CC over every pair. The key is the pair-day list, or the
     // input's identity for a day-less input.
+    var prev: Option[DataFrame] = None
     val clustersOut = stage("clusters", extraKey = if (dayGranular) dayListKey(inDays) else rawKey) {
       val cov = prevCovered().filter(c => c.nonEmpty && c.subsetOf(inDays.toSet))
       // eager: the stage write overwrites the dir being read
-      val prev = cov.map(_ => snapshot()
+      prev = cov.map(_ => snapshot()
         .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
       ConnectedComponents.clusters(ConnectedComponents.extend(prev,
         cov.fold(dupPairs)(c => dupPairs.where(onDays(inDays.filterNot(c.contains))))))
     }
+    // the stage is written and read back: the snapshot copy is dead
+    prev.foreach(LocalCheckpoints.release)
 
     keepBest.foreach { scoreExpr =>
       // key = clusters' own (already input+day-discriminating) manifest key
@@ -437,16 +440,12 @@ object DedupMain {
     val (kbArgs, cfgArgs) = args.drop(2).partition(_.startsWith("keepBest="))
     val keepBest = kbArgs.lastOption.map(_.split("=", 2)(1))
     val cfg = parseConfig(cfgArgs.toSeq)
-    val builder = SparkSession.builder()
+    // spark-submit injects spark.master (and keeps its own partition
+    // count); default to local[cores] otherwise
+    val cores = Runtime.getRuntime.availableProcessors
+    val spark = (if (sys.props.contains("spark.master")) Sessions.base
+                 else Sessions.builder(cores).master(s"local[$cores]"))
       .appName("graft-dedup")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-    // spark-submit injects spark.master; default to local[cores] otherwise
-    val spark = (if (sys.props.contains("spark.master")) builder
-                 else builder.master(s"local[${Runtime.getRuntime.availableProcessors}]")
-                   .config("spark.sql.shuffle.partitions",
-                           (2 * Runtime.getRuntime.availableProcessors).toString))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val clusters = run(spark, inputRef, root, cfg, keepBest = keepBest)
